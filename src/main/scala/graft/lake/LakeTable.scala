@@ -1,6 +1,7 @@
 package graft.lake
 
 import java.util.UUID
+import graft.lake.LakeTable.RowLevelWrite
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -24,6 +25,55 @@ final case class MergeClauseSpec(
     assignments: Seq[(String, Column)]) {
   require(!isDelete || assignments.isEmpty,
     "a DELETE merge clause carries no assignments")
+}
+
+/** One row-level statement, as [[LakeTable]]'s row-level planner runs
+  * it. `Delete` and `Update` act on the rows their `flag` marks: the
+  * flag adds a boolean `__match` column to the read of the files
+  * `prune` may match (NULL counts as false). `Replace` deletes `pred`'s
+  * rows and appends `rows` in the same commit. `Merge` is the keyed
+  * canonical upsert (`clauses` None) or the full-grammar conditional
+  * MERGE. */
+private[graft] sealed trait RowLevelOp {
+  /** The op of the `write.<op>.mode` property that picks the strategy. */
+  def mode: String
+  /** The snapshot operation the commit records. */
+  def verb: String = "overwrite"
+}
+
+private[graft] object RowLevelOp {
+  final case class Delete(prune: LakePredicate, flag: DataFrame => DataFrame)
+      extends RowLevelOp {
+    def mode: String = "delete"
+    override def verb: String = "delete"
+  }
+  final case class Update(prune: LakePredicate, flag: DataFrame => DataFrame,
+      set: Map[String, Column]) extends RowLevelOp {
+    def mode: String = "update"
+  }
+  final case class Replace(pred: LakePredicate, rows: DataFrame) extends RowLevelOp {
+    def mode: String = "delete"
+  }
+  final case class Merge(source: DataFrame, keys: Seq[String],
+      clauses: Option[MergeClauses]) extends RowLevelOp {
+    def mode: String = "merge"
+  }
+  final case class MergeClauses(matched: Seq[MergeClauseSpec],
+      notMatched: Seq[MergeClauseSpec], notMatchedBySource: Seq[MergeClauseSpec],
+      nmbsPrune: LakePredicate)
+
+  /** The row mark of a predicate: exactly the rows it holds TRUE for.
+    * A table column named `__match` (in any case, as Spark resolves)
+    * refuses: the mark would silently replace it, and a rewrite would
+    * store the flag in it. */
+  def where(pred: LakePredicate): DataFrame => DataFrame = { df =>
+    require(!df.columns.exists(_.equalsIgnoreCase("__match")),
+      "a column named __match collides with the row mark of DELETE / UPDATE")
+    df.withColumn("__match", pred.toColumn)
+  }
+  def delete(pred: LakePredicate): Delete = Delete(pred, where(pred))
+  def update(pred: LakePredicate, set: Map[String, Column]): Update =
+    Update(pred, where(pred), set)
 }
 
 /** Table handle: snapshot log + append/scan/time-travel/compact/delete.
@@ -71,7 +121,7 @@ final class LakeTable private[lake] (
   def writeDataFiles(df0: DataFrame, numFiles: Int = 0,
       carryRowIds: Boolean = false): Seq[DataFileEntry] = {
     // lineage carry-through: the frame arrives with a trailing
-    // _row_id column (readLiveWithRowIds) that is PERSISTED into the
+    // _row_id column (readTarget) that is PERSISTED into the
     // written files under the reserved field id — excluded from the
     // user-schema contract check and from stats harvesting
     require(!carryRowIds || df0.columns.contains(LakeTable.RowIdCol),
@@ -450,13 +500,13 @@ final class LakeTable private[lake] (
     * scan does not pay for tombstones of files it never reads
     * (Iceberg's delete-file-to-data-file indexing). */
   private[lake] def readLivePos(spark: SparkSession, files: Seq[DataFileEntry],
-      posDeletes: Seq[DataFileEntry], eqDeletes: Seq[DataFileEntry],
-      dvs: Seq[DataFileEntry] = Nil, withRowId: Boolean = false): DataFrame = {
+      snap: Option[Snapshot], withRowId: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     var df = readFilesWithPos(spark, files, withRowId = withRowId)
-    val dvHits = LakeTable.narrowPosDeletes(dvs, files.map(_.path))
+    val paths = files.map(_.path)
+    val dvHits = LakeTable.narrowPosDeletes(snap.toSeq.flatMap(_.dvFiles), paths)
     if (dvHits.nonEmpty) df = subtractDvs(spark, df, dvHits)
-    val pos = LakeTable.narrowPosDeletes(posDeletes, files.map(_.path))
+    val pos = LakeTable.narrowPosDeletes(snap.toSeq.flatMap(_.deleteFiles), paths)
     if (pos.nonEmpty) {
       val tombstones = spark.read.schema(LakeTable.DeleteFileSchema)
         .parquet(pos.map(_.path): _*)
@@ -465,6 +515,7 @@ final class LakeTable private[lake] (
           col(LakeTable.PosIdxCol) === col("pos"),
         "left_anti")
     }
+    val eqDeletes = snap.toSeq.flatMap(_.eqDeleteFiles)
     if (eqDeletes.nonEmpty) df = applyEqDeletes(spark, df, files, eqDeletes)
     df
   }
@@ -584,17 +635,15 @@ final class LakeTable private[lake] (
     * here; a raw readFiles of live files would resurrect deleted
     * rows. */
   private[lake] def readLive(spark: SparkSession, files: Seq[DataFileEntry],
-      snap: Option[Snapshot]): DataFrame = {
-    val pos = snap.map(_.deleteFiles).getOrElse(Nil)
-    val eqs = snap.map(_.eqDeleteFiles).getOrElse(Nil)
-    val dvs = snap.map(_.dvFiles).getOrElse(Nil)
-    if (pos.isEmpty && eqs.isEmpty && dvs.isEmpty) readFiles(spark, files)
-    else {
-      import org.apache.spark.sql.functions.col
-      readLivePos(spark, files, pos, eqs, dvs)
-        .select(schema.fields.map(f => col(f.name).as(f.name, f.metadata)): _*)
-    }
-  }
+      snap: Option[Snapshot]): DataFrame =
+    if (snap.forall(s => s.deleteFiles.isEmpty && s.eqDeleteFiles.isEmpty &&
+        s.dvFiles.isEmpty)) readFiles(spark, files)
+    else readLivePos(spark, files, snap).select(schemaCols: _*)
+
+  /** The table's columns with their field metadata — the projection
+    * every position-carrying read narrows back to. */
+  private def schemaCols: Seq[Column] = schema.fields.toSeq.map(f =>
+    org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata))
 
   /** Can a rewrite of `files` carry row lineage through? Yes iff the
     * table's lineage is intact (no prior uncarried rewrite) and every
@@ -605,44 +654,63 @@ final class LakeTable private[lake] (
     !meta.properties.get(LakeTable.RowLineageBrokenProp).contains("true") &&
       files.forall(_.firstRowId.isDefined)
 
-  /** MoR-filtered read of `files` carrying each row's STABLE id as a
-    * trailing [[LakeTable.RowIdCol]] column — the input side of every
-    * lineage-preserving rewrite (compaction, CoW row-level ops). The id
-    * is `coalesce(materialized cell, firstRowId + row position)`: the
-    * same resolution rule LakeScan.rowLineage serves readers, evaluated
-    * here so the rewrite can persist it into the files it writes. The
-    * per-file id base rides as a MAP LITERAL keyed by the reader's own
-    * path render ([[LakeTable.readerPath]] — the DV/tombstone
-    * invariant), so the lookup is one codegen'd element_at per row: no
-    * join, no per-row regex, no shuffle (the first cut joined a
-    * broadcast frame on a regexp-normalized path and cost CoW scenario
-    * queries ~1.6-2× in the round-14 bench). Unreachable while the
-    * [[LakeTable.readerPath]] invariant holds, a render mismatch would
-    * otherwise write a NULL id cell — indistinguishable from a
+  /** The read every rewrite starts from — compaction and the row-level
+    * planner alike: MoR-filtered rows of `files`, plus the hidden
+    * (file, pos) coordinates when `withPos` (a merge-on-read statement
+    * tombstones by them), plus each row's STABLE id as a trailing
+    * [[LakeTable.RowIdCol]] column when lineage can carry
+    * ([[canCarryRowIds]]; `wantIds` = false for reads that write no
+    * rows). Returns the frame and whether it carries ids.
+    *
+    * The id is `coalesce(materialized cell, firstRowId + row position)`:
+    * the same resolution rule LakeScan.rowLineage serves readers,
+    * evaluated here so the rewrite can persist it into the files it
+    * writes. The per-file id base rides as a MAP LITERAL keyed by the
+    * reader's own path render ([[LakeTable.readerPath]] — the
+    * DV/tombstone invariant), so the lookup is one codegen'd element_at
+    * per row: no join, no per-row regex, no shuffle (the first cut
+    * joined a broadcast frame on a regexp-normalized path and cost CoW
+    * scenario queries ~1.6-2× in the round-14 bench). Unreachable while
+    * the [[LakeTable.readerPath]] invariant holds, a render mismatch
+    * would otherwise write a NULL id cell — indistinguishable from a
     * merge-insert cell, so a later read would silently re-identify the
     * row as firstRowId+pos of the rewritten file. The coalesce's third
     * arm makes that case FAIL THE REWRITE instead (raise_error, only
     * evaluated when both the materialized cell and the map lookup come
-    * back null). Callers gate on [[canCarryRowIds]] first. */
-  private[lake] def readLiveWithRowIds(spark: SparkSession,
-      files: Seq[DataFileEntry], snap: Option[Snapshot]): DataFrame = {
+    * back null). */
+  private def readTarget(spark: SparkSession, files: Seq[DataFileEntry],
+      snap: Option[Snapshot], withPos: Boolean = false,
+      wantIds: Boolean = true): (DataFrame, Boolean) = {
     import org.apache.spark.sql.functions.{coalesce, col, concat, element_at,
       lit, raise_error, typedLit}
-    val pos = snap.map(_.deleteFiles).getOrElse(Nil)
-    val eqs = snap.map(_.eqDeleteFiles).getOrElse(Nil)
-    val dvs = snap.map(_.dvFiles).getOrElse(Nil)
-    val base = readLivePos(spark, files, pos, eqs, dvs, withRowId = true)
-    val firsts: Map[String, Long] = files.flatMap(f =>
-      f.firstRowId.map(r => LakeTable.readerPath(f.path) -> r)).toMap
-    base
-      .withColumn(LakeTable.RowIdCol, coalesce(col(LakeTable.MatRidCol),
-        element_at(typedLit(firsts), col(LakeTable.PosFileCol)) +
-          col(LakeTable.PosIdxCol),
-        raise_error(concat(
-          lit("row-lineage carry has no id base for reader path "),
-          col(LakeTable.PosFileCol))).cast("long")))
-      .select(schema.fields.map(f => col(f.name).as(f.name, f.metadata)) :+
-        col(LakeTable.RowIdCol): _*)
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val carry = wantIds && canCarryRowIds(files)
+    val hidden =
+      (if (withPos) Seq(StructField(LakeTable.PosFileCol, StringType),
+        StructField(LakeTable.PosIdxCol, LongType)) else Nil) ++
+        (if (carry) Seq(StructField(LakeTable.RowIdCol, LongType)) else Nil)
+    val df =
+      if (files.isEmpty)
+        spark.createDataFrame(new java.util.ArrayList[Row](),
+          StructType(schema.fields ++ hidden))
+      else if (hidden.isEmpty) readLive(spark, files, snap)
+      else {
+        val base = readLivePos(spark, files, snap, withRowId = carry)
+        val withIds =
+          if (!carry) base
+          else {
+            val firsts: Map[String, Long] = files.flatMap(f =>
+              f.firstRowId.map(r => LakeTable.readerPath(f.path) -> r)).toMap
+            base.withColumn(LakeTable.RowIdCol, coalesce(col(LakeTable.MatRidCol),
+              element_at(typedLit(firsts), col(LakeTable.PosFileCol)) +
+                col(LakeTable.PosIdxCol),
+              raise_error(concat(
+                lit("row-lineage carry has no id base for reader path "),
+                col(LakeTable.PosFileCol))).cast("long")))
+          }
+        withIds.select(schemaCols ++ hidden.map(f => col(f.name)): _*)
+      }
+    (df, carry)
   }
 
   /** A9: append commit — newAppend().appendData(df).commit(). */
@@ -753,21 +821,11 @@ final class LakeTable private[lake] (
     * the ledger to one logical stream (a NEW checkpoint = a new sink
     * id), `batchId` must be monotonic within it. Returns None — and
     * writes nothing durable — when `batchId` is not newer than the last
-    * committed batch for this sink. The decisive check runs inside the
-    * commit CAS (see commitSnapshot); the pre-check here just avoids
-    * staging data files for the common replay. A lost race orphans the
-    * staged files; removeOrphanFiles reclaims them. */
+    * committed batch for this sink. */
   def appendDataExactlyOnce(df: DataFrame, sinkId: String,
-      batchId: Long): Option[CommitReport] = {
-    refresh()
-    if (lastCommittedBatchId(sinkId).exists(_ >= batchId)) None
-    else {
-      val added = writeDataFiles(df)
-      try Some(commitSnapshot("append", added, Nil,
-        exactlyOnce = Some((sinkId, batchId)))) // summary stamps derive from the ledger
-      catch { case _: BatchAlreadyCommitted => None }
-    }
-  }
+      batchId: Long): Option[CommitReport] =
+    exactlyOnceCommit(sinkId, batchId)(once =>
+      commitSnapshot("append", writeDataFiles(df), Nil, exactlyOnce = once))
 
   /** Exactly-once append of PRE-WRITTEN data files — the DSv2 streaming
     * sink path: executor tasks streamed the parquet, the driver commits
@@ -776,29 +834,40 @@ final class LakeTable private[lake] (
     * landed (files become orphans; removeOrphanFiles reclaims). */
   private[lake] def appendFilesExactlyOnce(files: Seq[DataFileEntry],
       sinkId: String, batchId: Long,
-      toBranch: Option[String] = None): Option[CommitReport] = {
-    refresh()
-    if (lastCommittedBatchId(sinkId).exists(_ >= batchId)) None
-    else
-      try Some(commitSnapshot("append", files, Nil,
-        exactlyOnce = Some((sinkId, batchId)), toBranch = toBranch))
-      catch { case _: BatchAlreadyCommitted => None }
-  }
+      toBranch: Option[String] = None): Option[CommitReport] =
+    exactlyOnceCommit(sinkId, batchId)(once =>
+      commitSnapshot("append", files, Nil, exactlyOnce = once, toBranch = toBranch))
 
-  /** Exactly-once MERGE for streaming micro-batches — the upsert twin
-    * of [[appendDataExactlyOnce]]: same (sinkId, batchId) ledger, same
-    * inside-the-CAS decisive check, on top of mergeInto's own
-    * serializable validation and conflict retry. Returns None when the
-    * batch already committed. Source contract as for mergeInto (table
-    * schema, distinct non-NULL keys). */
+  /** Exactly-once MERGE for streaming micro-batches: the (sinkId,
+    * batchId) ledger of [[appendDataExactlyOnce]] on top of mergeInto's
+    * own serializable validation and conflict retry. Returns None when
+    * the batch already committed. Source contract as for mergeInto
+    * (table schema, distinct non-NULL keys). */
   def mergeIntoExactlyOnce(spark: SparkSession, source: DataFrame,
       keys: Seq[String], sinkId: String, batchId: Long,
-      conflictRetries: Int = 3): Option[CommitReport] = {
+      conflictRetries: Int = 3): Option[CommitReport] =
+    exactlyOnceCommit(sinkId, batchId)(once =>
+      mergeInto(spark, source, keys, conflictRetries, exactlyOnce = once))
+
+  /** Exactly-once [[mergeIntoMoR]], under the same ledger. */
+  def mergeIntoMoRExactlyOnce(spark: SparkSession, source: DataFrame,
+      keys: Seq[String], sinkId: String, batchId: Long): Option[CommitReport] =
+    exactlyOnceCommit(sinkId, batchId)(once =>
+      mergeIntoMoR(spark, source, keys, exactlyOnce = once))
+
+  /** The exactly-once step every streaming sink shares: None when the
+    * ledger already holds `batchId`, else `commit` with the ledger
+    * entry to record. The decisive check runs inside the commit CAS
+    * (see commitSnapshot), whose [[BatchAlreadyCommitted]] turns into
+    * None too; the pre-check here just avoids staging data files for
+    * the common replay. A lost race orphans the staged files;
+    * removeOrphanFiles reclaims them. */
+  private def exactlyOnceCommit(sinkId: String, batchId: Long)(
+      commit: Option[(String, Long)] => CommitReport): Option[CommitReport] = {
     refresh()
     if (lastCommittedBatchId(sinkId).exists(_ >= batchId)) None
     else
-      try Some(mergeInto(spark, source, keys, conflictRetries,
-        exactlyOnce = Some((sinkId, batchId))))
+      try Some(commit(Some((sinkId, batchId))))
       catch { case _: BatchAlreadyCommitted => None }
   }
 
@@ -1375,10 +1444,7 @@ final class LakeTable private[lake] (
       // Row lineage CARRIES: each surviving row's stable id persists
       // into the rewritten files (Iceberg v3), so scheduled maintenance
       // never bricks _row_id reads.
-      val carry = canCarryRowIds(live)
-      val df =
-        if (carry) readLiveWithRowIds(spark, live, meta.currentSnapshot)
-        else readLive(spark, live, meta.currentSnapshot)
+      val (df, carry) = readTarget(spark, live, meta.currentSnapshot)
       // numFiles goes through writeDataFiles so the partitioned path uses
       // repartitionByRange(targetFiles, spec) — a bare repartition here
       // would be re-shuffled to the default partition count by the spec
@@ -1405,10 +1471,7 @@ final class LakeTable private[lake] (
     val matching = meta.currentFiles.filter(pred.mayMatch(_, meta))
     if (matching.isEmpty) None
     else {
-      val carry = canCarryRowIds(matching)
-      val df =
-        if (carry) readLiveWithRowIds(spark, matching, snap)
-        else readLive(spark, matching, snap)
+      val (df, carry) = readTarget(spark, matching, snap)
       Some(commitSnapshot("replace",
         writeDataFiles(df, numFiles = targetFiles, carryRowIds = carry),
         matching, validateNoNewDeletesSince = Some(meta.currentSnapshotId),
@@ -1433,10 +1496,7 @@ final class LakeTable private[lake] (
         (small.map(_.sizeBytes).sum / smallBytes).toInt)
       // tombstones applied to the rewritten subset; delete manifests
       // survive (they may still reference files this pass keeps)
-      val carry = canCarryRowIds(small)
-      val df =
-        if (carry) readLiveWithRowIds(spark, small, meta.currentSnapshot)
-        else readLive(spark, small, meta.currentSnapshot)
+      val (df, carry) = readTarget(spark, small, meta.currentSnapshot)
       val added = writeDataFiles(df, numFiles = target, carryRowIds = carry)
       Some(commitSnapshot("replace", added, small,
         validateNoNewDeletesSince = Some(meta.currentSnapshotId),
@@ -1498,10 +1558,7 @@ final class LakeTable private[lake] (
         Some(commitSnapshot("replace", Nil, Nil, dropDeletes = true,
           validateNoNewDeletesSince = Some(meta.currentSnapshotId)))
       else {
-        val carry = canCarryRowIds(affected)
-        val df =
-          if (carry) readLiveWithRowIds(spark, affected, snap)
-          else readLive(spark, affected, snap)
+        val (df, carry) = readTarget(spark, affected, snap)
         val added = writeDataFiles(df, carryRowIds = carry)
         Some(commitSnapshot("replace", added, affected, dropDeletes = true,
           validateNoNewDeletesSince = Some(meta.currentSnapshotId),
@@ -1634,224 +1691,114 @@ final class LakeTable private[lake] (
       (snap.id, snap.files, Some(snap))
   }
 
+  // ---- Row-level statements. Every public DELETE / UPDATE /
+  // replaceWhere / MERGE variant below is a thin wrapper over ONE
+  // planner, [[planRowLevel]]; `…MoR` picks the merge-on-read strategy,
+  // `…Flagged` a join-based row mark instead of a predicate. ----
+
   /** Copy-on-write row delete: only files that MAY contain matches are
     * rewritten; untouched files survive as-is. Delete-file counters stay
     * 0 exactly as in the reference, which never writes delete files but
-    * surfaces the meters (IntegrationTest.java:109,112,115).
-    * `branch` scopes the delete to a branch head (stage → audit →
+    * surfaces the meters (IntegrationTest.java:109,112,115). NULL
+    * predicate rows are KEPT (SQL delete semantics: only TRUE deletes);
+    * survivors keep their stable row ids. Serializable, not just
+    * snapshot-isolated: a racing append adding rows that match the
+    * predicate fails this commit and the retry re-runs the delete over
+    * them. `branch` scopes the delete to a branch head (stage → audit →
     * fastForward publishes — the WAP pattern for mutations). */
   def deleteWhere(spark: SparkSession, pred: LakePredicate,
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(pred.mayMatch(_, meta))
-    // serializable, not just snapshot-isolated: a racing append adding
-    // rows that match the predicate fails this commit and the retry
-    // re-runs the delete over them (validateAddedSince in commitSnapshot)
-    if (touched.isEmpty)
-      commitSnapshot("delete", Nil, Nil, validateAddedSince = Some((base, pred)),
-        toBranch = branch)
-    else {
-      // NULL predicate rows must be KEPT (SQL delete semantics: only
-      // TRUE deletes) — a bare !pred would drop them. Survivors keep
-      // their stable row ids (materialized into the rewritten files).
-      val carry = canCarryRowIds(touched)
-      val src =
-        if (carry) readLiveWithRowIds(spark, touched, snap)
-        else readLive(spark, touched, snap)
-      val kept = src
-        .filter(!org.apache.spark.sql.functions.coalesce(pred.toColumn,
-          org.apache.spark.sql.functions.lit(false)))
-      val added = writeDataFiles(kept, carryRowIds = carry)
-      commitSnapshot("delete", added, touched,
-        validateAddedSince = Some((base, pred)), toBranch = branch,
-        lineageCarried = carry)
-    }
-  }
+    planRowLevel(spark, RowLevelOp.delete(pred), mor = false, conflictRetries, branch)
 
-  /** Copy-on-write DELETE whose row MATCHING requires joins — the
-    * decorrelated-subquery path (`WHERE k IN (SELECT …)`, correlated
-    * EXISTS): `flag` receives the touched-files read and must return
-    * the SAME rows (multiplicity preserved — join only against
-    * DISTINCT keys) plus one boolean column `__match`; NULL counts as
-    * false (SQL WHERE semantics). `prune` is a LENIENT may-match
-    * predicate over the condition's join-free conjuncts: it selects
-    * which files rewrite AND which racing commits conflict, so it must
-    * be a SUPERSET of the true matches — AlwaysTrue degrades to a
-    * full-table rewrite and full-strictness validation, never a wrong
-    * answer. Scale shape: the subquery side joins as a distinct key
-    * set (broadcast under AQE when small); the data side is the
-    * pruned file read, no extra shuffle of untouched files. */
+  /** Merge-on-read row delete (Iceberg's positional delete files): the
+    * matching rows' physical coordinates (file_path, row_index) are
+    * committed as a small parquet TOMBSTONE file or as deletion vectors
+    * ([[writeRowDeletes]]) — NO data file is rewritten. The write-time
+    * cost of a selective delete drops from O(touched data bytes) to
+    * O(deleted rows); the read-time cost is a tiny broadcast until
+    * [[compact]] materializes the deletes and retires the tombstones.
+    * This is what moves the reference's delete-file meters
+    * (totalDeleteFiles/totalPositionalDeletes,
+    * IntegrationTest.java:109,112,115) off zero. */
+  def deleteWhereMoR(spark: SparkSession, pred: LakePredicate,
+      conflictRetries: Int = 3,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.delete(pred), mor = true, conflictRetries, branch)
+
+  /** DELETE whose row MATCHING requires joins — the decorrelated-
+    * subquery path (`WHERE k IN (SELECT …)`, correlated EXISTS): `flag`
+    * receives the touched-files read and must return the SAME rows
+    * (multiplicity preserved — join only against DISTINCT keys; input
+    * columns preserved — the hidden id and position columns ride
+    * through) plus one boolean column `__match`; NULL counts as false
+    * (SQL WHERE semantics). `prune` is a LENIENT may-match predicate
+    * over the condition's join-free conjuncts: it selects which files
+    * are read AND which racing commits conflict, so it must be a
+    * SUPERSET of the true matches — AlwaysTrue degrades to a full-table
+    * read and full-strictness validation, never a wrong answer. */
   def deleteWhereFlagged(spark: SparkSession, prune: LakePredicate,
       flag: DataFrame => DataFrame,
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(prune.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("delete", Nil, Nil, validateAddedSince = Some((base, prune)),
-        toBranch = branch)
-    else {
-      // lineage carries iff the caller's flag transform preserved the
-      // trailing _row_id column (the SQL layer's flagFn only JOINS
-      // columns on, so it always does; a projecting flag falls back to
-      // the honest broken flag)
-      val carry0 = canCarryRowIds(touched)
-      val src =
-        if (carry0) readLiveWithRowIds(spark, touched, snap)
-        else readLive(spark, touched, snap)
-      val flagged = flag(src)
-      val carry = carry0 && flagged.columns.contains(LakeTable.RowIdCol)
-      val kept = flagged.filter(!coalesce(col("__match"), lit(false)))
-        .select((schema.fieldNames ++
-          (if (carry) Seq(LakeTable.RowIdCol) else Nil)).map(col): _*)
-      val added = writeDataFiles(kept, carryRowIds = carry)
-      commitSnapshot("delete", added, touched,
-        validateAddedSince = Some((base, prune)), toBranch = branch,
-        lineageCarried = carry)
-    }
-  }
+    planRowLevel(spark, RowLevelOp.Delete(prune, flag), mor = false,
+      conflictRetries, branch)
 
-  /** MERGE-ON-READ twin of [[deleteWhereFlagged]]: ships positional
-    * tombstones (or DV bitmaps) for the matched coordinates in ONE
-    * commit — write cost O(matched rows), never a file rewrite, the
-    * shape a subquery purge wants on a huge MoR table. `flag` must
-    * PRESERVE its input columns (the hidden position columns ride
-    * through its joins) and add `__match`. */
+  /** [[deleteWhereFlagged]] under merge-on-read: O(matched rows) of
+    * tombstones or deletion vectors, never a file rewrite — the shape a
+    * subquery purge wants on a huge table. */
   def deleteWhereFlaggedMoR(spark: SparkSession, prune: LakePredicate,
       flag: DataFrame => DataFrame,
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(prune.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("delete", Nil, Nil, validateAddedSince = Some((base, prune)),
-        toBranch = branch)
-    else {
-      val matched = flag(readLivePos(spark, touched,
-          snap.map(_.deleteFiles).getOrElse(Nil),
-          snap.map(_.eqDeleteFiles).getOrElse(Nil),
-          snap.map(_.dvFiles).getOrElse(Nil)))
-        .filter(F.coalesce(F.col("__match"), F.lit(false)))
-        .select(F.col(LakeTable.PosFileCol).as("file_path"),
-          F.col(LakeTable.PosIdxCol).as("pos"))
-      if (dvEnabled) {
-        val dvs = writeDeleteVectors(spark, matched,
-          snap.map(_.dvFiles).getOrElse(Nil))
-        commitSnapshot("delete", Nil, Nil, addedDvs = dvs,
-          validateAddedSince = Some((base, prune)), toBranch = branch)
-      } else {
-        val dir = s"$location/data/${UUID.randomUUID}"
-        matched
-          .repartitionByRange(math.max(1, touched.size / 16), F.col("file_path"))
-          .write.parquet(dir)
-        val added = StatsHarvester.harvest(spark, dir, LakeTable.DeleteFileSchema,
-          Nil, LakeTable.DeleteFieldIds).filter(_.recordCount > 0L)
-        commitSnapshot("delete", Nil, Nil, addedDeletes = added,
-          validateAddedSince = Some((base, prune)), toBranch = branch)
-      }
-    }
-  }
+    planRowLevel(spark, RowLevelOp.Delete(prune, flag), mor = true,
+      conflictRetries, branch)
 
-  /** MERGE-ON-READ twin of [[updateWhereFlagged]]: ONE commit of
-    * positional tombstones for the matched rows' old coordinates plus
-    * data files with their updated values — O(matched rows). Same flag
-    * contract as [[deleteWhereFlaggedMoR]]. */
-  def updateWhereFlaggedMoR(spark: SparkSession, prune: LakePredicate,
-      flag: DataFrame => DataFrame,
+  /** Copy-on-write update: rewrite the files `pred` may match, matching
+    * rows taking the assignments. Every assignment evaluates against the
+    * OLD row (`SET a = b, b = a` swaps) and is cast to the DECLARED
+    * column type; an updated row keeps its stable id (Iceberg v3 row
+    * lineage). `branch` stages the update on a branch head. */
+  def updateWhere(spark: SparkSession, pred: LakePredicate,
       assignments: Map[String, Column],
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(prune.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("overwrite", Nil, Nil, validateAddedSince = Some((base, prune)),
-        toBranch = branch)
-    else {
-      // persisted: tombstone coordinates AND updated rows must see one
-      // consistent snapshot of a plan whose subquery joins could
-      // otherwise recompute differently
-      val matched = flag(readLivePos(spark, touched,
-          snap.map(_.deleteFiles).getOrElse(Nil),
-          snap.map(_.eqDeleteFiles).getOrElse(Nil),
-          snap.map(_.dvFiles).getOrElse(Nil)))
-        .filter(F.coalesce(F.col("__match"), F.lit(false)))
-        .persist()
-      try {
-        val coords = matched.select(F.col(LakeTable.PosFileCol).as("file_path"),
-          F.col(LakeTable.PosIdxCol).as("pos"))
-        val (tombs, dvs) =
-          if (dvEnabled)
-            (Nil, writeDeleteVectors(spark, coords,
-              snap.map(_.dvFiles).getOrElse(Nil)))
-          else {
-            val tombDir = s"$location/data/${UUID.randomUUID}"
-            coords
-              .repartitionByRange(math.max(1, touched.size / 16), F.col("file_path"))
-              .write.parquet(tombDir)
-            (StatsHarvester.harvest(spark, tombDir, LakeTable.DeleteFileSchema,
-              Nil, LakeTable.DeleteFieldIds).filter(_.recordCount > 0L), Nil)
-          }
-        // rows are already filtered to the matches: assignments apply
-        // unconditionally, ONE select against the OLD row; cast pins
-        // the DECLARED column type (`SET s.x = 0` on a BIGINT x)
-        val updated = matched.select(schema.fields.map { f =>
-          assignments.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(F.col(f.name))
-        }.toSeq: _*)
-        val added = writeDataFiles(updated)
-        commitSnapshot("overwrite", added, Nil, addedDeletes = tombs,
-          addedDvs = dvs,
-          validateAddedSince = Some((base, prune)), toBranch = branch)
-      } finally matched.unpersist(blocking = false)
-    }
-  }
+    planRowLevel(spark, RowLevelOp.update(pred, assignments), mor = false,
+      conflictRetries, branch)
 
-  /** Copy-on-write UPDATE twin of [[deleteWhereFlagged]]: rows whose
-    * `__match` is TRUE take the assignments (all evaluated against the
-    * OLD row — the one-select rule of [[updateWhere]]), the rest
-    * rewrite unchanged. */
+  /** Merge-on-read update: ONE commit ships position deletes for the
+    * matched rows' old coordinates PLUS data files carrying their
+    * updated values (and their stable ids) — write cost O(matched rows),
+    * not the rewrite of every byte of every touched FILE. The appended
+    * rows land at the new snapshot's sequence number and are untouched
+    * by the tombstones (which address old files only); [[compact]]
+    * materializes. */
+  def updateWhereMoR(spark: SparkSession, pred: LakePredicate,
+      assignments: Map[String, Column],
+      conflictRetries: Int = 3,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.update(pred, assignments), mor = true,
+      conflictRetries, branch)
+
+  /** UPDATE with a join-based row mark: rows whose `__match` is TRUE
+    * take the assignments. `prune`/`flag` contract as for
+    * [[deleteWhereFlagged]]. */
   def updateWhereFlagged(spark: SparkSession, prune: LakePredicate,
       flag: DataFrame => DataFrame,
       assignments: Map[String, Column],
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit, when => fwhen}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(prune.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("overwrite", Nil, Nil, validateAddedSince = Some((base, prune)),
-        toBranch = branch)
-    else {
-      // same carry rule as deleteWhereFlagged: updates preserve _row_id
-      // when the flag transform kept the column (the SQL flagFn does)
-      val carry0 = canCarryRowIds(touched)
-      val src =
-        if (carry0) readLiveWithRowIds(spark, touched, snap)
-        else readLive(spark, touched, snap)
-      val flagged = flag(src)
-      val carry = carry0 && flagged.columns.contains(LakeTable.RowIdCol)
-      val cond = coalesce(fcol("__match"), lit(false))
-      val rewritten = flagged.select(schema.fields.map { f =>
-        assignments.get(f.name)
-          .map(v => fwhen(cond, v.cast(f.dataType))
-            .otherwise(fcol(f.name)).as(f.name))
-          .getOrElse(fcol(f.name))
-      }.toSeq ++ (if (carry) Seq(fcol(LakeTable.RowIdCol)) else Nil): _*)
-      val added = writeDataFiles(rewritten, carryRowIds = carry)
-      commitSnapshot("overwrite", added, touched,
-        validateAddedSince = Some((base, prune)), toBranch = branch,
-        lineageCarried = carry)
-    }
-  }
+    planRowLevel(spark, RowLevelOp.Update(prune, flag, assignments), mor = false,
+      conflictRetries, branch)
+
+  /** [[updateWhereFlagged]] under merge-on-read, as [[updateWhereMoR]]. */
+  def updateWhereFlaggedMoR(spark: SparkSession, prune: LakePredicate,
+      flag: DataFrame => DataFrame,
+      assignments: Map[String, Column],
+      conflictRetries: Int = 3,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.Update(prune, flag, assignments), mor = true,
+      conflictRetries, branch)
 
   /** Atomic predicate-scoped OVERWRITE (Delta's replaceWhere /
     * Iceberg's overwrite-by-filter): delete every row matching `pred`
@@ -1865,105 +1812,508 @@ final class LakeTable private[lake] (
     * smuggle rows into other days (Delta refuses identically). */
   def replaceWhere(spark: SparkSession, pred: LakePredicate, df: DataFrame,
       conflictRetries: Int = 3,
-      branch: Option[String] = None): CommitReport = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    // persisted: the replacement frame is evaluated once for the stray
-    // check and again by writeDataFiles (re-run per conflict retry) — a
-    // non-deterministic source could pass the check yet materialize
-    // rows OUTSIDE the slice on the write pass, the exact corruption
-    // the check exists to stop (mergeInto persists for the same reason)
-    val rep = df.persist()
-    try {
-      val strays = rep.filter(!coalesce(pred.toColumn, lit(false))).limit(1).count()
-      require(strays == 0L,
-        s"replaceWhere(${pred.render}) on $name: replacement rows must all " +
-          "match the predicate (a stray row would land OUTSIDE the replaced " +
-          "slice and silently corrupt it)")
-      withConflictRetry(conflictRetries) {
-        val (base, live, snap) = lineageBase(branch)
-        val touched = live.filter(pred.mayMatch(_, meta))
-        val newFiles = writeDataFiles(rep)
-        if (touched.isEmpty)
-          commitSnapshot("overwrite", newFiles, Nil,
-            validateAddedSince = Some((base, pred)), toBranch = branch)
-        else {
-          // survivors of touched files (NULL-predicate rows KEEP — only
-          // TRUE replaces, SQL delete semantics) carry their stable ids;
-          // the replacement rows land in id-free files and derive fresh
-          // ids from their own commit range
-          val carry = canCarryRowIds(touched)
-          val src =
-            if (carry) readLiveWithRowIds(spark, touched, snap)
-            else readLive(spark, touched, snap)
-          val kept = src.filter(!coalesce(pred.toColumn, lit(false)))
-          val added = writeDataFiles(kept, carryRowIds = carry) ++ newFiles
-          commitSnapshot("overwrite", added, touched,
-            validateAddedSince = Some((base, pred)), toBranch = branch,
-            lineageCarried = carry)
-        }
-      }
-    } finally rep.unpersist(blocking = false)
-  }
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.Replace(pred, df), mor = false,
+      conflictRetries, branch)
 
-  /** MERGE-ON-READ row delete (Iceberg's positional delete files): the
-    * matching rows' physical coordinates (file_path, row_index) are
-    * written as a small parquet TOMBSTONE file and committed as a
-    * delete manifest — NO data file is rewritten. Scans subtract the
-    * tombstoned positions with a broadcast anti-join. The write-time
-    * cost of a selective delete drops from O(touched data bytes) to
-    * O(deleted rows); the read-time cost is the tiny broadcast until
-    * [[compact]] materializes the deletes and retires the tombstones.
-    * Same serializable validation as the copy-on-write [[deleteWhere]].
-    * This is what moves the reference's delete-file meters
-    * (totalDeleteFiles/totalPositionalDeletes,
-    * IntegrationTest.java:109,112,115) off zero. */
-  def deleteWhereMoR(spark: SparkSession, pred: LakePredicate,
+  /** Keyed MERGE (upsert): source rows replace same-key rows, unmatched
+    * source rows are inserted. Copy-on-write: only files whose key
+    * bounds overlap the source's key range are rewritten — the one
+    * driver-side value is the source's per-key min/max (a 1-row agg).
+    * A matched row continues its target row's stable id; an inserted
+    * row draws a fresh one. Serializable: a racing append inside the
+    * key bounds would leave duplicate live keys — it fails and retries
+    * instead. Source must carry the table schema and distinct,
+    * non-NULL keys. */
+  def mergeInto(spark: SparkSession, source: DataFrame, keys: Seq[String],
+      conflictRetries: Int = 3,
+      exactlyOnce: Option[(String, Long)] = None,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.Merge(source, keys, None), mor = false,
+      conflictRetries, branch, exactlyOnce)
+
+  /** Merge-on-read keyed upsert (the Flink-into-Iceberg CDC shape):
+    * ONE commit ships the source rows as new data files AND an
+    * equality-delete file of their keys — the table is never read, so
+    * the write cost is O(source) regardless of table size. Old same-key
+    * rows die by seq comparison at read time (tombstones apply only to
+    * data files with strictly smaller seq, so this commit's own rows
+    * survive its own tombstones); [[compact]] materializes the state
+    * back into clean files. Matched rows draw fresh ids (the old row is
+    * never read).
+    *
+    * Needs NO conflict validation: two racing upserts both land, and
+    * whichever commits later holds the larger seq — its tombstones beat
+    * the earlier rows, exactly the serial order the CAS decided. Source
+    * contract as for [[mergeInto]]. */
+  def mergeIntoMoR(spark: SparkSession, source: DataFrame, keys: Seq[String],
+      exactlyOnce: Option[(String, Long)] = None,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.Merge(source, keys, None), mor = true,
+      conflictRetries = 0, branch, exactlyOnce)
+
+  /** FULL-GRAMMAR conditional MERGE (copy-on-write): the general
+    * `MERGE INTO` shape SQL users write on day one of a CDC feed —
+    *
+    * {{{
+    *   WHEN MATCHED [AND c1] THEN UPDATE SET ... | DELETE      (× N, first match wins)
+    *   WHEN NOT MATCHED [AND c2] THEN INSERT ...               (× N, first match wins)
+    *   WHEN NOT MATCHED BY SOURCE [AND c3] THEN UPDATE | DELETE (× N, first match wins)
+    * }}}
+    *
+    * where [[mergeInto]] handles only the canonical unconditional
+    * upsert. Clause conditions/values are Columns over the prefixed
+    * `__t_*`/`__s_*` namespace — see [[MergeClauseSpec]]. Matched rows
+    * with no applicable clause KEEP their old values; unmatched source
+    * rows with no applicable insert clause are dropped; target rows
+    * unmatched by source keep unless a NOT-MATCHED-BY-SOURCE clause
+    * applies. All conditions evaluate against the OLD target row.
+    *
+    * Files read = those whose stats may overlap the source's key bounds,
+    * UNION — only when NOT-MATCHED-BY-SOURCE clauses exist — those that
+    * may hold a row satisfying `nmbsPrune` (a LENIENT may-match
+    * predicate the caller derives from the clause conditions;
+    * AlwaysTrue for an unconditional clause, which is inherently a
+    * full-table operation). Untouched files are carried by reference.
+    * Serializable: a racing commit adding rows inside the key bounds
+    * (or matching `nmbsPrune`) fails validation and retries.
+    *
+    * Source contract: merge keys must be DISTINCT among non-NULL-key
+    * rows. NULL-key source rows match nothing and fall through to the
+    * NOT MATCHED clauses, standard SQL semantics. Unlike [[mergeInto]]
+    * the source need not match the table schema: insert clauses
+    * compute every column explicitly (missing → NULL). */
+  def mergeIntoConditional(spark: SparkSession, source: DataFrame,
+      keys: Seq[String],
+      matched: Seq[MergeClauseSpec],
+      notMatched: Seq[MergeClauseSpec],
+      notMatchedBySource: Seq[MergeClauseSpec] = Nil,
+      nmbsPrune: LakePredicate = LakePredicate.AlwaysTrue,
       conflictRetries: Int = 3,
       branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(pred.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("delete", Nil, Nil, validateAddedSince = Some((base, pred)),
-        toBranch = branch)
-    else {
-      // coordinates of rows matching pred — read MoR-filtered, so rows
-      // already tombstoned by an earlier delete are not re-recorded
-      val matched = readLivePos(spark, touched,
-          snap.map(_.deleteFiles).getOrElse(Nil),
-          snap.map(_.eqDeleteFiles).getOrElse(Nil),
-          snap.map(_.dvFiles).getOrElse(Nil))
-        .filter(F.coalesce(pred.toColumn, F.lit(false)))
-        .select(F.col(LakeTable.PosFileCol).as("file_path"),
-          F.col(LakeTable.PosIdxCol).as("pos"))
-      if (dvEnabled) {
-        val dvs = writeDeleteVectors(spark, matched,
-          snap.map(_.dvFiles).getOrElse(Nil))
-        commitSnapshot("delete", Nil, Nil, addedDvs = dvs,
-          validateAddedSince = Some((base, pred)), toBranch = branch)
-      } else {
-        val dir = s"$location/data/${UUID.randomUUID}"
-        // tombstones clustered by data-file path: a wide delete still
-        // writes few, well-packed files, and per-file coordinates stay
-        // contiguous for the read-side join
-        matched
-          .repartitionByRange(math.max(1, touched.size / 16), F.col("file_path"))
-          .write.parquet(dir)
-        val added = StatsHarvester.harvest(spark, dir, LakeTable.DeleteFileSchema,
-          Nil, LakeTable.DeleteFieldIds).filter(_.recordCount > 0L)
-        commitSnapshot("delete", Nil, Nil, addedDeletes = added,
-          validateAddedSince = Some((base, pred)), toBranch = branch)
+    planRowLevel(spark, RowLevelOp.Merge(source, keys, Some(RowLevelOp.MergeClauses(
+      matched, notMatched, notMatchedBySource, nmbsPrune))), mor = false,
+      conflictRetries, branch)
+
+  /** [[mergeIntoConditional]] under merge-on-read: the touched files are
+    * still READ (clause conditions evaluate against the OLD row, which
+    * equality tombstones never see), but ONE commit WRITES only
+    * position deletes for the rows a clause UPDATEs or DELETEs plus data
+    * files carrying the updated/inserted rows — write cost
+    * O(affected + source), while KEEP rows cost nothing. */
+  def mergeIntoConditionalMoR(spark: SparkSession, source: DataFrame,
+      keys: Seq[String],
+      matched: Seq[MergeClauseSpec],
+      notMatched: Seq[MergeClauseSpec],
+      notMatchedBySource: Seq[MergeClauseSpec] = Nil,
+      nmbsPrune: LakePredicate = LakePredicate.AlwaysTrue,
+      conflictRetries: Int = 3,
+      branch: Option[String] = None): CommitReport =
+    planRowLevel(spark, RowLevelOp.Merge(source, keys, Some(RowLevelOp.MergeClauses(
+      matched, notMatched, notMatchedBySource, nmbsPrune))), mor = true,
+      conflictRetries, branch)
+
+  /** The SQL layer's entry: `op` under the strategy the table's
+    * `write.<op.mode>.mode` property picks. */
+  private[graft] def runRowLevel(spark: SparkSession, op: RowLevelOp,
+      branch: Option[String]): CommitReport =
+    planRowLevel(spark, op, mor = writeMode(op.mode) == "merge-on-read",
+      branch = branch)
+
+  /** THE row-level planner. Each statement runs these steps:
+    *
+    *  1. Source: a merge source or replacement frame persists ONCE,
+    *     outside the conflict-retry loop, and its statement checks
+    *     (source contract, key bounds, stray replacement rows) run over
+    *     that one evaluation — a recomputed non-deterministic source
+    *     could otherwise write keys outside the validated bounds.
+    *  1. Target selection: the lineage head ([[lineageBase]]: main or a
+    *     branch) and the files `prune` may match.
+    *  1. Read ([[readTarget]]): the touched files' live rows, with
+    *     stable ids whenever rows are rewritten and lineage can carry;
+    *     merge-on-read also keeps each row's (file, pos) coordinates.
+    *  1. Row marking: a boolean `__match` column — a predicate is just
+    *     the flag `pred.toColumn`.
+    *  1. Output: copy-on-write rewrites the touched files; merge-on-read
+    *     writes position deletes ([[writeRowDeletes]]) plus the changed
+    *     rows; the canonical merge-on-read MERGE writes equality deletes
+    *     and never reads the target.
+    *  1. One commit, serializable against files added since the base
+    *     that `prune` may match; a conflict re-runs steps 2-6 against
+    *     fresh metadata (the files a lost attempt wrote become orphans).
+    */
+  private def planRowLevel(spark: SparkSession, op: RowLevelOp, mor: Boolean,
+      conflictRetries: Int = 3, branch: Option[String] = None,
+      exactlyOnce: Option[(String, Long)] = None): CommitReport = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val source = op match {
+      case RowLevelOp.Replace(_, rows) => Some(rows.persist())
+      case m: RowLevelOp.Merge => Some(m.source.persist())
+      case _ => None
+    }
+    // try/finally: every exit — no-op, refused source, exhausted
+    // conflict retries — must release the cached source
+    try {
+      val (sourceRows, prune) = op match {
+        case RowLevelOp.Delete(p, _) => (0L, Some(p))
+        case RowLevelOp.Update(p, _, _) => (0L, Some(p))
+        case RowLevelOp.Replace(p, _) =>
+          val strays = source.get.filter(!coalesce(p.toColumn, lit(false))).limit(1).count()
+          require(strays == 0L,
+            s"replaceWhere(${p.render}) on $name: replacement rows must all " +
+              "match the predicate (a stray row would land OUTSIDE the replaced " +
+              "slice and silently corrupt it)")
+          (0L, Some(p))
+        case RowLevelOp.Merge(_, keys, clauses) =>
+          val (n, bounds) = mergeSourceStats(source.get, keys, clauses)
+          (n, clauses match {
+            case None => bounds.filter(_ => !mor)
+            case Some(c) if c.notMatchedBySource.nonEmpty =>
+              Some(bounds.fold(c.nmbsPrune)(LakePredicate.Or(_, c.nmbsPrune)))
+            case Some(_) => bounds
+          })
       }
+      withConflictRetry(conflictRetries) {
+        val (base, live, snap) = lineageBase(branch)
+        val touched = prune.fold(Seq.empty[DataFileEntry])(p =>
+          live.filter(p.mayMatch(_, meta)))
+        val out = op match {
+          case RowLevelOp.Delete(_, flag) => markRows(spark, touched, snap, flag, None, mor)
+          case RowLevelOp.Update(_, flag, set) =>
+            markRows(spark, touched, snap, flag, Some(set), mor)
+          case RowLevelOp.Replace(p, _) =>
+            // the replacement rows land in id-free files and derive
+            // fresh ids from their own commit range
+            val fresh = writeDataFiles(source.get)
+            val kept = markRows(spark, touched, snap, RowLevelOp.where(p), None, mor)
+            kept.copy(added = kept.added ++ fresh)
+          case RowLevelOp.Merge(_, keys, None) =>
+            // an empty source commits nothing (the ledger still records)
+            if (sourceRows == 0L) RowLevelWrite()
+            else upsert(spark, source.get, keys, touched, snap, mor)
+          case RowLevelOp.Merge(_, keys, Some(clauses)) =>
+            // nothing to read, nothing to insert: an empty commit
+            if (touched.isEmpty && sourceRows == 0L) RowLevelWrite()
+            else conditionalMerge(spark, source.get, keys, clauses, touched, snap, mor)
+        }
+        commitSnapshot(op.verb, out.added, out.removed,
+          validateAddedSince = prune.map(base -> _),
+          exactlyOnce = exactlyOnce, addedDeletes = out.posDeletes,
+          addedEqDeletes = out.eqDeletes, addedDvs = out.dvs, toBranch = branch,
+          lineageCarried = out.carried)
+      }
+    } finally source.foreach(_.unpersist(blocking = false))
+  }
+
+  /** One driver-side row over the persisted merge source — row count,
+    * NULL-key rows, distinct keys and per-key min/max — checked against
+    * the source contract; returns the row count and the key-bounds
+    * predicate (None when no row has a full non-NULL key). Duplicate
+    * keys would BOTH survive the merge with an arbitrary "winner", so
+    * they fail loudly (a versioned feed reduces first — the streaming
+    * upsert sink's orderBy = last-write-wins). The canonical upsert
+    * (`clauses` None) also refuses NULL keys — its anti-join never
+    * matches them, so they would just append — and any source not in
+    * the table schema; the conditional MERGE lets NULL-key rows fall
+    * through to its NOT MATCHED clauses (standard SQL). */
+  private def mergeSourceStats(src: DataFrame, keys: Seq[String],
+      clauses: Option[RowLevelOp.MergeClauses]): (Long, Option[LakePredicate]) = {
+    import org.apache.spark.sql.{functions => F}
+    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains), s"bad merge keys $keys")
+    clauses match {
+      case None =>
+        // simpleString comparison: StructField equality includes METADATA,
+        // and a source derived from this table's own scan carries nested
+        // parquet.field.id metadata inside struct types — identical schemas
+        // would spuriously refuse under exact DataType equality
+        require(src.schema.fields.map(f => (f.name, f.dataType.simpleString))
+          .sameElements(schema.fields.map(f => (f.name, f.dataType.simpleString))),
+          s"merge source schema mismatch: ${src.schema.simpleString}")
+      case Some(c) =>
+        require(keys.forall(src.columns.contains),
+          s"merge source lacks key column(s): ${keys.filterNot(src.columns.contains)}")
+        require(c.matched.nonEmpty || c.notMatched.nonEmpty || c.notMatchedBySource.nonEmpty,
+          "MERGE needs at least one WHEN clause")
+        require(c.notMatched.forall(!_.isDelete), "WHEN NOT MATCHED cannot DELETE")
+        require(!schema.fieldNames.exists(_.startsWith("__")) &&
+          !src.columns.exists(_.startsWith("__")),
+          "column names starting with __ collide with the merge's join namespace")
+    }
+    val keyNotNull = keys.map(F.col(_).isNotNull).reduce(_ && _)
+    val aggs = keys.flatMap(k => Seq(F.min(F.col(k)), F.max(F.col(k)))) ++ Seq(
+      F.count(F.lit(1)),
+      F.sum(F.when(keyNotNull, 0L).otherwise(1L)),
+      // WHEN without otherwise → NULL, which count_distinct ignores:
+      // distinctness is asserted among non-NULL-key rows only
+      F.count_distinct(F.when(keyNotNull, F.struct(keys.map(F.col): _*))))
+    val row = src.agg(aggs.head, aggs.tail: _*).head()
+    val n = 2 * keys.size
+    val rows = row.getLong(n)
+    // sum over zero rows is NULL — an empty source has no null keys
+    val nullKeyRows = if (row.isNullAt(n + 1)) 0L else row.getLong(n + 1)
+    if (clauses.isEmpty && nullKeyRows > 0L)
+      throw new IllegalArgumentException(
+        s"merge source has $nullKeyRows row(s) with a NULL merge key in $keys — " +
+          "NULL keys cannot match and would duplicate rows")
+    val duplicates = rows - nullKeyRows - row.getLong(n + 2)
+    if (duplicates > 0L)
+      throw new IllegalArgumentException(
+        s"merge source has $duplicates duplicate merge-key row(s) in $keys — " +
+          "which row wins is undefined; reduce the source to one row per key " +
+          "first (e.g. last-write-wins on a version column)")
+    val bounds =
+      if (rows == nullKeyRows) None
+      else Some(keys.zipWithIndex.map { case (k, i) =>
+        LakePredicate.And(LakePredicate.Ge(k, row.get(2 * i)),
+          LakePredicate.Le(k, row.get(2 * i + 1)))
+      }.reduceLeft[LakePredicate](LakePredicate.And(_, _)))
+    (rows, bounds)
+  }
+
+  /** DELETE / UPDATE body: flag the touched rows, then rewrite the
+    * touched files (copy-on-write: unmatched rows unchanged, matched
+    * rows dropped or assigned) or write position deletes for the
+    * matched rows plus, for an UPDATE, their new values
+    * (merge-on-read). `set` = None deletes. */
+  private def markRows(spark: SparkSession, touched: Seq[DataFileEntry],
+      snap: Option[Snapshot], flag: DataFrame => DataFrame,
+      set: Option[Map[String, Column]], mor: Boolean): RowLevelWrite =
+    if (touched.isEmpty) RowLevelWrite()
+    else {
+      import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+      // a merge-on-read DELETE writes no rows, so it has no ids to carry
+      val (read, canCarry) = readTarget(spark, touched, snap, withPos = mor,
+        wantIds = !mor || set.isDefined)
+      val flagged = flag(read)
+      // lineage carries iff the flag kept the trailing _row_id column
+      // (the SQL layer's flag only JOINS columns on, so it always does;
+      // a projecting flag falls back to the honest broken flag)
+      val carry = canCarry && flagged.columns.contains(LakeTable.RowIdCol)
+      val isMatch = coalesce(col("__match"), lit(false))
+      // ONE select evaluates every assignment against the OLD row (a
+      // withColumn fold would feed later assignments already-updated
+      // values); the cast pins the DECLARED column type — `SET s.x = 0`
+      // must store a BIGINT x, not narrow the struct to the literal's
+      def output(onlyIf: Option[Column]): Seq[Column] =
+        schema.fields.toSeq.map { f =>
+          set.flatMap(_.get(f.name)).map { v =>
+            val nv = v.cast(f.dataType)
+            onlyIf.fold(nv)(when(_, nv).otherwise(col(f.name))).as(f.name)
+          }.getOrElse(col(f.name))
+        } ++ (if (carry) Seq(col(LakeTable.RowIdCol)) else Nil)
+      if (!mor) {
+        val rows = if (set.isEmpty) flagged.filter(!isMatch) else flagged
+        RowLevelWrite(
+          added = writeDataFiles(rows.select(output(Some(isMatch)): _*), carryRowIds = carry),
+          removed = touched, carried = carry)
+      } else if (set.isEmpty) writeRowDeletes(spark, flagged.filter(isMatch), snap, touched.size)
+      else {
+        // persisted: the position deletes AND the updated rows must see
+        // one evaluation of a plan whose flag joins could otherwise
+        // recompute differently
+        val matched = flagged.filter(isMatch).persist()
+        try writeRowDeletes(spark, matched, snap, touched.size).copy(
+          added = writeDataFiles(matched.select(output(None): _*), carryRowIds = carry),
+          carried = carry)
+        finally matched.unpersist(blocking = false)
+      }
+    }
+
+  /** Canonical upsert body. Merge-on-read writes the source plus an
+    * equality-delete file of its keys and never reads the target;
+    * copy-on-write rewrites the touched files as (target rows whose key
+    * the source lacks) ∪ source. With lineage, unmatched target rows
+    * keep their ids, a matched source row CONTINUES its target row's id
+    * (min over legal duplicate target keys — deterministic), and a
+    * source-only row writes a NULL cell, deriving a fresh id from the
+    * new file's own commit range. */
+  private def upsert(spark: SparkSession, src: DataFrame, keys: Seq[String],
+      touched: Seq[DataFileEntry], snap: Option[Snapshot],
+      mor: Boolean): RowLevelWrite = {
+    import org.apache.spark.sql.{functions => F}
+    if (mor) {
+      val added = writeDataFiles(src)
+      // the tombstone parquet carries the keys' FIELD IDS, read back
+      // through the same ID-matching path as data — renames never
+      // detach live tombstones
+      val idSchema = meta.schemaWithFieldIds
+      val dir = s"$location/data/${UUID.randomUUID}"
+      org.apache.spark.sql.graftbridge.SessionBridge
+        .withConfs(
+          src.select(keys.map(k =>
+            src.col(k).as(k, idSchema(idSchema.fieldIndex(k)).metadata)): _*),
+          Map(
+            "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+            "spark.sql.parquet.fieldId.write.enabled" -> "true"))
+        .write.parquet(dir)
+      val keySchema = StructType(keys.map(k => schema(schema.fieldIndex(k))).toArray)
+      val eqEntries = StatsHarvester
+        .harvest(spark, dir, keySchema, Nil, meta.fieldIds.view.filterKeys(keys.contains).toMap)
+        .filter(_.recordCount > 0L)
+        .map(_.copy(eqFieldIds = keys.map(meta.fieldIds)))
+      RowLevelWrite(added = added, eqDeletes = eqEntries)
+    } else {
+      val (tgt, carry) = readTarget(spark, touched, snap)
+      val srcKeys = src.select(keys.map(F.col): _*)
+      val added =
+        if (!carry) writeDataFiles(tgt.join(srcKeys, keys, "left_anti").unionByName(src))
+        else {
+          // the target feeds two consumers (anti-join + id lookup) and
+          // persists across them so the touched files read once
+          val cached = tgt.persist()
+          try {
+            val tgtIds = cached.groupBy(keys.map(F.col): _*)
+              .agg(F.min(F.col(LakeTable.RowIdCol)).as(LakeTable.RowIdCol))
+            writeDataFiles(cached.join(srcKeys, keys, "left_anti")
+              .unionByName(src.join(tgtIds, keys, "left")), carryRowIds = true)
+          } finally cached.unpersist(blocking = false)
+        }
+      RowLevelWrite(added = added, removed = touched, carried = carry)
     }
   }
 
-  /** Deletion vectors on? (`write.delete.vector.enabled` — the v3 MoR
-    * storage; positional (file_path, pos) parquet is the v2 default.
-    * Both kinds apply together at read, so flipping the property
-    * mid-life is safe: deletes are monotone and the formats union.) */
-  private def dvEnabled: Boolean =
-    meta.properties.get("write.delete.vector.enabled").contains("true")
+  /** Conditional MERGE body: ONE pass over the touched files' read,
+    * each row taking the integer action of the first applicable clause
+    * of its family. Copy-on-write rewrites the touched files from it;
+    * merge-on-read writes position deletes for the target rows a clause
+    * updates or deletes, plus the updated and inserted rows. UPDATE and
+    * KEEP rows carry their stable ids; INSERT rows write NULL cells
+    * (fresh ids from the new file's commit range). */
+  private def conditionalMerge(spark: SparkSession, src: DataFrame,
+      keys: Seq[String], clauses: RowLevelOp.MergeClauses,
+      touched: Seq[DataFileEntry], snap: Option[Snapshot],
+      mor: Boolean): RowLevelWrite = {
+    import org.apache.spark.sql.{functions => F}
+    val RowLevelOp.MergeClauses(matched, notMatched, notMatchedBySource, _) = clauses
+    val (tgtRaw, carry) = readTarget(spark, touched, snap, withPos = mor)
+    // the read's hidden (file, pos) and id columns, past the table's
+    val hidden = tgtRaw.schema.fields.drop(schema.fields.length).toSeq
+    // prefixed namespaces + NON-NULL presence markers: key columns
+    // cannot flag presence (both sides may legally hold NULL keys)
+    val tgt = tgtRaw.select(
+      schema.fieldNames.map(c => F.col(c).as("__t_" + c)).toSeq ++
+        hidden.map(f => F.col(f.name)) :+
+        F.lit(1).as("__t__p"): _*)
+    val srcP = src.select(
+      src.columns.map(c => F.col(c).as("__s_" + c)).toSeq :+
+        F.lit(1).as("__s__p"): _*)
+    // NOT a full-outer join: Spark cannot broadcast a full outer, so
+    // it would force a sort-merge SHUFFLE of the entire touched-file
+    // read even for a 1000-row CDC source. Decomposed instead:
+    //   joined  = tgt LEFT OUTER src         (matched + target-only;
+    //             broadcastable build-right when the source is small)
+    //   matched = key-only tgt scan SEMI srcKeys, ≤ |src| rows
+    //             (column-pruned parquet read, broadcastable)
+    //   inserts = src ANTI matched           (source-only rows;
+    //             broadcastable — `matched` is small by construction)
+    // With a small source AQE broadcasts all three and the target
+    // data NEVER shuffles (the key-only scan is the only extra
+    // pass); with a huge source each degrades to the same SMJ the
+    // full-outer would have been. Semantics are identical: NULL
+    // keys match nothing on either side, so they fall out of the
+    // semi/anti exactly as out of the outer join.
+    val skeys = keys.map("__s_" + _)
+    val joined = tgt.join(srcP,
+      keys.map(k => F.col("__t_" + k) === F.col("__s_" + k)).reduce(_ && _),
+      "left_outer")
+    val srcKeyset = srcP.select(skeys.map(F.col): _*).distinct()
+    val matchedKeys = tgtRaw
+      .select(keys.map(k => F.col(k).as("__s_" + k)): _*)
+      .join(srcKeyset, skeys, "left_semi").distinct()
+    val inserts = srcP.join(matchedKeys, skeys, "left_anti")
+      .select(
+        schema.fields.map(f =>
+          F.lit(null).cast(f.dataType).as("__t_" + f.name)).toSeq ++
+          hidden.map(f => F.lit(null).cast(f.dataType).as(f.name)) ++
+          Seq(F.lit(null).cast("int").as("__t__p")) ++
+          src.columns.map(c => F.col("__s_" + c)) :+
+          F.col("__s__p"): _*)
+    val unioned = joined.unionByName(inserts)
+    // one integer action per row: first clause of the row's family
+    // whose condition is TRUE (NULL counts as false, SQL semantics)
+    val KEEP = 0
+    val DROP = -1
+    def chain(clauses: Seq[MergeClauseSpec], codeBase: Int,
+        default: Int): Column =
+      clauses.zipWithIndex.foldRight(F.lit(default): Column) {
+        case ((c, i), els) =>
+          val code = if (c.isDelete) DROP else codeBase + i
+          c.condition match {
+            case Some(cond) =>
+              F.when(F.coalesce(cond, F.lit(false)), F.lit(code)).otherwise(els)
+            case None => F.lit(code)
+          }
+      }
+    val tP = F.col("__t__p").isNotNull
+    val sP = F.col("__s__p").isNotNull
+    val act = F.when(tP && sP, chain(matched, 1000, KEEP))
+      .when(sP, chain(notMatched, 2000, DROP)) // source-only
+      .otherwise(chain(notMatchedBySource, 3000, KEEP)) // target-only
+    val actCol = F.col("__act")
+    val outCols = schema.fields.toSeq.map { f =>
+      val old = F.col("__t_" + f.name)
+      var e: Column = old
+      def overlay(clauses: Seq[MergeClauseSpec], codeBase: Int,
+          insert: Boolean): Unit =
+        clauses.zipWithIndex.foreach { case (c, i) =>
+          if (!c.isDelete) {
+            val v = c.assignments.collectFirst {
+              case (n, vc) if n == f.name => vc
+            }.getOrElse(if (insert) F.lit(null) else old)
+            e = F.when(actCol === (codeBase + i), v).otherwise(e)
+          }
+        }
+      overlay(matched, 1000, insert = false)
+      overlay(notMatched, 2000, insert = true)
+      overlay(notMatchedBySource, 3000, insert = false)
+      e.cast(f.dataType).as(f.name)
+    } ++ (if (carry) Seq(F.col(LakeTable.RowIdCol)) else Nil)
+    if (!mor) {
+      val kept = unioned.withColumn("__act", act).filter(actCol =!= DROP)
+      RowLevelWrite(added = writeDataFiles(kept.select(outCols: _*), carryRowIds = carry),
+        removed = touched, carried = carry)
+    } else {
+      // persist: position deletes AND new rows must come from ONE
+      // evaluation of the joined frame
+      val withAct = unioned.withColumn("__act", act).persist()
+      try {
+        // affected = anything not KEEPing its row as-is; target-backed
+        // affected rows delete their old coordinates (source-only
+        // inserts have NULL coordinates and none)
+        val affected = withAct.filter(actCol =!= KEEP)
+        writeRowDeletes(spark, affected.filter(F.col(LakeTable.PosFileCol).isNotNull),
+          snap, touched.size).copy(
+          added = writeDataFiles(affected.filter(actCol =!= DROP).select(outCols: _*),
+            carryRowIds = carry),
+          carried = carry)
+      } finally withAct.unpersist(blocking = false)
+    }
+  }
+
+  /** Merge-on-read output step: the (file, pos) coordinates of `rows`
+    * become deletion vectors when `write.delete.vector.enabled` is set
+    * (the v3 storage), positional parquet tombstones otherwise (the v2
+    * default). Both kinds apply together at read, so flipping the
+    * property mid-life is safe: deletes are monotone and the formats
+    * union. Tombstones cluster by data-file path: a wide delete still
+    * writes few, well-packed files, and per-file coordinates stay
+    * contiguous for the read-side join. */
+  private def writeRowDeletes(spark: SparkSession, rows: DataFrame,
+      snap: Option[Snapshot], touchedFiles: Int): RowLevelWrite = {
+    import org.apache.spark.sql.functions.col
+    val coords = rows.select(col(LakeTable.PosFileCol).as("file_path"),
+      col(LakeTable.PosIdxCol).as("pos"))
+    if (meta.properties.get("write.delete.vector.enabled").contains("true"))
+      RowLevelWrite(dvs = writeDeleteVectors(spark, coords, snap.toSeq.flatMap(_.dvFiles)))
+    else {
+      val dir = s"$location/data/${UUID.randomUUID}"
+      coords.repartitionByRange(math.max(1, touchedFiles / 16), col("file_path"))
+        .write.parquet(dir)
+      RowLevelWrite(posDeletes = StatsHarvester.harvest(spark, dir,
+        LakeTable.DeleteFileSchema, Nil, LakeTable.DeleteFieldIds)
+        .filter(_.recordCount > 0L))
+    }
+  }
 
   /** Turn matched row coordinates into DELETION VECTORS: one compressed
     * bitmap per touched data file, merged with the file's existing live
@@ -2024,68 +2374,6 @@ final class LakeTable private[lake] (
     }
   }
 
-  /** MERGE-ON-READ update: ONE commit ships positional tombstones for
-    * the matched rows' old coordinates PLUS data files carrying their
-    * updated values — write cost O(matched rows), not the copy-on-write
-    * rewrite of every byte of every touched FILE. The appended rows
-    * land at the new snapshot's sequence number and are untouched by
-    * the tombstones (which address old files only); reads subtract the
-    * old positions and see the updates; [[compact]] materializes.
-    * Same serializable validation as [[updateWhere]]. */
-  def updateWhereMoR(spark: SparkSession, pred: LakePredicate,
-      assignments: Map[String, Column],
-      conflictRetries: Int = 3,
-      branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(pred.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("overwrite", Nil, Nil, validateAddedSince = Some((base, pred)),
-        toBranch = branch)
-    else {
-      // matched rows with their coordinates, MoR-filtered (already-
-      // tombstoned rows are neither re-deleted nor resurrected);
-      // persisted because BOTH outputs (tombstones, updated rows) must
-      // see one consistent snapshot of a possibly-non-deterministic plan
-      val matched = readLivePos(spark, touched,
-          snap.map(_.deleteFiles).getOrElse(Nil),
-          snap.map(_.eqDeleteFiles).getOrElse(Nil),
-          snap.map(_.dvFiles).getOrElse(Nil))
-        .filter(F.coalesce(pred.toColumn, F.lit(false)))
-        .persist()
-      try {
-        val coords = matched.select(F.col(LakeTable.PosFileCol).as("file_path"),
-          F.col(LakeTable.PosIdxCol).as("pos"))
-        val (tombs, dvs) =
-          if (dvEnabled)
-            (Nil, writeDeleteVectors(spark, coords,
-              snap.map(_.dvFiles).getOrElse(Nil)))
-          else {
-            val tombDir = s"$location/data/${UUID.randomUUID}"
-            coords
-              .repartitionByRange(math.max(1, touched.size / 16), F.col("file_path"))
-              .write.parquet(tombDir)
-            (StatsHarvester.harvest(spark, tombDir, LakeTable.DeleteFileSchema,
-              Nil, LakeTable.DeleteFieldIds).filter(_.recordCount > 0L), Nil)
-          }
-        // rows are already filtered to the predicate: assignments apply
-        // unconditionally (updateWhere's when(pred) guard is for whole-
-        // file rewrites). ONE select so every assignment evaluates
-        // against the OLD row (SQL UPDATE semantics — a withColumn fold
-        // would feed later assignments the already-updated values);
-        // cast pins the DECLARED column type (`SET s.x = 0` on BIGINT x)
-        val updated = matched.select(schema.fields.map { f =>
-          assignments.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(F.col(f.name))
-        }.toSeq: _*)
-        val added = writeDataFiles(updated)
-        commitSnapshot("overwrite", added, Nil, addedDeletes = tombs,
-          addedDvs = dvs,
-          validateAddedSince = Some((base, pred)), toBranch = branch)
-      } finally matched.unpersist(blocking = false)
-    }
-  }
 
   /** Set / remove a table property (metadata-only commits). Properties
     * survive snapshot expiry; the write-mode family
@@ -2304,529 +2592,6 @@ final class LakeTable private[lake] (
     // current tombstones apply to the changed files too: the feed must
     // not deliver rows a later MoR delete already removed
     else readLive(spark, added, meta.currentSnapshot)
-  }
-
-  /** Keyed MERGE (upsert): source rows replace same-key rows, unmatched
-    * source rows are inserted. Copy-on-write: only files whose key
-    * bounds overlap the source's key range are rewritten — the one
-    * driver-side value is the source's per-key min/max (a 1-row agg).
-    * Source must carry the table schema and distinct keys. */
-  def mergeInto(spark: SparkSession, source: DataFrame, keys: Seq[String],
-      conflictRetries: Int = 3,
-      exactlyOnce: Option[(String, Long)] = None,
-      branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains), s"bad merge keys $keys")
-    // simpleString comparison: StructField equality includes METADATA,
-    // and a source derived from this table's own scan carries nested
-    // parquet.field.id metadata inside struct types — identical schemas
-    // would spuriously refuse under exact DataType equality
-    require(source.schema.fields.map(f => (f.name, f.dataType.simpleString))
-      .sameElements(schema.fields.map(f => (f.name, f.dataType.simpleString))),
-      s"merge source schema mismatch: ${source.schema.simpleString}")
-    val (base, live, baseSnap) = lineageBase(branch)
-    // persist: the source plan is consumed three times (bounds agg,
-    // anti-join, written union) and MUST be one consistent snapshot —
-    // a recomputed non-deterministic source could write keys outside
-    // the pruning bounds and leave duplicate live keys
-    val src = source.persist()
-    // try/finally: every exit — empty-source no-op, null-key abort,
-    // exhausted conflict retries — must release the cached source, or
-    // the blocks outlive the op for the session's lifetime
-    try {
-      // one driver-side row: per-key min/max bounds + row count + null-key
-      // count + distinct-key count. NULL merge keys violate the
-      // distinct-keys contract silently (anti-join never matches NULL, so
-      // null-key rows would just append) and duplicate keys would BOTH
-      // survive the anti-join+union and land as duplicate live rows with
-      // an arbitrary "winner" — fail loudly on either instead. Callers
-      // with a versioned feed reduce first (streaming upsert sink's
-      // orderBy = last-write-wins).
-      val aggs = keys.flatMap(k => Seq(F.min(F.col(k)), F.max(F.col(k)))) ++
-        Seq(F.count(F.lit(1)),
-          F.sum(keys.map(k => F.when(F.col(k).isNull, 1L).otherwise(0L)).reduce(_ + _)),
-          F.count_distinct(F.struct(keys.map(F.col): _*)))
-      val boundsRow = src.agg(aggs.head, aggs.tail: _*).head()
-      val nRows = boundsRow.getLong(2 * keys.size)
-      if (nRows == 0L) { // empty source: no-op (still records the ledger)
-        commitSnapshot("overwrite", Nil, Nil, exactlyOnce = exactlyOnce,
-          toBranch = branch)
-      } else {
-        val nullKeys = boundsRow.getLong(2 * keys.size + 1)
-        if (nullKeys > 0L)
-          throw new IllegalArgumentException(
-            s"merge source has $nullKeys NULL merge-key value(s) in $keys — " +
-              "NULL keys cannot match and would duplicate rows")
-        val distinctKeys = boundsRow.getLong(2 * keys.size + 2)
-        if (distinctKeys < nRows)
-          throw new IllegalArgumentException(
-            s"merge source has ${nRows - distinctKeys} duplicate merge-key row(s) " +
-              s"in $keys — which row wins is undefined; reduce the source to one " +
-              "row per key first (e.g. last-write-wins on a version column)")
-        val pred = keys.zipWithIndex.map { case (k, i) =>
-          LakePredicate.And(
-            LakePredicate.Ge(k, boundsRow.get(2 * i)),
-            LakePredicate.Le(k, boundsRow.get(2 * i + 1)))
-        }.reduceLeft[LakePredicate]((a, b) => LakePredicate.And(a, b))
-        val touched = live.filter(pred.mayMatch(_, meta))
-        val carry = canCarryRowIds(touched)
-        val added =
-          if (!carry) {
-            val kept =
-              if (touched.isEmpty) src.limit(0)
-              else readLive(spark, touched, baseSnap)
-                .join(src.select(keys.map(F.col): _*), keys, "left_anti")
-            writeDataFiles(kept.unionByName(src))
-          } else {
-            // row lineage through the upsert (Iceberg v3: an UPDATE
-            // preserves _row_id): unmatched target rows keep their ids;
-            // a matched source row CONTINUES its target row's id (min
-            // over legal duplicate target keys — deterministic); a
-            // source-only row writes a NULL cell and derives a fresh id
-            // from the new file's own commit range. The target feeds
-            // two consumers (anti-join + id lookup) and persists across
-            // them so the touched files read once.
-            val tgt =
-              (if (touched.isEmpty) src.limit(0).withColumn(LakeTable.RowIdCol,
-                F.lit(null).cast(org.apache.spark.sql.types.LongType))
-              else readLiveWithRowIds(spark, touched, baseSnap)).persist()
-            try {
-              val kept = tgt.join(src.select(keys.map(F.col): _*), keys, "left_anti")
-              val tgtIds = tgt.groupBy(keys.map(F.col): _*)
-                .agg(F.min(F.col(LakeTable.RowIdCol)).as(LakeTable.RowIdCol))
-              val srcWithIds = src.join(tgtIds, keys, "left")
-              writeDataFiles(kept.unionByName(srcWithIds), carryRowIds = true)
-            } finally tgt.unpersist(blocking = false)
-          }
-        // serializable: a racing append inside the key bounds would leave
-        // duplicate live keys after this upsert — fail and retry instead
-        commitSnapshot("overwrite", added, touched,
-          validateAddedSince = Some((base, pred)), exactlyOnce = exactlyOnce,
-          toBranch = branch, lineageCarried = carry)
-      }
-    } finally src.unpersist(blocking = false)
-  }
-
-  /** MERGE-ON-READ keyed upsert (the Flink-into-Iceberg CDC shape):
-    * ONE commit ships the source rows as new data files AND an
-    * equality-delete file of their keys — the table is never read, so
-    * the write cost is O(source) regardless of table size, where the
-    * copy-on-write [[mergeInto]] rewrites every key-overlapping file.
-    * Old same-key rows die by seq comparison at read time (tombstones
-    * apply only to data files with strictly smaller seq, so this
-    * commit's own rows survive its own tombstones); [[compact]]
-    * materializes the state back into clean files.
-    *
-    * Needs NO conflict validation: two racing MoR upserts both land,
-    * and whichever commits later holds the larger seq — its tombstones
-    * beat the earlier rows, exactly the serial order the CAS decided.
-    * Source contract as for [[mergeInto]] (table schema, distinct
-    * non-NULL keys — reduce a versioned feed upstream). */
-  def mergeIntoMoR(spark: SparkSession, source: DataFrame, keys: Seq[String],
-      exactlyOnce: Option[(String, Long)] = None,
-      branch: Option[String] = None): CommitReport = {
-    import org.apache.spark.sql.{functions => F}
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains), s"bad merge keys $keys")
-    // simpleString comparison: StructField equality includes METADATA,
-    // and a source derived from this table's own scan carries nested
-    // parquet.field.id metadata inside struct types — identical schemas
-    // would spuriously refuse under exact DataType equality
-    require(source.schema.fields.map(f => (f.name, f.dataType.simpleString))
-      .sameElements(schema.fields.map(f => (f.name, f.dataType.simpleString))),
-      s"merge source schema mismatch: ${source.schema.simpleString}")
-    // branch validity check up-front (the commit transform re-checks
-    // inside the CAS; this turns a typo into a fast failure instead of
-    // a full source write whose files become orphans)
-    lineageBase(branch)
-    val src = source.persist()
-    try {
-      val aggs = Seq(F.count(F.lit(1)),
-        F.sum(keys.map(k => F.when(F.col(k).isNull, 1L).otherwise(0L)).reduce(_ + _)),
-        F.count_distinct(F.struct(keys.map(F.col): _*)))
-      val row = src.agg(aggs.head, aggs.tail: _*).head()
-      val nRows = row.getLong(0)
-      if (nRows == 0L) commitSnapshot("overwrite", Nil, Nil, exactlyOnce = exactlyOnce,
-        toBranch = branch)
-      else {
-        if (row.getLong(1) > 0L)
-          throw new IllegalArgumentException(
-            s"merge source has ${row.getLong(1)} NULL merge-key value(s) in $keys — " +
-              "NULL keys cannot match and would duplicate rows")
-        if (row.getLong(2) < nRows)
-          throw new IllegalArgumentException(
-            s"merge source has ${nRows - row.getLong(2)} duplicate merge-key row(s) " +
-              s"in $keys — which row wins is undefined; reduce the source to one " +
-              "row per key first (e.g. last-write-wins on a version column)")
-        val added = writeDataFiles(src)
-        // the tombstone parquet carries the keys' FIELD IDS, read back
-        // through the same ID-matching path as data — renames never
-        // detach live tombstones
-        val idSchema = meta.schemaWithFieldIds
-        val dir = s"$location/data/${UUID.randomUUID}"
-        org.apache.spark.sql.graftbridge.SessionBridge
-          .withConfs(
-            src.select(keys.map(k =>
-              src.col(k).as(k, idSchema(idSchema.fieldIndex(k)).metadata)): _*),
-            Map(
-              "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-              "spark.sql.parquet.fieldId.write.enabled" -> "true"))
-          .write.parquet(dir)
-        val keySchema = StructType(keys.map(k => schema(schema.fieldIndex(k))).toArray)
-        val eqEntries = StatsHarvester
-          .harvest(spark, dir, keySchema, Nil, meta.fieldIds.view.filterKeys(keys.contains).toMap)
-          .filter(_.recordCount > 0L)
-          .map(_.copy(eqFieldIds = keys.map(meta.fieldIds)))
-        commitSnapshot("overwrite", added, Nil,
-          addedEqDeletes = eqEntries, exactlyOnce = exactlyOnce, toBranch = branch)
-      }
-    } finally src.unpersist(blocking = false)
-  }
-
-  /** Exactly-once streaming twin of [[mergeIntoMoR]] — same (sinkId,
-    * batchId) ledger and in-CAS decisive check as the other sinks. */
-  def mergeIntoMoRExactlyOnce(spark: SparkSession, source: DataFrame,
-      keys: Seq[String], sinkId: String, batchId: Long): Option[CommitReport] = {
-    refresh()
-    if (lastCommittedBatchId(sinkId).exists(_ >= batchId)) None
-    else
-      try Some(mergeIntoMoR(spark, source, keys, exactlyOnce = Some((sinkId, batchId))))
-      catch { case _: BatchAlreadyCommitted => None }
-  }
-
-  /** FULL-GRAMMAR conditional MERGE (copy-on-write): the general
-    * `MERGE INTO` shape SQL users write on day one of a CDC feed —
-    *
-    * {{{
-    *   WHEN MATCHED [AND c1] THEN UPDATE SET ... | DELETE      (× N, first match wins)
-    *   WHEN NOT MATCHED [AND c2] THEN INSERT ...               (× N, first match wins)
-    *   WHEN NOT MATCHED BY SOURCE [AND c3] THEN UPDATE | DELETE (× N, first match wins)
-    * }}}
-    *
-    * where [[mergeInto]] handles only the canonical unconditional
-    * upsert (and keeps its O(source) merge-on-read twin). Clause
-    * conditions/values are Columns over the prefixed `__t_*`/`__s_*`
-    * namespace — see [[MergeClauseSpec]]. Matched rows with no
-    * applicable clause KEEP their old values; unmatched source rows
-    * with no applicable insert clause are dropped; target rows
-    * unmatched by source keep unless a NOT-MATCHED-BY-SOURCE clause
-    * applies. All conditions evaluate against the OLD target row.
-    *
-    * Scale shape: ONE pass. Files to rewrite = those whose stats may
-    * overlap the source's key bounds (one driver-side agg row computes
-    * them), UNION — only when NOT-MATCHED-BY-SOURCE clauses exist —
-    * those that may hold a row satisfying `nmbsPrune` (a LENIENT
-    * may-match predicate the caller derives from the clause
-    * conditions; AlwaysTrue for an unconditional clause, which is
-    * inherently a full-table operation). The rewrite itself is one
-    * distributed full-outer join on the keys; untouched files are
-    * carried by reference. Serializable: a racing commit adding rows
-    * inside the key bounds (or matching `nmbsPrune`) fails validation
-    * and retries against fresh metadata.
-    *
-    * Source contract: merge keys must be DISTINCT among non-NULL-key
-    * rows (which row wins is undefined otherwise — reduce a versioned
-    * feed first). NULL-key source rows match nothing and fall through
-    * to the NOT MATCHED clauses, standard SQL semantics. Unlike
-    * [[mergeInto]] the source need not match the table schema: insert
-    * clauses compute every column explicitly (missing → NULL). */
-  def mergeIntoConditional(spark: SparkSession, source: DataFrame,
-      keys: Seq[String],
-      matched: Seq[MergeClauseSpec],
-      notMatched: Seq[MergeClauseSpec],
-      notMatchedBySource: Seq[MergeClauseSpec] = Nil,
-      nmbsPrune: LakePredicate = LakePredicate.AlwaysTrue,
-      conflictRetries: Int = 3,
-      branch: Option[String] = None): CommitReport =
-    conditionalMergeImpl(spark, source, keys, matched, notMatched,
-      notMatchedBySource, nmbsPrune, conflictRetries, branch, mor = false)
-
-  /** MERGE-ON-READ twin of [[mergeIntoConditional]]: instead of
-    * rewriting every key-overlapping file, ONE commit ships positional
-    * tombstones (or DV bitmaps) for only the rows a clause actually
-    * UPDATEs or DELETEs, plus data files carrying the updated/inserted
-    * rows — write cost O(affected + source), while KEEP rows (matched
-    * with no applicable clause, unmatched-by-source with no applicable
-    * clause) cost NOTHING. Unlike the canonical [[mergeIntoMoR]] the
-    * touched files are still READ (clause conditions evaluate against
-    * the OLD row, which equality tombstones never see), so the read
-    * cost is the pruned scan; the WRITE cost is what drops from
-    * O(touched files) to O(affected rows) — the Iceberg
-    * merge-on-read MERGE shape. Same serializable validation. */
-  def mergeIntoConditionalMoR(spark: SparkSession, source: DataFrame,
-      keys: Seq[String],
-      matched: Seq[MergeClauseSpec],
-      notMatched: Seq[MergeClauseSpec],
-      notMatchedBySource: Seq[MergeClauseSpec] = Nil,
-      nmbsPrune: LakePredicate = LakePredicate.AlwaysTrue,
-      conflictRetries: Int = 3,
-      branch: Option[String] = None): CommitReport =
-    conditionalMergeImpl(spark, source, keys, matched, notMatched,
-      notMatchedBySource, nmbsPrune, conflictRetries, branch, mor = true)
-
-  private def conditionalMergeImpl(spark: SparkSession, source: DataFrame,
-      keys: Seq[String],
-      matched: Seq[MergeClauseSpec],
-      notMatched: Seq[MergeClauseSpec],
-      notMatchedBySource: Seq[MergeClauseSpec],
-      nmbsPrune: LakePredicate,
-      conflictRetries: Int,
-      branch: Option[String],
-      mor: Boolean): CommitReport =
-      withConflictRetry(conflictRetries) {
-    import org.apache.spark.sql.{functions => F}
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains), s"bad merge keys $keys")
-    require(keys.forall(source.columns.contains),
-      s"merge source lacks key column(s): ${keys.filterNot(source.columns.contains)}")
-    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
-      "MERGE needs at least one WHEN clause")
-    require(notMatched.forall(!_.isDelete), "WHEN NOT MATCHED cannot DELETE")
-    require(!schema.fieldNames.exists(_.startsWith("__")) &&
-      !source.columns.exists(_.startsWith("__")),
-      "column names starting with __ collide with the merge's join namespace")
-    val (base, live, baseSnap) = lineageBase(branch)
-    // persist: the source feeds the bounds agg AND the join, and must
-    // be ONE consistent snapshot across them (and across conflict
-    // retries — a recomputed non-deterministic source could fall
-    // outside the validated bounds)
-    val src = source.persist()
-    try {
-      val keyNotNull = keys.map(F.col(_).isNotNull).reduce(_ && _)
-      val aggs = keys.flatMap(k => Seq(F.min(F.col(k)), F.max(F.col(k)))) ++ Seq(
-        F.count(F.lit(1)),
-        F.sum(F.when(keyNotNull, 0L).otherwise(1L)),
-        // WHEN without otherwise → NULL, which count_distinct ignores:
-        // distinctness is asserted among non-NULL-key rows only
-        F.count_distinct(F.when(keyNotNull, F.struct(keys.map(F.col): _*))))
-      val boundsRow = src.agg(aggs.head, aggs.tail: _*).head()
-      val nRows = boundsRow.getLong(2 * keys.size)
-      // sum over zero rows is NULL — an empty source has no null keys
-      val nullKeyRows =
-        if (boundsRow.isNullAt(2 * keys.size + 1)) 0L
-        else boundsRow.getLong(2 * keys.size + 1)
-      val distinctKeys = boundsRow.getLong(2 * keys.size + 2)
-      if (distinctKeys < nRows - nullKeyRows)
-        throw new IllegalArgumentException(
-          s"merge source has ${nRows - nullKeyRows - distinctKeys} duplicate " +
-            s"merge-key row(s) in $keys — which row wins is undefined; reduce " +
-            "the source to one row per key first")
-      val keyPred: Option[LakePredicate] =
-        if (nRows - nullKeyRows == 0L) None
-        else Some(keys.zipWithIndex.map { case (k, i) =>
-          LakePredicate.And(
-            LakePredicate.Ge(k, boundsRow.get(2 * i)),
-            LakePredicate.Le(k, boundsRow.get(2 * i + 1)))
-        }.reduceLeft[LakePredicate]((a, b) => LakePredicate.And(a, b)))
-      val nmbsPredOpt =
-        if (notMatchedBySource.isEmpty) None else Some(nmbsPrune)
-      val touchPred: Option[LakePredicate] = (keyPred, nmbsPredOpt) match {
-        case (Some(a), Some(b)) => Some(LakePredicate.Or(a, b))
-        case (a, b) => a.orElse(b)
-      }
-      val touched = touchPred match {
-        case None => Nil
-        case Some(p) => live.filter(p.mayMatch(_, meta))
-      }
-      if (touched.isEmpty && nRows == 0L)
-        // nothing to read, nothing to insert: no-op (ledger still records)
-        commitSnapshot("overwrite", Nil, Nil, toBranch = branch)
-      else {
-        // the MoR variant reads WITH hidden coordinates: affected rows
-        // tombstone by (file, pos) instead of rewriting their files
-        val posFields =
-          if (!mor) Array.empty[org.apache.spark.sql.types.StructField]
-          else Array(
-            org.apache.spark.sql.types.StructField(LakeTable.PosFileCol,
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(LakeTable.PosIdxCol,
-              org.apache.spark.sql.types.LongType))
-        // CoW rewrites carry row lineage: the target reads WITH ids,
-        // UPDATE/KEEP rows persist theirs, INSERT rows write NULL cells
-        // (fresh ids from the new file's commit range). The MoR twin
-        // never rewrites target files, so lineage holds there for free.
-        val carry = !mor && canCarryRowIds(touched)
-        val ridFields =
-          if (!carry) Array.empty[org.apache.spark.sql.types.StructField]
-          else Array(org.apache.spark.sql.types.StructField(
-            LakeTable.RowIdCol, org.apache.spark.sql.types.LongType))
-        val tgtRaw =
-          if (touched.isEmpty)
-            spark.createDataFrame(new java.util.ArrayList[Row](),
-              StructType(schema.fields ++ posFields ++ ridFields))
-          else if (mor) readLivePos(spark, touched,
-            baseSnap.map(_.deleteFiles).getOrElse(Nil),
-            baseSnap.map(_.eqDeleteFiles).getOrElse(Nil),
-            baseSnap.map(_.dvFiles).getOrElse(Nil))
-          else if (carry) readLiveWithRowIds(spark, touched, baseSnap)
-          else readLive(spark, touched, baseSnap)
-        // prefixed namespaces + NON-NULL presence markers: key columns
-        // cannot flag presence (both sides may legally hold NULL keys)
-        val tgt = tgtRaw.select(
-          schema.fieldNames.map(c => F.col(c).as("__t_" + c)).toSeq ++
-            posFields.map(f => F.col(f.name)) ++
-            ridFields.map(f => F.col(f.name)) :+
-            F.lit(1).as("__t__p"): _*)
-        val srcP = src.select(
-          src.columns.map(c => F.col(c).as("__s_" + c)).toSeq :+
-            F.lit(1).as("__s__p"): _*)
-        // NOT a full-outer join: Spark cannot broadcast a full outer, so
-        // it would force a sort-merge SHUFFLE of the entire touched-file
-        // read even for a 1000-row CDC source. Decomposed instead:
-        //   joined  = tgt LEFT OUTER src         (matched + target-only;
-        //             broadcastable build-right when the source is small)
-        //   matched = key-only tgt scan SEMI srcKeys, ≤ |src| rows
-        //             (column-pruned parquet read, broadcastable)
-        //   inserts = src ANTI matched           (source-only rows;
-        //             broadcastable — `matched` is small by construction)
-        // With a small source AQE broadcasts all three and the target
-        // data NEVER shuffles (the key-only scan is the only extra
-        // pass); with a huge source each degrades to the same SMJ the
-        // full-outer would have been. Semantics are identical: NULL
-        // keys match nothing on either side, so they fall out of the
-        // semi/anti exactly as out of the outer join.
-        val skeys = keys.map("__s_" + _)
-        val joined = tgt.join(srcP,
-          keys.map(k => F.col("__t_" + k) === F.col("__s_" + k)).reduce(_ && _),
-          "left_outer")
-        val srcKeyset = srcP.select(skeys.map(F.col): _*).distinct()
-        val matchedKeys = tgtRaw
-          .select(keys.map(k => F.col(k).as("__s_" + k)): _*)
-          .join(srcKeyset, skeys, "left_semi").distinct()
-        val inserts = srcP.join(matchedKeys, skeys, "left_anti")
-          .select(
-            schema.fields.map(f =>
-              F.lit(null).cast(f.dataType).as("__t_" + f.name)).toSeq ++
-              posFields.map(f => F.lit(null).cast(f.dataType).as(f.name)) ++
-              ridFields.map(f => F.lit(null).cast(f.dataType).as(f.name)) ++
-              Seq(F.lit(null).cast("int").as("__t__p")) ++
-              src.columns.map(c => F.col("__s_" + c)) :+
-              F.col("__s__p"): _*)
-        val unioned = joined.unionByName(inserts)
-        // one integer action per row: first clause of the row's family
-        // whose condition is TRUE (NULL counts as false, SQL semantics)
-        val KEEP = 0
-        val DROP = -1
-        def chain(clauses: Seq[MergeClauseSpec], codeBase: Int,
-            default: Int): Column =
-          clauses.zipWithIndex.foldRight(F.lit(default): Column) {
-            case ((c, i), els) =>
-              val code = if (c.isDelete) DROP else codeBase + i
-              c.condition match {
-                case Some(cond) =>
-                  F.when(F.coalesce(cond, F.lit(false)), F.lit(code)).otherwise(els)
-                case None => F.lit(code)
-              }
-          }
-        val tP = F.col("__t__p").isNotNull
-        val sP = F.col("__s__p").isNotNull
-        val act = F.when(tP && sP, chain(matched, 1000, KEEP))
-          .when(sP, chain(notMatched, 2000, DROP)) // source-only
-          .otherwise(chain(notMatchedBySource, 3000, KEEP)) // target-only
-        val actCol = F.col("__act")
-        val outCols = schema.fields.map { f =>
-          val old = F.col("__t_" + f.name)
-          var e: Column = old
-          def overlay(clauses: Seq[MergeClauseSpec], codeBase: Int,
-              insert: Boolean): Unit =
-            clauses.zipWithIndex.foreach { case (c, i) =>
-              if (!c.isDelete) {
-                val v = c.assignments.collectFirst {
-                  case (n, vc) if n == f.name => vc
-                }.getOrElse(if (insert) F.lit(null) else old)
-                e = F.when(actCol === (codeBase + i), v).otherwise(e)
-              }
-            }
-          overlay(matched, 1000, insert = false)
-          overlay(notMatched, 2000, insert = true)
-          overlay(notMatchedBySource, 3000, insert = false)
-          e.cast(f.dataType).as(f.name)
-        }
-        if (!mor) {
-          val withAct = unioned.withColumn("__act", act)
-            .filter(F.col("__act") =!= DROP)
-          val added = writeDataFiles(withAct.select(outCols.toSeq ++
-            ridFields.map(f => F.col(f.name)): _*), carryRowIds = carry)
-          commitSnapshot("overwrite", added, touched,
-            validateAddedSince = touchPred.map(p => (base, p)),
-            toBranch = branch, lineageCarried = carry)
-        } else {
-          // persist: tombstone coordinates AND new rows must come from
-          // ONE evaluation of the joined frame
-          val withAct = unioned.withColumn("__act", act).persist()
-          try {
-            // affected = anything not KEEPing its row as-is; target-
-            // backed affected rows tombstone their old coordinates
-            // (source-only inserts have NULL coordinates and none)
-            val affected = withAct.filter(F.col("__act") =!= KEEP)
-            val coords = affected
-              .filter(F.col(LakeTable.PosFileCol).isNotNull)
-              .select(F.col(LakeTable.PosFileCol).as("file_path"),
-                F.col(LakeTable.PosIdxCol).as("pos"))
-            val (tombs, dvs) =
-              if (dvEnabled)
-                (Nil, writeDeleteVectors(spark, coords,
-                  baseSnap.map(_.dvFiles).getOrElse(Nil)))
-              else {
-                val tombDir = s"$location/data/${UUID.randomUUID}"
-                coords
-                  .repartitionByRange(math.max(1, touched.size / 16),
-                    F.col("file_path"))
-                  .write.parquet(tombDir)
-                (StatsHarvester.harvest(spark, tombDir, LakeTable.DeleteFileSchema,
-                  Nil, LakeTable.DeleteFieldIds).filter(_.recordCount > 0L), Nil)
-              }
-            val newRows = affected.filter(F.col("__act") =!= DROP)
-              .select(outCols.toSeq: _*)
-            val added = writeDataFiles(newRows)
-            commitSnapshot("overwrite", added, Nil, addedDeletes = tombs,
-              addedDvs = dvs,
-              validateAddedSince = touchPred.map(p => (base, p)),
-              toBranch = branch)
-          } finally withAct.unpersist(blocking = false)
-        }
-      }
-    } finally src.unpersist(blocking = false)
-  }
-
-  /** Copy-on-write update: rewrite matching rows with the assignments.
-    * `branch` stages the update on a branch head (WAP for mutations). */
-  def updateWhere(spark: SparkSession, pred: LakePredicate,
-      assignments: Map[String, Column],
-      conflictRetries: Int = 3,
-      branch: Option[String] = None): CommitReport =
-      withConflictRetry(conflictRetries) {
-    val (base, live, snap) = lineageBase(branch)
-    val touched = live.filter(pred.mayMatch(_, meta))
-    if (touched.isEmpty)
-      commitSnapshot("overwrite", Nil, Nil, validateAddedSince = Some((base, pred)),
-        toBranch = branch)
-    else {
-      // an UPDATEd row keeps its stable id (Iceberg v3 row lineage:
-      // updates preserve _row_id) — the id column rides the select
-      val carry = canCarryRowIds(touched)
-      val df =
-        if (carry) readLiveWithRowIds(spark, touched, snap)
-        else readLive(spark, touched, snap)
-      // ONE select applies every assignment against the OLD row (SQL
-      // UPDATE semantics): a sequential withColumn fold would let
-      // `SET a = b, b = a` resolve b's expression against the
-      // already-updated a (no swap, silently wrong, and Map iteration
-      // order made it nondeterministic past 4 assignments)
-      import org.apache.spark.sql.functions.{col => fcol, when => fwhen}
-      // the explicit cast (not `when`'s implicit coercion) pins every
-      // assignment to the DECLARED column type — `SET s.x = 0` must
-      // store a BIGINT x, not narrow the struct to the literal's type
-      val rewritten = df.select(schema.fields.map { f =>
-        assignments.get(f.name)
-          .map(v => fwhen(pred.toColumn, v.cast(f.dataType))
-            .otherwise(fcol(f.name)).as(f.name))
-          .getOrElse(fcol(f.name))
-      }.toSeq ++ (if (carry) Seq(fcol(LakeTable.RowIdCol)) else Nil): _*)
-      val added = writeDataFiles(rewritten, carryRowIds = carry)
-      commitSnapshot("overwrite", added, touched,
-        validateAddedSince = Some((base, pred)), toBranch = branch,
-        lineageCarried = carry)
-    }
   }
 
   // ---- Named refs (Iceberg branch/tag): tags pin history immutably,
@@ -3530,6 +3295,15 @@ final class LakeTable private[lake] (
 }
 
 object LakeTable {
+  /** What one row-level statement commits. */
+  private[lake] final case class RowLevelWrite(
+      added: Seq[DataFileEntry] = Nil,
+      removed: Seq[DataFileEntry] = Nil,
+      posDeletes: Seq[DataFileEntry] = Nil,
+      eqDeletes: Seq[DataFileEntry] = Nil,
+      dvs: Seq[DataFileEntry] = Nil,
+      carried: Boolean = false)
+
   /** The lossless type promotions (Iceberg's schema-evolution set,
     * restricted to what Spark's parquet reader widens natively):
     * integral → strictly wider integral, float → double. */
@@ -3995,11 +3769,7 @@ final class LakeScan private[lake] (
           StructField("_file", StringType, nullable = false),
           StructField("_pos", LongType, nullable = false)) ++ extra))
     } else {
-      val pos = snapshot.map(_.deleteFiles).getOrElse(Nil)
-      val eqs = snapshot.map(_.eqDeleteFiles).getOrElse(Nil)
-      val dvs = snapshot.map(_.dvFiles).getOrElse(Nil)
-      val base = table.readLivePos(spark, files, pos, eqs, dvs,
-        withRowId = withRowId)
+      val base = table.readLivePos(spark, files, snapshot, withRowId = withRowId)
         .filter(pred.toColumn)
         .select(table.schema.fields.map(f => col(f.name).as(f.name, f.metadata)) ++ Seq(
           col(LakeTable.PosFileCol).as("_file"),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{LakeCatalog, LakePredicate, LakeTable, PartitionField}
+import graft.lake.{LakeCatalog, LakePredicate, LakeTable, PartitionField, RowLevelOp}
 
 /** DataSource V2 catalog plugin: makes the lake SQL-visible —
   * `spark.sql("SELECT * FROM <cat>.<ns>.<table>")` — the one surface the
@@ -34,10 +34,10 @@ import graft.lake.{LakeCatalog, LakePredicate, LakeTable, PartitionField}
   * through the V1 bridge into the MANIFEST COMMIT PROTOCOL — an
   * append or atomic-replace snapshot, never a bare parquet write —
   * and historical (AS OF) handles are read-only. `DELETE FROM …
-  * WHERE` routes through the transactional copy-on-write delete when
-  * the whole condition is expressible as manifest predicates (refused
-  * loudly otherwise — never partially applied); UPDATE/MERGE stay on
-  * the transactional Scala API (LakeTable updateWhere/mergeInto).
+  * WHERE` routes through the table's row-level planner when the whole
+  * condition is expressible as manifest predicates (refused loudly
+  * otherwise — never partially applied); UPDATE/MERGE reach the same
+  * planner through [[LakeSqlExtensions]].
   */
 class LakeSqlCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog with ViewCatalog
@@ -883,14 +883,15 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
       }
     }
 
-  /** SQL `DELETE FROM t WHERE …` → the transactional copy-on-write
-    * delete (pruned rewrites, serializable validation, conflict retry —
-    * never a bare file operation). Spark only routes here when
-    * [[canDeleteWhere]] accepted the WHOLE condition, i.e. every filter
-    * has an exact LakePredicate form: the scan path's lenient conversion
-    * (unknown → AlwaysTrue) would make DELETE remove rows the condition
-    * never matched, so unsupported conditions refuse instead (Spark
-    * surfaces the standard cannot-delete analysis error). */
+  /** SQL `DELETE FROM t WHERE …` → the table's row-level planner
+    * (pruned rewrites or position deletes, serializable validation,
+    * conflict retry — never a bare file operation). Spark only routes
+    * here when [[canDeleteWhere]] accepted the WHOLE condition, i.e.
+    * every filter has an exact LakePredicate form: the scan path's
+    * lenient conversion (unknown → AlwaysTrue) would make DELETE remove
+    * rows the condition never matched, so unsupported conditions refuse
+    * instead (Spark surfaces the standard cannot-delete analysis
+    * error). */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     snapshotId.isEmpty && filters.forall(f => toLakePredicateStrict(f).isDefined)
 
@@ -905,14 +906,12 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
       throw new UnsupportedOperationException(
         s"DELETE condition $f has no exact manifest-predicate form")))
       .reduceOption(P.And(_, _)).getOrElse(P.AlwaysTrue)
-    // write.delete.mode routes the same transactional semantics through
-    // positional tombstones (O(deleted rows)) instead of file rewrites
+    // write.delete.mode picks the strategy inside the table's planner:
+    // position deletes (O(deleted rows)) or file rewrites
     val t = lt.refresh()
     Wap.refuseRowLevelStaging(SparkSession.active, "DELETE", t.name)
     val wap = Wap.writeBranch(SparkSession.active, t)
-    if (t.writeMode("delete") == "merge-on-read")
-      t.deleteWhereMoR(SparkSession.active, pred, branch = wap)
-    else t.deleteWhere(SparkSession.active, pred, branch = wap)
+    t.runRowLevel(SparkSession.active, RowLevelOp.delete(pred), wap)
     ()
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 
-import graft.lake.{LakePredicate, LakeTable}
+import graft.lake.{LakePredicate, LakeTable, RowLevelOp}
 
 /** Session extensions that give the lake SQL `UPDATE` and `MERGE INTO`:
   *
@@ -18,11 +18,13 @@ import graft.lake.{LakePredicate, LakeTable}
   * }}}
   *
   * One resolution rule intercepts the analyzed [[UpdateTable]] /
-  * [[MergeIntoTable]] plans over a [[LakeSqlTable]] and re-plans them
-  * onto the TRANSACTIONAL Scala-API operations
-  * ([[LakeTable.updateWhere]] / [[LakeTable.mergeInto]]) — copy-on-write
-  * rewrites of only the overlapping files, serializable validation
-  * against concurrent commits, conflict retry. This is the analyzer-rule
+  * [[MergeIntoTable]] / DELETE plans over a [[LakeSqlTable]] and
+  * re-plans them as driver commands that hand one [[RowLevelOp]] to
+  * the table's row-level planner (`LakeTable.runRowLevel`): the
+  * table's `write.<op>.mode` picks copy-on-write rewrites of only the
+  * overlapping files or merge-on-read position deletes, with
+  * serializable validation against concurrent commits and conflict
+  * retry either way. This is the analyzer-rule
   * command shape (the approach Delta Lake shipped for years) rather than
   * DSv2 `SupportsRowLevelOperations`: Spark's group-based rewrite plan
   * (`ReplaceData`) has no V1 write fallback, so that route demands a
@@ -971,9 +973,9 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
     }.distinct
 }
 
-/** `UPDATE t SET ... WHERE ...` as a driver command on the transactional
-  * copy-on-write update: only files whose stats may match are rewritten,
-  * racing commits that add matching rows fail validation and retry. */
+/** `UPDATE t SET ... WHERE ...` as a driver command on the table's
+  * row-level planner: only files whose stats may match are read, racing
+  * commits that add matching rows fail validation and retry. */
 final case class LakeUpdateCommand(
     table: LakeTable,
     pred: LakePredicate,
@@ -994,18 +996,17 @@ final case class LakeUpdateCommand(
     val t = table.refresh()
     Wap.refuseRowLevelStaging(spark, "UPDATE", t.name)
     val wap = Wap.writeBranch(spark, t)
-    if (t.writeMode("update") == "merge-on-read")
-      t.updateWhereMoR(spark, pred, cols, branch = wap)
-    else t.updateWhere(spark, pred, cols, branch = wap)
+    t.runRowLevel(spark, RowLevelOp.update(pred, cols), wap)
     Nil
   }
 }
 
 /** `DELETE FROM t WHERE ...` (strictly-expressible condition) as a
-  * driver command on the transactional delete — the same WAP/write-mode
-  * routing the DataFrame-API SupportsDelete path applies, minus Spark's
-  * V1 filter translation (whose optimizer-inferred conjuncts need not
-  * translate; see the round-16 DELETE rule note). */
+  * driver command on the table's row-level planner — the same WAP
+  * staging and write mode the DataFrame-API SupportsDelete path
+  * applies, minus Spark's V1 filter translation (whose
+  * optimizer-inferred conjuncts need not translate; see the round-16
+  * DELETE rule note). */
 final case class LakeDeleteCommand(
     table: LakeTable,
     pred: LakePredicate) extends LeafRunnableCommand {
@@ -1014,18 +1015,15 @@ final case class LakeDeleteCommand(
     val t = table.refresh()
     Wap.refuseRowLevelStaging(spark, "DELETE", t.name)
     val wap = Wap.writeBranch(spark, t)
-    if (t.writeMode("delete") == "merge-on-read")
-      t.deleteWhereMoR(spark, pred, branch = wap)
-    else t.deleteWhere(spark, pred, branch = wap)
+    t.runRowLevel(spark, RowLevelOp.delete(pred), wap)
     Nil
   }
 }
 
 /** `MERGE INTO t USING s ON ... ` (canonical upsert) as a driver command
-  * on the transactional keyed merge: source rows replace same-key rows,
-  * unmatched source rows insert, only key-range-overlapping files are
-  * rewritten, and a racing append inside the key bounds fails validation
-  * and retries. */
+  * on the table's row-level planner: source rows replace same-key rows
+  * and unmatched source rows insert ([[LakeTable.mergeInto]] /
+  * [[LakeTable.mergeIntoMoR]], as `write.merge.mode` picks). */
 final case class LakeMergeCommand(
     table: LakeTable,
     source: LogicalPlan,
@@ -1040,9 +1038,7 @@ final case class LakeMergeCommand(
       org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
     Wap.refuseRowLevelStaging(spark, "MERGE", t.name)
     val wap = Wap.writeBranch(spark, t)
-    if (t.writeMode("merge") == "merge-on-read")
-      t.mergeIntoMoR(spark, src, keys, branch = wap)
-    else t.mergeInto(spark, src, keys, branch = wap)
+    t.runRowLevel(spark, RowLevelOp.Merge(src, keys, None), wap)
     Nil
   }
 }
@@ -1091,7 +1087,7 @@ private[sql] object LakeSubqueryEval {
 }
 
 /** `UPDATE … WHERE <subquery condition>` / `DELETE … WHERE <subquery
-  * condition>` as a driver command on the FLAGGED copy-on-write rewrite
+  * condition>` as a driver command on the planner's FLAGGED row mark
   * ([[LakeTable.updateWhereFlagged]]/[[LakeTable.deleteWhereFlagged]]):
   * each subquery conjunct joins the touched-files read against the
   * subquery's DISTINCT keys (left-outer + presence marker, so row
@@ -1230,24 +1226,17 @@ final case class LakeRowLevelSubqueryCommand(
     val t = table.refresh()
     Wap.refuseRowLevelStaging(spark, verb, t.name)
     val wap = Wap.writeBranch(spark, t)
-    // the table's write.delete/update.mode routes exactly like the
-    // predicate paths: merge-on-read ships O(matched) tombstones, copy-
-    // on-write rewrites the touched files
-    if (verb == "DELETE") {
-      if (t.writeMode("delete") == "merge-on-read")
-        t.deleteWhereFlaggedMoR(spark, prune, flagFn(spark), branch = wap)
-      else t.deleteWhereFlagged(spark, prune, flagFn(spark), branch = wap)
-    } else {
-      val cols = assignments.map { case (name, value) =>
+    // the table's write.delete/update.mode picks the strategy exactly
+    // as for the predicate paths
+    val op =
+      if (verb == "DELETE") RowLevelOp.Delete(prune, flagFn(spark))
+      else RowLevelOp.Update(prune, flagFn(spark), assignments.map { case (name, value) =>
         name -> ColumnBridge.column(
           LakeSubqueryEval.resolveScalars(spark, value).transform {
             case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
           })
-      }.toMap
-      if (t.writeMode("update") == "merge-on-read")
-        t.updateWhereFlaggedMoR(spark, prune, flagFn(spark), cols, branch = wap)
-      else t.updateWhereFlagged(spark, prune, flagFn(spark), cols, branch = wap)
-    }
+      }.toMap)
+    t.runRowLevel(spark, op, wap)
     Nil
   }
 }
@@ -1264,8 +1253,8 @@ final case class LakeMergeClause(
 
 /** `MERGE INTO` in its FULL grammar — clause conditions, WHEN MATCHED
   * DELETE, multiple first-match-wins clauses per family, WHEN NOT
-  * MATCHED BY SOURCE — as a driver command on the transactional
-  * conditional merge. `write.merge.mode` routes the strategy:
+  * MATCHED BY SOURCE — as a driver command on the row-level planner's
+  * conditional merge. `write.merge.mode` picks the strategy:
   * copy-on-write rewrites the key/condition-overlapping files
   * ([[LakeTable.mergeIntoConditional]]); merge-on-read reads them but
   * WRITES only O(affected rows) — positional tombstones plus
@@ -1294,17 +1283,10 @@ final case class LakeConditionalMergeCommand(
         c.assignments.map { case (n, e) => n -> ColumnBridge.column(e) })
     Wap.refuseRowLevelStaging(spark, "MERGE", t.name)
     val wap = Wap.writeBranch(spark, t)
-    // write.merge.mode routes like the canonical path: merge-on-read
-    // tombstones only the affected rows, copy-on-write rewrites the
-    // touched files
-    if (t.writeMode("merge") == "merge-on-read")
-      t.mergeIntoConditionalMoR(spark, PlanBridge.ofRows(spark, source), keys,
-        matched.map(toSpec), notMatched.map(toSpec),
-        notMatchedBySource.map(toSpec), nmbsPrune, branch = wap)
-    else
-      t.mergeIntoConditional(spark, PlanBridge.ofRows(spark, source), keys,
-        matched.map(toSpec), notMatched.map(toSpec),
-        notMatchedBySource.map(toSpec), nmbsPrune, branch = wap)
+    // write.merge.mode picks the strategy as for the canonical path
+    t.runRowLevel(spark, RowLevelOp.Merge(PlanBridge.ofRows(spark, source), keys,
+      Some(RowLevelOp.MergeClauses(matched.map(toSpec), notMatched.map(toSpec),
+        notMatchedBySource.map(toSpec), nmbsPrune))), wap)
     Nil
   }
 }

@@ -38,11 +38,22 @@ class ConditionalMergeHardeningSpec extends LakeSuite {
         notMatched = Seq(MergeClauseSpec(None, isDelete = false,
           Seq("id" -> col("__s_id"), "v" -> col("__s_v")))),
         conflictRetries = 0))
-    // with retries (default) the merge re-reads fresh metadata and lands
-    stale.mergeIntoConditional(spark, src, Seq("id"),
+    // with retries (default) the merge re-reads fresh metadata and lands.
+    // The handle is still stale, so the first attempt conflicts again;
+    // the source (same rows, each evaluation counted) must be evaluated
+    // ONCE across the attempts — it persists outside the retry loop
+    assert(stale.currentSnapshotId != t.refresh().currentSnapshotId)
+    val evals = spark.sparkContext.longAccumulator("merge-source-evals")
+    val counted = udf((v: Long) => { evals.add(1L); v })
+    val srcCounted = spark.range(2).select(
+      when(col("id") === 0L, 5L).otherwise(15L).as("id"),
+      counted(when(col("id") === 0L, 500L).otherwise(1500L)).as("v"))
+    stale.mergeIntoConditional(spark, srcCounted, Seq("id"),
       matched = upd(col("__s_v")),
       notMatched = Seq(MergeClauseSpec(None, isDelete = false,
         Seq("id" -> col("__s_id"), "v" -> col("__s_v")))))
+    assert(evals.value === 2L,
+      s"source rows evaluated ${evals.value} times across a conflict retry, want 2")
     val got = cat.loadTable("ns", "cmrace").newScan().toDF(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got(5L) === 500L && got(15L) === 1500L)

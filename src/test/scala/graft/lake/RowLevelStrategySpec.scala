@@ -137,4 +137,19 @@ class RowLevelStrategySpec extends LakeSuite {
     }
     assert(n == strategies.size * 2 * ops.size)
   }
+
+  test("a table column named __match is refused, never overwritten by the row mark") {
+    val cat = LakeCatalog.open(freshWarehouse())
+    val s = StructType(Seq(StructField("id", LongType), StructField("__Match", StringType)))
+    val t = cat.createTable("ns", "mark", s)
+    t.appendData(spark.createDataFrame(new java.util.ArrayList[Row](
+      Seq(Row(1L, "a"), Row(2L, "b")).asJava0), s))
+    val before = t.refresh().currentSnapshotId
+    val e = intercept[IllegalArgumentException](
+      t.refresh().updateWhere(spark, LakePredicate.Eq("id", 1L), Map("id" -> lit(9L))))
+    assert(e.getMessage.contains("__match"))
+    assert(t.refresh().currentSnapshotId == before)
+    assert(t.refresh().newScan().toDF(spark).collect().map(_.getString(1)).sorted.toSeq ==
+      Seq("a", "b"))
+  }
 }

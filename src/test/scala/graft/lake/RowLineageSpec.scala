@@ -74,23 +74,39 @@ class RowLineageSpec extends LakeSuite {
     assert(lineageIds(t) == withNew, "second compaction moved ids")
   }
 
-  test("CoW delete/update/merge carry ids; inserts draw fresh ones") {
+  /** Delete, update and merge under one strategy: survivors and
+    * updated rows keep their ids, merge-inserted rows draw fresh ones.
+    * Merge-on-read merges through the conditional MERGE — the canonical
+    * merge-on-read upsert never reads the target, so it has no ids to
+    * carry. */
+  private def carriesIds(table: String, mor: Boolean, dvs: Boolean): Unit = {
     val cat = LakeCatalog.open(freshWarehouse())
-    val t = cat.createTable("ns", "rlm", ordersDF.schema)
+    val t = cat.createTable("ns", table, ordersDF.schema)
+    if (dvs) t.setProperty("write.delete.vector.enabled", "true")
     t.refresh().appendData(ordersDF, numFiles = 3)
     val before = lineageIds(t)
-    // CoW delete: survivors keep ids even inside rewritten files
-    t.refresh().deleteWhere(spark, LakePredicate.Eq("o_orderstatus", "F"))
+    val kind = if (!mor) "CoW" else if (dvs) "MoR (DVs)" else "MoR (tombstones)"
+    // delete: survivors keep ids even inside rewritten files
+    val delPred = LakePredicate.Eq("o_orderstatus", "F")
+    if (mor) t.refresh().deleteWhereMoR(spark, delPred)
+    else t.refresh().deleteWhere(spark, delPred)
     val afterDel = lineageIds(t)
     assert(afterDel.size < before.size, "delete removed nothing — fixture drift")
     afterDel.foreach { case (k, rid) =>
-      assert(before(k) == rid, s"CoW delete moved id of key $k") }
-    // CoW update: an updated row KEEPS its id (Iceberg v3 semantics)
-    t.refresh().updateWhere(spark, LakePredicate.Eq("o_orderstatus", "O"),
-      Map("o_orderpriority" -> lit("9-CARRIED")))
+      assert(before(k) == rid, s"$kind delete moved id of key $k") }
+    // update: an updated row KEEPS its id (Iceberg v3 semantics)
+    val updPred = LakePredicate.Eq("o_orderstatus", "O")
+    val set = Map("o_orderpriority" -> lit("9-CARRIED"))
+    if (mor) t.refresh().updateWhereMoR(spark, updPred, set)
+    else t.refresh().updateWhere(spark, updPred, set)
     val afterUpd = lineageIds(t)
-    assert(afterUpd == afterDel, "CoW update moved ids")
-    // CoW merge upsert: matched rows continue the target id, inserted
+    val moved = afterDel.filter { case (k, rid) => !afterUpd.get(k).contains(rid) }
+    assert(afterUpd.size == afterDel.size && moved.isEmpty,
+      s"$kind update moved ${moved.size} ids, e.g. keys ${moved.keys.take(3).mkString(", ")}")
+    assert(t.refresh().newScan().toDF(spark)
+      .filter(col("o_orderpriority") === "9-CARRIED").count() > 0L,
+      "update changed nothing — fixture drift")
+    // merge upsert: matched rows continue the target id, inserted
     // rows draw fresh ids above the old high-water mark
     val mark = t.refresh().metadata.nextRowId
     val someKey = afterUpd.keysIterator.next()
@@ -99,14 +115,32 @@ class RowLineageSpec extends LakeSuite {
       .withColumn("o_totalprice", lit(1.23))
       .unionByName(t.refresh().newScan().toDF(spark).limit(1)
         .withColumn("o_orderkey", lit(999999999L)))
-    t.refresh().mergeInto(spark, src, Seq("o_orderkey"))
+    if (!mor) t.refresh().mergeInto(spark, src, Seq("o_orderkey"))
+    else t.refresh().mergeIntoConditionalMoR(spark, src, Seq("o_orderkey"),
+      matched = Seq(MergeClauseSpec(None, isDelete = false,
+        Seq("o_totalprice" -> col("__s_o_totalprice")))),
+      notMatched = Seq(MergeClauseSpec(None, isDelete = false,
+        ordersDF.schema.fieldNames.toSeq.map(c => c -> col("__s_" + c)))))
     val afterMerge = lineageIds(t)
     assert(afterMerge(someKey) == afterUpd(someKey),
-      "merge UPDATE must preserve the matched row's id")
+      s"$kind merge UPDATE must preserve the matched row's id")
     assert(afterMerge(999999999L) >= mark,
-      "merge INSERT must draw a fresh id above the prior high-water mark")
+      s"$kind merge INSERT must draw a fresh id above the prior high-water mark")
     afterUpd.foreach { case (k, rid) =>
-      assert(afterMerge(k) == rid, s"merge moved id of untouched key $k") }
+      assert(afterMerge(k) == rid, s"$kind merge moved id of untouched key $k") }
+    assert(afterMerge.values.toSet.size == afterMerge.size, "ids must stay unique")
+  }
+
+  test("CoW delete/update/merge carry ids; inserts draw fresh ones") {
+    carriesIds("rlm", mor = false, dvs = false)
+  }
+
+  test("MoR (tombstones) delete/update/merge carry ids; inserts draw fresh ones") {
+    carriesIds("rlmt", mor = true, dvs = false)
+  }
+
+  test("MoR (DVs) delete/update/merge carry ids; inserts draw fresh ones") {
+    carriesIds("rlmd", mor = true, dvs = true)
   }
 
   test("a flag transform that drops _row_id breaks lineage loudly and stays broken") {
