@@ -3,6 +3,7 @@ package graft.lake
 import java.util.UUID
 import graft.lake.LakeTable.RowLevelWrite
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.ManifestFileIndex
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -322,8 +323,10 @@ final class LakeTable private[lake] (
     column(ZOrderKey(meta.sortOrder.map(c => expression(df.col(c))), bounds))
   }
 
-  /** All lake file reads go through here: the requested schema carries
-    * the manifest's parquet field IDs and the read happens on a cloned
+  /** All lake file reads go through here. The files are the manifest
+    * entries themselves ([[ManifestFileIndex]]: recorded paths and
+    * sizes, nothing listed or re-checked), the requested schema carries
+    * the manifest's parquet field IDs, and the read happens on a cloned
     * session with ID-based matching on, so files written before a
     * column rename still resolve that column by ID (name matching would
     * silently project null). Fields whose ID is absent fall back to
@@ -356,8 +359,8 @@ final class LakeTable private[lake] (
       withPos: Boolean, withRowId: Boolean = false): DataFrame = {
     val (mapped, native) = files.partition(_.nameMapped)
     val parts =
-      (if (native.nonEmpty) Seq(readIdFiles(spark, native.map(_.path), withPos, withRowId)) else Nil) ++
-        (if (mapped.nonEmpty) Seq(readMappedFiles(spark, mapped.map(_.path), withPos, withRowId)) else Nil)
+      (if (native.nonEmpty) Seq(readIdFiles(spark, native, withPos, withRowId)) else Nil) ++
+        (if (mapped.nonEmpty) Seq(readMappedFiles(spark, mapped, withPos, withRowId)) else Nil)
     if (parts.isEmpty) {
       // zero files: an empty frame under the table schema (+ pos
       // columns), not an opaque empty.reduce crash for a future caller
@@ -399,7 +402,7 @@ final class LakeTable private[lake] (
   private def readConfs: Map[String, String] =
     Map("spark.sql.parquet.fieldId.read.enabled" -> "true")
 
-  private def readIdFiles(spark: SparkSession, paths: Seq[String],
+  private def readIdFiles(spark: SparkSession, files: Seq[DataFileEntry],
       withPos: Boolean, withRowId: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val posCols = if (withPos) Seq(
@@ -414,9 +417,9 @@ final class LakeTable private[lake] (
         meta.schemaWithFieldIds.fields :+ LakeTable.rowIdField)
     val ridCols = if (withRowId)
       Seq(col(LakeTable.RowIdCol).as(LakeTable.MatRidCol)) else Nil
-    org.apache.spark.sql.graftbridge.SessionBridge
-      .sessionWithConfs(spark, readConfs)
-      .read.schema(reqSchema).parquet(paths: _*)
+    ManifestFileIndex.read(
+      org.apache.spark.sql.graftbridge.SessionBridge.sessionWithConfs(spark, readConfs),
+      files, reqSchema)
       // strip the injected metadata so scan outputs carry the user's schema
       .select(schema.fields.map(f => col(f.name).as(f.name, f.metadata)) ++
         posCols ++ ridCols: _*)
@@ -429,7 +432,7 @@ final class LakeTable private[lake] (
     * of accidentally name-matching unrelated file bytes. Requested
     * types are the CURRENT schema's, so post-import type widening rides
     * parquet's native by-name widening. */
-  private def readMappedFiles(spark: SparkSession, paths: Seq[String],
+  private def readMappedFiles(spark: SparkSession, files: Seq[DataFileEntry],
       withPos: Boolean, withRowId: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val idToImported = meta.nameMapping.map(_.swap)
@@ -453,10 +456,10 @@ final class LakeTable private[lake] (
     val ridCols = if (withRowId) Seq(lit(null)
       .cast(org.apache.spark.sql.types.LongType)
       .as(LakeTable.MatRidCol)) else Nil
-    org.apache.spark.sql.graftbridge.SessionBridge
-      .sessionWithConfs(spark,
-        readConfs + ("spark.sql.parquet.fieldId.read.enabled" -> "false"))
-      .read.schema(reqSchema).parquet(paths: _*)
+    ManifestFileIndex.read(
+      org.apache.spark.sql.graftbridge.SessionBridge.sessionWithConfs(spark,
+        readConfs + ("spark.sql.parquet.fieldId.read.enabled" -> "false")),
+      files, reqSchema)
       .select(resolution.map {
         case (f, Some(imp)) => col(imp).as(f.name, f.metadata)
         // a field added (with default) after import has no mapping
@@ -508,8 +511,7 @@ final class LakeTable private[lake] (
     if (dvHits.nonEmpty) df = subtractDvs(spark, df, dvHits)
     val pos = LakeTable.narrowPosDeletes(snap.toSeq.flatMap(_.deleteFiles), paths)
     if (pos.nonEmpty) {
-      val tombstones = spark.read.schema(LakeTable.DeleteFileSchema)
-        .parquet(pos.map(_.path): _*)
+      val tombstones = ManifestFileIndex.read(spark, pos, LakeTable.DeleteFileSchema)
       df = df.join(gateBroadcast(tombstones, pos),
         col(LakeTable.PosFileCol) === col("file_path") &&
           col(LakeTable.PosIdxCol) === col("pos"),
@@ -615,7 +617,7 @@ final class LakeTable private[lake] (
       // tombstone's own sequence number joins back in from a tiny
       // path→seq broadcast keyed on the reader's file_path metadata.
       val tombSeq = pathSeqLookup(spark, entries, "__eq_seq_path", LakeTable.EqSeqCol)
-      val tomb = session.read.schema(reqSchema).parquet(entries.map(_.path): _*)
+      val tomb = ManifestFileIndex.read(session, entries, reqSchema)
         .select(names.map(n => col(n).as(s"__eq_$n")) :+
           col("_metadata.file_path").as("__eq_path"): _*)
         .join(broadcast(tombSeq), col("__eq_path") === col("__eq_seq_path"))
@@ -1528,8 +1530,7 @@ final class LakeTable private[lake] (
       // DV targets come straight from the manifest entries — zero IO
       val posTargets: Set[String] =
         (if (pos.isEmpty) Set.empty[String]
-        else spark.read.schema(LakeTable.DeleteFileSchema)
-          .parquet(pos.map(_.path): _*)
+        else ManifestFileIndex.read(spark, pos, LakeTable.DeleteFileSchema)
           .select("file_path").distinct()
           .collect().map(_.getString(0)).toSet) ++
           dvs.map(LakeTable.dvRef)
@@ -2512,8 +2513,7 @@ final class LakeTable private[lake] (
     val newPos = s.deleteFiles.filterNot(e => pPos(e.path))
     if (newPos.nonEmpty) {
       val referenced = LakeTable.narrowDataToDeletes(pFiles, newPos)
-      val coords = spark.read.schema(LakeTable.DeleteFileSchema)
-        .parquet(newPos.map(_.path): _*)
+      val coords = ManifestFileIndex.read(spark, newPos, LakeTable.DeleteFileSchema)
       deletes += stampChange(
         readFilesWithPos(spark, referenced).join(gateBroadcast(coords, newPos),
           col(LakeTable.PosFileCol) === col("file_path") &&
@@ -2566,7 +2566,7 @@ final class LakeTable private[lake] (
         val reqSchema = StructType(names.map(n => idSchema(idSchema.fieldIndex(n))))
         val session = org.apache.spark.sql.graftbridge.SessionBridge
           .sessionWithConfs(spark, Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))
-        val keys = session.read.schema(reqSchema).parquet(entries.map(_.path): _*)
+        val keys = ManifestFileIndex.read(session, entries, reqSchema)
           .select(names.map(n => col(n).as(s"__cl_$n")): _*)
         val parentLive = readLive(spark, pFiles, p)
         // === (not null-safe <=>) to MIRROR applyEqDeletes: a null-keyed

@@ -353,9 +353,9 @@ private[sql] object LakeMetadataTables {
                 .map(e => e.path.substring(e.path.lastIndexOf('/') + 1) -> e.path)
                 .toMap
               import org.apache.spark.sql.functions.input_file_name
-              org.apache.spark.sql.SparkSession.active.read
-                .schema(graft.lake.LakeTable.DeleteFileSchema)
-                .parquet(posFiles.map(_.path): _*)
+              org.apache.spark.sql.graftbridge.ManifestFileIndex.read(
+                org.apache.spark.sql.SparkSession.active, posFiles,
+                graft.lake.LakeTable.DeleteFileSchema)
                 .withColumn("carrier", input_file_name())
                 .collect().toSeq.map { r =>
                   val base = r.getString(2)

@@ -3,6 +3,7 @@ package graft.lake.sql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.graftbridge.ManifestFileIndex
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.{DataFileEntry, LakeTable, Snapshot}
@@ -275,11 +276,11 @@ private[sql] final class LakeMicroBatchStream(
     val startId = start.asInstanceOf[LakeOffset].snapshotId
     val endId = end.asInstanceOf[LakeOffset].snapshotId
     if (changelogMode) return changelogPartitions(startId, endId)
-    val files = filesBetween(startId, endId)
-    // the shared construction (LakeSqlCatalog.mkParquetTable): a reader
-    // conf change reaches batch and streaming together
-    val table = LakeSqlCatalog.mkParquetTable(lt, session, files.map(_.path))
-    lastBatch = table.newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
+    // the shared scan over the manifest's own file list
+    // (LakeSqlCatalog.scanBuilder): no listing of the range's files, and
+    // a reader conf change reaches batch and streaming together
+    lastBatch = LakeSqlCatalog.scanBuilder(lt, session, filesBetween(startId, endId))
+      .build().toBatch
     lastBatch.planInputPartitions()
   }
 
@@ -450,8 +451,7 @@ private[sql] final class LakeMicroBatchStream(
     * Driver-side and budget-gated by the caller. */
   private def loadPosBitmaps(entries: Seq[DataFileEntry]): Map[String, graft.lake.DeleteVector] = {
     if (entries.isEmpty) return Map.empty
-    session.read.schema(LakeTable.DeleteFileSchema)
-      .parquet(entries.map(_.path): _*)
+    ManifestFileIndex.read(session, entries, LakeTable.DeleteFileSchema)
       .collect()
       .groupBy(_.getString(0)).view.mapValues { rows =>
         graft.lake.DeleteVector.fromSorted(
@@ -506,7 +506,7 @@ private[sql] final class LakeMicroBatchStream(
       val sess = org.apache.spark.sql.graftbridge.SessionBridge
         .sessionWithConfs(session,
           Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))
-      val rows = sess.read.schema(reqSchema).parquet(es.map(_.path): _*).collect()
+      val rows = ManifestFileIndex.read(sess, es, reqSchema).collect()
       val converters = reqSchema.fields.map(f =>
         org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(f.dataType))
@@ -530,8 +530,10 @@ private[sql] final class LakeMicroBatchStream(
     // changelog batch's file count is bounded by its commit, so the
     // per-file plan cost is the commit's own scale.
     files.flatMap { f =>
-      val table = LakeSqlCatalog.mkChangesParquetTable(lt, session, f.path)
-      val batch = table.newScanBuilder(CaseInsensitiveStringMap.empty())
+      val batch = LakeSqlCatalog.scanBuilder(lt, session, Seq(f),
+        extraFields = Seq(LakeTable.rowIdField,
+          org.apache.spark.sql.types.StructField("_tmp_metadata_row_index",
+            org.apache.spark.sql.types.LongType)))
         .build().toBatch
       // the parquet factory is file-list-agnostic (paths ride in the
       // partitions) but each file ships its own, serialized inside

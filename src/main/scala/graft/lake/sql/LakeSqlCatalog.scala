@@ -649,48 +649,33 @@ class LakeSqlCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object LakeSqlCatalog {
-  /** The ONE parquet-table construction every lake read path shares
-    * (batch delegate, SPJ groups, streaming micro-batches): a cloned
-    * session with ID-based parquet matching — files written before a
+  /** The ONE parquet scan construction every lake read path shares
+    * (batch delegate, SPJ groups, streaming micro-batches, changelog
+    * files): Spark's parquet scan over a [[ManifestFileIndex]] of exactly
+    * `entries` (no existence check, no listing), on a cloned session
+    * with ID-based parquet matching — files written before a
     * renameColumn must resolve the renamed column by field ID; on the
     * user's session (fieldId.read.enabled=false default) name matching
     * would silently project NULL for every pre-rename file. A reader
-    * conf added here reaches batch AND streaming together. */
-  private[sql] def mkParquetTable(lt: graft.lake.LakeTable,
-      session: SparkSession, files: Seq[String])
-      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-      lt.name,
-      org.apache.spark.sql.graftbridge.SessionBridge.sessionWithConfs(
-        session, Map("spark.sql.parquet.fieldId.read.enabled" -> "true")),
-      CaseInsensitiveStringMap.empty(),
-      files,
-      Some(lt.metadata.schemaWithFieldIds),
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-
-  /** [[mkParquetTable]] for ONE changelog file, widened by the two
-    * row-lineage feeder columns: the materialized `_row_id` cell
-    * (reserved field id — NULL in files no rewrite has carried ids
-    * into) and Spark's parquet row-index temporary column (the
-    * `_metadata.row_index` mechanism: the parquet reader POPULATES a
-    * requested long column named `_tmp_metadata_row_index`). The
-    * changelog reader resolves `coalesce(cell, firstRowId + index)`
-    * per row and strips both feeders. */
-  private[sql] def mkChangesParquetTable(lt: graft.lake.LakeTable,
-      session: SparkSession, file: String)
-      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-      lt.name,
-      org.apache.spark.sql.graftbridge.SessionBridge.sessionWithConfs(
-        session, Map("spark.sql.parquet.fieldId.read.enabled" -> "true")),
-      CaseInsensitiveStringMap.empty(),
-      Seq(file),
-      Some(org.apache.spark.sql.types.StructType(
-        lt.metadata.schemaWithFieldIds.fields :+
-          graft.lake.LakeTable.rowIdField :+
-          org.apache.spark.sql.types.StructField("_tmp_metadata_row_index",
-            org.apache.spark.sql.types.LongType))),
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+    * conf added here reaches batch AND streaming together.
+    *
+    * The read schema is the table's ID-carrying schema plus
+    * `extraFields`: the changelog stream adds the two row-lineage feeder
+    * columns, the materialized `_row_id` cell (reserved field id — NULL
+    * in files no rewrite has carried ids into) and Spark's parquet
+    * row-index temporary column (the `_metadata.row_index` mechanism:
+    * the parquet reader POPULATES a requested long column named
+    * `_tmp_metadata_row_index`). */
+  private[sql] def scanBuilder(lt: graft.lake.LakeTable, session: SparkSession,
+      entries: Seq[graft.lake.DataFileEntry],
+      options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+      extraFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
+      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder = {
+    val s = org.apache.spark.sql.graftbridge.SessionBridge.sessionWithConfs(
+      session, Map("spark.sql.parquet.fieldId.read.enabled" -> "true"))
+    org.apache.spark.sql.graftbridge.ManifestFileIndex.scanBuilder(s, entries,
+      StructType(lt.metadata.schemaWithFieldIds.fields ++ extraFields), options)
+  }
 
   /** Parse a `write.sort-order` property value — `c1,c2` (linear) or
     * `zorder(c1,c2)` — into (columns, kind). Shared by CREATE TABLE
@@ -825,11 +810,12 @@ private[sql] object Wap {
 
 /** SQL handle on a lake table (optionally at an historical snapshot).
   * Pushed SQL predicates prune at TWO levels: manifest min/max stats
-  * skip whole files BEFORE Spark lists them (the LakeScan.planFiles
-  * path — fires the usual ScanReport, so SQL scans are observable like
-  * API scans), then Spark's native vectorized parquet source applies
-  * row-group/page pushdown and column pruning over the surviving
-  * files. Writes go through the V1 bridge into the MANIFEST COMMIT
+  * skip whole files (the LakeScan.planFiles path — fires the usual
+  * ScanReport, so SQL scans are observable like API scans), then
+  * Spark's native vectorized parquet source applies row-group/page
+  * pushdown and column pruning over the surviving files, which it takes
+  * from the manifest entries as they are (no existence check, no
+  * listing). Writes go through the V1 bridge into the MANIFEST COMMIT
   * PROTOCOL — INSERT INTO is an append commit, INSERT OVERWRITE an
   * atomic full replace — never a bare parquet write that would bypass
   * snapshots/stats/metrics. Historical handles (AS OF) stay read-only. */
@@ -865,14 +851,14 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
     org.apache.spark.sql.connector.expressions.NamedReference,
     org.apache.spark.sql.connector.read.colstats.ColumnStatistics])] = None
 
-  /** For the merge-on-read substitution rule ([[LakeMoRScanSubstitution]]):
-    * a scan of exactly the snapshot this SQL handle addresses (current
-    * or `AS OF`), over the SAME already-loaded metadata the direct
-    * scan-builder path would read — the substitution must not see a
-    * newer snapshot than the relation it replaces. `pred` is the
-    * enclosing filter in lenient manifest form: stats pruning only (the
-    * residual SQL filter re-applies above), so a live-tombstone read
-    * keeps manifest-level file skipping. */
+  /** A scan of exactly the snapshot this SQL handle addresses (current
+    * or `AS OF`), over its already-loaded metadata: the direct scan
+    * builder plans it, and so does the merge-on-read substitution rule
+    * ([[LakeMoRScanSubstitution]]), which must not see a newer snapshot
+    * than the relation it replaces. `pred` is the enclosing filter in
+    * lenient manifest form: stats pruning only (the residual SQL filter
+    * re-applies above), so a live-tombstone read keeps manifest-level
+    * file skipping. */
   private[sql] def fullScan(pred: LakePredicate = LakePredicate.AlwaysTrue)
       : graft.lake.LakeScan =
     snapshotId.map(lt.asOf(_, pred)).getOrElse {
@@ -914,9 +900,6 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
     t.runRowLevel(SparkSession.active, RowLevelOp.delete(pred), wap)
     ()
   }
-
-  private def mkParquetTable(files: Seq[String]) =
-    LakeSqlCatalog.mkParquetTable(lt, SparkSession.active, files)
 
   private def toLakePredicateStrict(
       f: org.apache.spark.sql.sources.Filter): Option[LakePredicate] =
@@ -1135,22 +1118,14 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
     }
   }
 
-  /** Pruned live-file entries for a pushed filter set — shared by the
-    * batch delegate, the SPJ group builder, and (with its own catch)
-    * the statistics estimate. */
+  /** Pruned live-file entries for a filter set — planned once per
+    * built scan and filter set, and shared by the statistics estimate,
+    * the batch delegate and the SPJ groups ([[ScanBridge.delegating]]). */
   private def planEntries(pushed: Array[org.apache.spark.sql.sources.Filter])
       : Seq[graft.lake.DataFileEntry] = {
-    val pred = toLakePredicate(pushed)
-    val scan = snapshotId match {
-      case Some(id) => lt.asOf(id, pred)
-      // spark.wap.branch: audit reads resolve the staged head
-      case None => Wap.readBranch(SparkSession.active, lt) match {
-        case Some(b) => lt.refresh().scanRef(b, pred)
-        case None => lt.newScan(pred)
-      }
-    }
-    // the direct SQL path hands surviving file paths straight to
-    // Spark's parquet source, which cannot subtract tombstones. With
+    val scan = fullScan(toLakePredicate(pushed))
+    // the direct SQL path hands surviving files straight to Spark's
+    // parquet source, which cannot subtract tombstones. With
     // [[LakeSqlExtensions]] installed this builder is never reached
     // for a live-tombstone snapshot ([[LakeMoRScanSubstitution]]
     // re-planned the relation onto the MoR-aware readLive path); this
@@ -1168,17 +1143,16 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
     scan.planFiles
   }
 
-  /** Storage-partitioned-join groups: one (partition-key row, paths)
-    * group per live partition value, clustering by the CURRENT spec's
-    * identity fields. Declines (None → UnknownPartitioning) whenever
-    * exactness is at risk: no identity fields, a non-decodable key
-    * type, or any live file missing a value for an identity source
-    * (e.g. written under an older spec) — grouping such a file under a
-    * wrong key would silently co-locate non-matching rows, the one
-    * failure SPJ must never have. */
-  private def spjGroupsFor(pushed: Array[org.apache.spark.sql.sources.Filter])
-      : Option[(Array[org.apache.spark.sql.connector.expressions.Expression],
-        Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[String])])] =
+  /** Storage-partitioned-join groups over a filter set's planned
+    * entries: one (partition-key row, entries) group per live partition
+    * value, clustering by the CURRENT spec's identity fields. Declines
+    * (None → UnknownPartitioning) whenever exactness is at risk: no
+    * identity fields, a non-decodable key type, or any live file missing
+    * a value for an identity source (e.g. written under an older spec) —
+    * grouping such a file under a wrong key would silently co-locate
+    * non-matching rows, the one failure SPJ must never have. */
+  private def spjGroupsFor(entries: Seq[graft.lake.DataFileEntry])
+      : Option[org.apache.spark.sql.graftbridge.ScanBridge.SpjGroups] =
     try {
       val meta = lt.metadata
       val spec = meta.allSpecs.last
@@ -1245,7 +1219,6 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
       // with an unsupported transform simply declines
       if (fields.isEmpty || fields.size != spec.size) None
       else {
-        val entries = planEntries(pushed)
         val currentSpecId = meta.currentSpecId
         if (entries.isEmpty ||
           !entries.forall(e => e.specId == currentSpecId &&
@@ -1259,7 +1232,7 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
               else Some(
                 (new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
                   decoded.map(_.get).toArray[Any]): org.apache.spark.sql.catalyst.InternalRow,
-                  fs.map(_.path)))
+                  fs))
             }
           if (rows.exists(_.isEmpty)) None
           else Some((fields.map(_._2).toArray, rows.map(_.get)))
@@ -1267,45 +1240,25 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def mkBuilderForPaths(paths: Seq[String],
-      options: CaseInsensitiveStringMap)
-      : org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =
-    mkParquetTable(paths)
-      .newScanBuilder(options)
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScanBuilder]
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    org.apache.spark.sql.graftbridge.ScanBridge.delegating({ pushed =>
-      mkBuilderForPaths(planEntries(pushed).map(_.path), options)
-    },
+    org.apache.spark.sql.graftbridge.ScanBridge.delegating(
+    // statistics are this plan's manifest sums: join planning sees a
+    // small lake dim as small and auto-broadcasts it. MoR tombstones may
+    // make the row count an overestimate — conservative in the right
+    // direction for planning.
+    planFiles = planEntries,
+    mkDelegate = entries =>
+      LakeSqlCatalog.scanBuilder(lt, SparkSession.active, entries, options),
     // streaming reads tail append commits (current handles only; a
     // historical AS OF handle has no future to stream). The stream
     // schema lets the wrapper skip materializing the batch delegate —
-    // a streaming start must not pay batch file planning or hit the
+    // a streaming start must not build the batch scan or hit the
     // live-tombstone batch refusal (it tails appends only)
     mkStream =
       if (snapshotId.isEmpty) Some(_ => new LakeMicroBatchStream(lt, options))
       else None,
     streamReadSchema =
       if (snapshotId.isEmpty) Some(lt.metadata.schemaWithFieldIds) else None,
-    // size/row estimates from manifest sums (no IO) over the SAME
-    // pruned file set the scan reads: join planning sees a small lake
-    // dim as small and auto-broadcasts it. MoR tombstones may make the
-    // row count an overestimate — conservative in the right direction
-    // for planning. Must never throw: estimation is best-effort.
-    stats = Some { pushed =>
-      try {
-        val pred = toLakePredicate(pushed)
-        val files = (snapshotId match {
-          case Some(id) => lt.asOf(id, pred)
-          case None => Wap.readBranch(SparkSession.active, lt) match {
-            case Some(b) => lt.refresh().scanRef(b, pred)
-            case None => lt.newScan(pred)
-          }
-        }).planFiles
-        (files.map(_.sizeBytes).sum, files.map(_.recordCount).sum)
-      } catch { case scala.util.control.NonFatal(_) => (Long.MaxValue, Long.MaxValue) }
-    },
     // best-effort like stats: a declined pushdown is just a normal scan
     aggPushdown = Some { agg =>
       try pushedAggResult(agg)
@@ -1339,8 +1292,7 @@ final class LakeSqlTable(lt: LakeTable, snapshotId: Option[Long] = None)
     // KeyGroupedPartitioning and plan per-partition-value input groups,
     // so two co-partitioned lake tables join with NO shuffle on either
     // side (engaged under spark.sql.sources.v2.bucketing.enabled)
-    spjGroups = Some(pushed => spjGroupsFor(pushed)),
-    mkDelegateForPaths = Some(paths => mkBuilderForPaths(paths, options)))
+    spjGroups = Some(spjGroupsFor))
 
   private def computeColStats(): java.util.Map[
       org.apache.spark.sql.connector.expressions.NamedReference,

@@ -80,13 +80,17 @@ object SessionBridge {
 
 /** Filter-pushdown glue for V2 tables that pick their FILE LIST from
   * pushed predicates (manifest-level pruning) and then delegate the
-  * actual scan to a Spark file source. Lives in the sql package tree
-  * because the catalyst-filter pushdown trait
+  * actual scan to a Spark file source over exactly those files — a
+  * [[ManifestFileIndex]], so the file source neither re-checks nor
+  * lists what the manifests already resolved. Lives in the sql package
+  * tree because the catalyst-filter pushdown trait
   * (SupportsPushDownCatalystFilters) and FileScanBuilder are
   * private[sql]: Spark's V2 pushdown prefers the catalyst variant, and
   * only it lets us hand the delegate the expressions it needs for
   * row-group pushdown. */
 object ScanBridge {
+  import graft.lake.DataFileEntry
+  import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
   import org.apache.spark.sql.execution.datasources.DataSourceStrategy
@@ -95,34 +99,40 @@ object ScanBridge {
   import org.apache.spark.sql.sources.Filter
   import org.apache.spark.sql.types.StructType
 
-  /** `mkDelegate(pushedSourceFilters)` builds the file-source scan
-    * builder over the (already pruned) file list; the returned builder
-    * then receives the same filters for row-group pushdown and the
-    * pruned column set. All filters are reported as residual
-    * (pushedFilters = empty), so Spark re-applies them post-scan —
-    * manifest pruning must only ever SKIP files, never stand in for
-    * row filtering.
+  /** Storage-partitioned-join layout: the clustering expressions plus
+    * one (partition-key row, entries) group per live partition value. */
+  type SpjGroups = (Array[org.apache.spark.sql.connector.expressions.Expression],
+    Seq[(InternalRow, Seq[DataFileEntry])])
+
+  /** `planFiles(sourceFilters)` prunes the table's manifests to the live
+    * entries the filters may match. The built Scan calls it ONCE per
+    * filter set (the pushed filters plus any runtime filters) and shares
+    * the entries between its statistics, the batch delegate and the SPJ
+    * groups, so one read plans — and reports its scan — once.
+    * `mkDelegate(entries)` builds the file-source scan builder over
+    * those entries; the returned builder then receives the same filters
+    * for row-group pushdown and the pruned column set. All filters are
+    * reported as residual (pushedFilters = empty), so Spark re-applies
+    * them post-scan — manifest pruning must only ever SKIP files, never
+    * stand in for row filtering.
+    *
+    * Statistics are the planned entries' manifest sums (bytes, rows — no
+    * IO). Without size estimates Spark never auto-broadcasts a small
+    * lake dim in a join — a silent 100 TB shuffle regression, not a
+    * cosmetic gap. Estimation is best-effort: a plan that throws
+    * estimates unknown-huge, and the batch read rethrows it.
     *
     * `mkStream` (optional): a micro-batch stream factory keyed by the
     * checkpoint location. When provided, the built Scan answers
     * `toMicroBatchStream` with it — and the batch delegate materializes
     * LAZILY, only when the scan is actually consumed as a batch. A
-    * streaming read never touches the batch path, so it must not pay
-    * the delegate's full file planning per stream start, nor hit
-    * batch-only refusals (a table carrying live MoR tombstones refuses
-    * batch scans without the extensions — its append tail streams
-    * fine). `streamReadSchema` stands in for the delegate's readSchema
-    * on that lazy path (pruned schema when Spark pruned, else the full
-    * data schema — exactly what the file delegate would report).
-    *
-    * `stats` (optional): `(pushedSourceFilters) => (sizeBytes, rows)`
-    * from the caller's own metadata (manifest sums — no IO). The lazy
-    * wrapper must still report statistics — the inner FileScan's
-    * estimate is hidden behind the lazy delegate, and materializing it
-    * just for stats would re-pay full file planning (and hit batch-only
-    * refusals) on streaming relations. Without size estimates Spark
-    * never auto-broadcasts a small lake dim in a join — a silent 100 TB
-    * shuffle regression, not a cosmetic gap.
+    * streaming read never touches the batch path, so it must not build
+    * the batch delegate per stream start, nor hit batch-only refusals (a
+    * table carrying live MoR tombstones refuses batch scans without the
+    * extensions — its append tail streams fine). `streamReadSchema`
+    * stands in for the delegate's readSchema on that lazy path (pruned
+    * schema when Spark pruned, else the full data schema — exactly what
+    * the file delegate would report).
     *
     * `aggPushdown` (optional): COMPLETE aggregate pushdown from the
     * caller's metadata. Handed Spark's pushed `Aggregation`, it returns
@@ -132,13 +142,13 @@ object ScanBridge {
     * when no post-scan filter remains; this builder reports EVERY
     * filter as residual, so a pushed aggregation here always comes from
     * a filterless query — the caller's metadata answer is global. */
-  def delegating(mkDelegate: Array[Filter] => FileScanBuilder,
+  def delegating(planFiles: Array[Filter] => Seq[DataFileEntry],
+      mkDelegate: Seq[DataFileEntry] => FileScanBuilder,
       mkStream: Option[String => org.apache.spark.sql.connector.read.streaming.MicroBatchStream]
         = None,
       streamReadSchema: Option[StructType] = None,
-      stats: Option[Array[Filter] => (Long, Long)] = None,
       aggPushdown: Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-        => Option[(StructType, Array[org.apache.spark.sql.catalyst.InternalRow])]] = None,
+        => Option[(StructType, Array[InternalRow])]] = None,
       // table-level COLUMN statistics (NDV/nulls/bounds/lengths) for
       // CBO — join reordering and selectivity need per-column NDV,
       // which row/byte sums cannot give. Evaluated lazily per
@@ -153,30 +163,23 @@ object ScanBridge {
       // between scanning one partition and scanning 100 TB. Empty =
       // runtime filtering off.
       runtimeFilterAttrs: () => Array[String] = () => Array.empty,
-      // storage-partitioned joins (SPJ, SPARK-37375): `spjGroups(pushed)`
-      // returns the clustering expressions (identity / bucket
-      // transforms) plus one (partition-key row, file paths) group per
-      // live partition value, or None when the table isn't cleanly
-      // partitioned. When Some, the scan reports KeyGroupedPartitioning
-      // and plans one HasPartitionKey input-partition set per group, so
-      // two tables partitioned the same way join WITHOUT shuffling
-      // either side (gated by Spark's
-      // spark.sql.sources.v2.bucketing.enabled; bucket transforms
-      // resolve through the catalog's FunctionCatalog).
-      // `mkDelegateForPaths` builds the file-source scan over one
-      // group's explicit file list.
-      spjGroups: Option[Array[Filter] => Option[
-        (Array[org.apache.spark.sql.connector.expressions.Expression],
-        Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[String])])]] = None,
-      mkDelegateForPaths: Option[Seq[String] => FileScanBuilder] = None)
+      // storage-partitioned joins (SPJ, SPARK-37375): `spjGroups(entries)`
+      // groups a filter set's planned entries by live partition value,
+      // or returns None when the table isn't cleanly partitioned. When
+      // Some, the scan reports KeyGroupedPartitioning and plans one
+      // HasPartitionKey input-partition set per group (each through
+      // `mkDelegate` over the group's entries), so two tables
+      // partitioned the same way join WITHOUT shuffling either side
+      // (gated by Spark's spark.sql.sources.v2.bucketing.enabled;
+      // bucket transforms resolve through the catalog's FunctionCatalog).
+      spjGroups: Option[Seq[DataFileEntry] => Option[SpjGroups]] = None)
       : ScanBuilder =
     new ScanBuilder with SupportsPushDownCatalystFilters
         with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
         with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
       private var exprs: Seq[Expression] = Nil
       private var required: Option[StructType] = None
-      private var aggResult
-          : Option[(StructType, Array[org.apache.spark.sql.catalyst.InternalRow])] = None
+      private var aggResult: Option[(StructType, Array[InternalRow])] = None
       private var aggFor
           : Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None
 
@@ -186,7 +189,7 @@ object ScanBridge {
       // doubles driver metadata I/O on large tables
       private def computeAgg(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-          : Option[(StructType, Array[org.apache.spark.sql.catalyst.InternalRow])] = {
+          : Option[(StructType, Array[InternalRow])] = {
         if (!aggFor.contains(agg)) {
           aggResult = aggPushdown.flatMap(_(agg))
           aggFor = Some(agg)
@@ -222,17 +225,30 @@ object ScanBridge {
             // scan IS the result — zero files opened, zero tasks
             return new org.apache.spark.sql.connector.read.LocalScan {
               override def readSchema(): StructType = aggSchema
-              override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = aggRows
+              override def rows(): Array[InternalRow] = aggRows
             }
           case None => ()
         }
         lazy val translated = exprs.flatMap(e =>
           DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true)).toArray
-        def buildInner(runtime: Array[Filter]): Scan = {
-          val delegate = mkDelegate(translated ++ runtime)
+        def buildInner(entries: Seq[DataFileEntry]): Scan = {
+          val delegate = mkDelegate(entries)
           delegate.pushFilters(exprs) // parquet row-group/page pushdown
           required.foreach(delegate.pruneColumns)
           delegate.build()
+        }
+        // one filter set's plan: the entries, then the delegate scan and
+        // the SPJ groups built from them
+        final class Planned(val runtime: Array[Filter]) {
+          val entries: scala.util.Try[Seq[DataFileEntry]] =
+            scala.util.Try(planFiles(translated ++ runtime))
+          lazy val inner: Scan = buildInner(entries.get)
+          lazy val spj: Option[SpjGroups] = for {
+            f <- spjGroups
+            es <- entries.toOption
+            g <- f(es)
+            if g._2.nonEmpty
+          } yield g
         }
         // the stats-reporting wrapper applies UNCONDITIONALLY — a
         // historical (AS OF) handle has no stream factory but its
@@ -243,14 +259,15 @@ object ScanBridge {
             with org.apache.spark.sql.connector.read.SupportsReportStatistics
             with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
             with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
-          // rebuildable, not lazy: a runtime filter() arrives AFTER the
+          // re-plannable, not lazy: a runtime filter() arrives AFTER the
           // batch delegate may have been planned, and the whole point is
           // to re-plan the file list under the narrowed predicate
-          private var innerCache: Scan = null
           private var runtimeV1: Array[Filter] = Array.empty
-          private def inner: Scan = {
-            if (innerCache == null) innerCache = buildInner(runtimeV1)
-            innerCache
+          private var current: Planned = null
+          private def planned: Planned = {
+            if (current == null || (current.runtime ne runtimeV1))
+              current = new Planned(runtimeV1)
+            current
           }
           override def filterAttributes()
               : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -260,76 +277,46 @@ object ScanBridge {
               predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
               : Unit = {
             // v2 runtime predicates (IN-sets from the join build side)
-            // → v1 filters the delegate's file pruning understands;
+            // → v1 filters the manifest pruning understands;
             // untranslatable ones drop — runtime filters only ever SKIP
             // files, Spark re-applies the join itself
             val v1 = predicates.flatMap(p =>
               org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p))
-            if (v1.nonEmpty) { runtimeV1 = runtimeV1 ++ v1; innerCache = null }
-          }
-          // SPJ groups under the CURRENT filter set (runtime filters
-          // included — a runtime-pruned scan regroups to the surviving
-          // keys); memoized per filter-array identity since both
-          // outputPartitioning and toBatch consult them
-          private var spjCache: Option[
-            (Array[org.apache.spark.sql.connector.expressions.Expression],
-            Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[String])])] = None
-          private var spjCacheFor: Array[Filter] = null
-          private def spjFor(): Option[
-              (Array[org.apache.spark.sql.connector.expressions.Expression],
-              Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[String])])] = {
-            val key = runtimeV1
-            if (spjCacheFor ne key) {
-              spjCache = spjGroups.flatMap(f => f(translated ++ key))
-              spjCacheFor = key
-            }
-            spjCache
+            if (v1.nonEmpty) runtimeV1 = runtimeV1 ++ v1
           }
 
           override def outputPartitioning()
               : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-            spjFor() match {
-              case Some((exprs, groups)) if groups.nonEmpty =>
+            planned.spj match {
+              case Some((exprs, groups)) =>
                 new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
                   exprs, groups.size)
-              case _ =>
+              case None =>
                 new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
             }
 
           override def readSchema(): StructType =
             streamReadSchema.map(s => required.getOrElse(s))
-              .getOrElse(inner.readSchema())
+              .getOrElse(planned.inner.readSchema())
           override def toBatch: org.apache.spark.sql.connector.read.Batch =
-            spjFor() match {
-              case Some((_, groups)) if groups.nonEmpty && mkDelegateForPaths.isDefined =>
+            planned.spj match {
+              case Some((_, groups)) =>
                 new org.apache.spark.sql.connector.read.Batch {
                   // the parquet reader factory is file-list-agnostic
                   // (files ride in the InputPartitions), so ONE group's
-                  // delegate supplies the factory for every group —
-                  // materializing the FULL delegate for it would pay a
-                  // second complete manifest-pruning + file-listing pass
-                  // per storage-partitioned join
-                  private lazy val factoryDelegate = {
-                    val b = mkDelegateForPaths.get(
-                      groups.headOption.map(_._2).getOrElse(Nil))
-                    b.pushFilters(exprs)
-                    required.foreach(b.pruneColumns)
-                    b.build().toBatch
-                  }
+                  // delegate supplies the factory for every group
+                  private lazy val factoryDelegate = buildInner(groups.head._2).toBatch
                   override def planInputPartitions()
                       : Array[org.apache.spark.sql.connector.read.InputPartition] =
-                    groups.toArray.flatMap { case (key, paths) =>
-                      val b = mkDelegateForPaths.get(paths)
-                      b.pushFilters(exprs)
-                      required.foreach(b.pruneColumns)
-                      b.build().toBatch.planInputPartitions()
+                    groups.toArray.flatMap { case (key, entries) =>
+                      buildInner(entries).toBatch.planInputPartitions()
                         .map(p => SpjPartition(p, key))
                     }
                   override def createReaderFactory()
                       : org.apache.spark.sql.connector.read.PartitionReaderFactory =
                     new SpjReaderFactory(factoryDelegate.createReaderFactory())
                 }
-              case _ => inner.toBatch
+              case None => planned.inner.toBatch
             }
           override def toMicroBatchStream(checkpointLocation: String)
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -337,7 +324,7 @@ object ScanBridge {
               throw new UnsupportedOperationException(
                 "this table handle does not support streaming reads"))
           override def description(): String =
-            streamReadSchema.fold(inner.description())(_ => "graft-lake scan")
+            streamReadSchema.fold(planned.inner.description())(_ => "graft-lake scan")
           override def estimateStatistics()
               : org.apache.spark.sql.connector.read.Statistics = {
             import java.util.OptionalLong
@@ -345,17 +332,13 @@ object ScanBridge {
               .getOrElse(java.util.Collections.emptyMap[
                 org.apache.spark.sql.connector.expressions.NamedReference,
                 org.apache.spark.sql.connector.read.colstats.ColumnStatistics]())
-            stats.map(_(translated)) match {
-              case Some((bytes, rows)) => new org.apache.spark.sql.connector.read.Statistics {
-                override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-                override def numRows(): OptionalLong = OptionalLong.of(rows)
-                override def columnStats() = cols
-              }
-              case None => new org.apache.spark.sql.connector.read.Statistics {
-                override def sizeInBytes(): OptionalLong = OptionalLong.empty()
-                override def numRows(): OptionalLong = OptionalLong.empty()
-                override def columnStats() = cols
-              }
+            val (bytes, rows) = planned.entries
+              .map(es => (es.map(_.sizeBytes).sum, es.map(_.recordCount).sum))
+              .getOrElse((Long.MaxValue, Long.MaxValue))
+            new org.apache.spark.sql.connector.read.Statistics {
+              override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
+              override def numRows(): OptionalLong = OptionalLong.of(rows)
+              override def columnStats() = cols
             }
           }
         }
