@@ -18,7 +18,9 @@ import scala.collection.mutable
   * expansion, no listing: Spark's own index would re-check every path
   * on the driver and, above its 32-path threshold, list them all again
   * in a parallel job just to learn sizes the entries carry. The parquet
-  * footer read seeks from this length, so it must be exact.
+  * footer read seeks from this length, so it must be exact. The manifest
+  * records no modification time or block locations, so the statuses
+  * carry none.
   *
   * A missing file is not checked here; the read fails on it (the task
   * names the file), never returns fewer rows. The partition spec is
