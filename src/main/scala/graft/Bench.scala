@@ -16,8 +16,10 @@ import org.apache.spark.sql.SparkSession
   * rounds 5/6 swung 2-3x on lake queries with zero code change.
   * Spreading a query's reps ~minutes apart decorrelates them from any
   * single contention window. `value` stays the sum of per-query medians
-  * (the estimated single-pass corpus cost, comparable across rounds);
-  * `wall` is the actual loop wall-clock.
+  * (the estimated single-pass corpus cost, comparable across rounds)
+  * over the queries that succeeded; `n_failed` counts the others and
+  * the artifact's `failed` names them. `wall` is the actual loop
+  * wall-clock.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -204,8 +206,9 @@ object Bench {
     val qcvs = cvs.map { case (k, v) =>
       s"\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val totalMin = if (mins.nonEmpty) mins.values.sum else 0.0
+    val (total, failed) = summed(results)
+    val (totalMin, _) = summed(mins)
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     def f4(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     // stdout carries ONLY the small headline: with ~100 queries a line
@@ -217,17 +220,26 @@ object Bench {
         .mkString("{", ",", "}")
     val calibFields =
       s""""calib_before":${calibJson(calibBefore)},"calib_after":${calibJson(calibAfter)},"calib_floor":${calibJson(calibFloor)},"calib_ref":${calibJson(refCalib)},"calib_ref_tag":"$refCalibTag","calib_factor":${f4(calibFactor)},"calib_floor_factor":${f4(floorFactor)},"floors_valid":$floorsValid,"total_normalized":${f4(total / calibFactor)},"total_min_normalized":${f4(totalMin / calibFactor)}"""
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"wall":$wall,"total_min":$totalMin,"n_queries":${names.size},"cv_median":${f4(cvMedian)},"cv_p90":${f4(cvP90)},"calib_factor":${f4(calibFactor)},"total_normalized":${f4(total / calibFactor)}}"""
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"wall":$wall,"total_min":$totalMin,"n_queries":${names.size},"n_failed":${failed.size},"cv_median":${f4(cvMedian)},"cv_p90":${f4(cvP90)},"calib_factor":${f4(calibFactor)},"total_normalized":${f4(total / calibFactor)}}"""
     println(headline)
     val qfloors = floors.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
       .mkString("{", ",", "}")
     val qfloorsNorm = floorsNorm.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
       .mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"wall":$wall,"total_min":$totalMin,"queries_min":$qmins,"queries_cv":$qcvs,"queries_floor":$qfloors,"queries_floor_norm":$qfloorsNorm,"cv_median":${f4(cvMedian)},"cv_p90":${f4(cvP90)},$calibFields}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"wall":$wall,"total_min":$totalMin,"n_failed":${failed.size},"failed":$failedJson,"queries_min":$qmins,"queries_cv":$qcvs,"queries_floor":$qfloors,"queries_floor_norm":$qfloorsNorm,"cv_median":${f4(cvMedian)},"cv_p90":${f4(cvP90)},$calibFields}"""
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
     java.nio.file.Files.write(out,
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+  }
+
+  /** The sum of the per-query figures (medians or minimums) of the
+    * queries that succeeded, and the sorted names of those that failed
+    * (figure -1). A failed query is left out of the sum and named, so
+    * it never reads as a fast one. */
+  private[graft] def summed(figures: Map[String, Double]): (Double, Seq[String]) = {
+    val (failed, ok) = figures.partition(_._2 < 0)
+    (ok.values.sum, failed.keys.toSeq.sorted)
   }
 }

@@ -42,20 +42,22 @@ private[lake] object DataFs {
     ()
   }
 
-  /** (path, mtimeMs) for every file under `dir`, recursively. */
+  /** (path, mtimeMs) for every file under `dir`, recursively. A
+    * depth-first `listStatus` walk — the calls [[deleteEmptyDirs]]
+    * makes on the same tree. `listFiles(dir, true)` returns
+    * `LocatedFileStatus`es, whose copy loads each file's owner and
+    * permissions; the local FS without Hadoop's native library does
+    * that by running `ls -ld` once per file. */
   def listFilesRecursive(dir: LakePath): Seq[(String, Long)] = {
     val h = new HPath(dir.uri)
     val fs = fsOf(h)
-    if (!fs.exists(h)) Nil
-    else {
-      val it = fs.listFiles(h, true)
-      val buf = scala.collection.mutable.Buffer.empty[(String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        buf += ((st.getPath.toString, st.getModificationTime))
-      }
-      buf.toSeq
+    val buf = scala.collection.mutable.Buffer.empty[(String, Long)]
+    def walk(d: HPath): Unit = fs.listStatus(d).foreach { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else buf += ((st.getPath.toString, st.getModificationTime))
     }
+    if (fs.exists(h)) walk(h)
+    buf.toSeq
   }
 
   /** Best-effort depth-first removal of EMPTY directories under `root`

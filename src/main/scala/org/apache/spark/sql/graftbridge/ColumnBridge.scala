@@ -37,47 +37,6 @@ object PlanBridge {
     DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
 }
 
-/** Session-scoped conf without global mutation: cloneSession() (shared
-  * SparkContext + cache, copied SQLConf) is private[sql], so the lake
-  * writer reaches it through this shim to pin parquet writer confs per
-  * write instead of set/restore races on the shared session (two
-  * concurrent writers interleaving set/restore would leak the conf
-  * session-wide — the bug class this replaces). */
-object SessionBridge {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
-
-  /** Rebind `df`'s logical plan to a cloned session carrying `confs`.
-    * Right for WRITES (the write command runs under the new session);
-    * for reads use [[sessionWithConfs]] — a file relation captures its
-    * session when `.parquet()` resolves it, so the read must be BUILT
-    * on the configured session, not rebound after. */
-  def withConfs(df: DataFrame, confs: Map[String, String]): DataFrame =
-    CDataset.ofRows(sessionWithConfs(df.sparkSession, confs)
-      .asInstanceOf[CSparkSession], df.queryExecution.logical)
-
-  /** A cloned session (shared context + cache, copied conf) with the
-    * given confs applied. */
-  def sessionWithConfs(s: SparkSession, confs: Map[String, String]): SparkSession = {
-    val clone = s.asInstanceOf[CSparkSession].cloneSession()
-    confs.foreach { case (k, v) => clone.conf.set(k, v) }
-    clone
-  }
-
-  /** Attach `schema` to `df` VERBATIM over the same physical rows
-    * (caller guarantees identical layout — names/types/order equal,
-    * only metadata/nullability may differ). This is the only way to
-    * carry NESTED field metadata (e.g. nested parquet field IDs) into
-    * a write: select aliases set top-level metadata only, and casts
-    * drop metadata. */
-  def withSchema(df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val cds = df.asInstanceOf[CDataset[_]]
-    cds.sparkSession.internalCreateDataFrame(
-      cds.queryExecution.toRdd, schema)
-  }
-}
-
 /** Filter-pushdown glue for V2 tables that pick their FILE LIST from
   * pushed predicates (manifest-level pruning) and then delegate the
   * actual scan to a Spark file source over exactly those files — a
