@@ -179,12 +179,12 @@ object IncrementalAggView {
     val added = v.writeDataFiles(
       withDistincts(spark, withDerived(rows, derived), keys, distincts)
         .select(outNames.map(col): _*))
-    v.commitSnapshot("replace", added, v.metadata.currentFiles,
-      dropDeletes = true,
-      transformMeta = m => m.copy(properties =
+    v.commitSnapshot(LakeTable.CommitRequest.Rewrite(added, v.metadata.currentFiles,
+      None, dropDeletes = true,
+      transform = m => m.copy(properties =
         m.properties + (WatermarkProp -> head.toString) ++
           (if (dimHeads.isEmpty) Map.empty
-           else Map(DimSnapshotProp -> dimHeads.mkString(",")))))
+           else Map(DimSnapshotProp -> dimHeads.mkString(","))))))
     // deltaGroups = -1: a rebuild has no changelog delta to size
     RefreshReport(0L, head, -1L, 0L, refreshed = true)
   }
@@ -451,9 +451,9 @@ object IncrementalAggView {
       val added = v.writeDataFiles(
         withDistincts(spark, withDerived(finalDF, derived), keys, distincts)
           .select(outNames.map(col): _*))
-      v.commitSnapshot("replace", added, v.metadata.currentFiles,
-        dropDeletes = true,
-        transformMeta = m => {
+      v.commitSnapshot(LakeTable.CommitRequest.Rewrite(added, v.metadata.currentFiles,
+        None, dropDeletes = true,
+        transform = m => {
           val cur = m.properties.get(WatermarkProp).map(_.toLong).getOrElse(0L)
           if (cur != last)
             throw new CommitConflictException(
@@ -463,7 +463,7 @@ object IncrementalAggView {
             (WatermarkProp -> head.toString) ++
             (if (dimHeads.isEmpty) Map.empty
              else Map(DimSnapshotProp -> dimHeads.mkString(","))))
-        })
+        }))
       RefreshReport(last, head, deltaGroups, rescanned, refreshed = true)
     } finally {
       merged0.unpersist()

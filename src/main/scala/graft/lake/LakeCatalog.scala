@@ -301,7 +301,9 @@ final class LakeCatalog private (
     * are unreferenced garbage). The entries must have been written
     * under [[TableMetadata.withFieldIdDefaults]] positional IDs for
     * this (ns, name, schema, spec) — the same IDs this metadata
-    * assigns. */
+    * assigns. The data snapshot is an append landed by the
+    * [[SnapshotProducer]] on the empty definition, so its files carry
+    * row lineage like any other append's. */
   private[lake] def createTableWithData(ns: String, name: String,
       schema: StructType, spec: Seq[PartitionField],
       entries: Seq[DataFileEntry],
@@ -313,21 +315,8 @@ final class LakeCatalog private (
       snapshots = Nil, currentSnapshotId = -1L,
       properties = properties, sortOrder = sortOrder,
       sortOrderKind = sortOrderKind).withFieldIdDefaults
-    val stamped = entries.map(_.copy(seq = 1L, specId = meta0.currentSpecId))
-    val manifest = writeManifest(md, stamped, keyTypes = meta0.statKeyTypes)
-    val listName = writeManifestList(md, Seq(manifest))
-    val snap = Snapshot(1L, None, System.currentTimeMillis(), "append",
-      listName, fileCount = manifest.fileCount,
-      totalRecords = manifest.recordCount, totalSizeBytes = manifest.sizeBytes,
-      summary = Map(
-        "added-data-files" -> stamped.size.toString,
-        "removed-data-files" -> "0",
-        "added-records" -> stamped.map(_.recordCount).sum.toString,
-        "added-delete-files" -> "0",
-        "added-position-deletes" -> "0",
-        "added-equality-deletes" -> "0"))(manifestIO(md))
-    val meta = meta0.copy(snapshots = Seq(snap), currentSnapshotId = 1L,
-      lastSnapshotId = 1L)
+    val (meta, _) = new SnapshotProducer(this, md).produce(meta0,
+      LakeTable.CommitRequest.Append(entries.map(_.copy(specId = meta0.currentSpecId))))
     if (!backend.putIfAbsent(md.resolve("v1.json"), MetadataJson.write(meta)))
       throw new LakeTableExistsException(s"table $ns.$name already exists")
     writeHint(md, 1)

@@ -1,7 +1,8 @@
 package graft.lake
 
 import java.util.UUID
-import graft.lake.LakeTable.RowLevelWrite
+import graft.lake.LakeTable.{BatchAlreadyCommitted, CommitRequest, RowLevelWrite}
+import graft.lake.LakeTable.CommitRequest._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.ManifestFileIndex
 import org.apache.spark.sql.types.StructType
@@ -193,12 +194,12 @@ final class LakeTable private[lake] (
       else clustered.select(idSchema.fields.map(f =>
         clustered.col(f.name).as(f.name, f.metadata)): _*)
     // micros timestamps: INT96 would write no footer stats to prune on.
-    // The confs are pinned on a CLONED session (shared context, private
-    // SQLConf), never on the caller's: a save/restore on the shared
-    // session could interleave across concurrent writers and leak
-    // TIMESTAMP_MICROS session-wide, changing how other writes annotate
-    // computed timestamp columns (isAdjustedToUTC) and breaking oracle
-    // schema parity.
+    // The confs are pinned on SessionBridge's derived session for this
+    // caller and overlay (shared context, its own SQLConf), never on the
+    // caller's: a save/restore on the shared session could interleave
+    // across concurrent writers and leak TIMESTAMP_MICROS session-wide,
+    // changing how other writes annotate computed timestamp columns
+    // (isAdjustedToUTC) and breaking oracle schema parity.
     // write.target-file-size-bytes (Iceberg's target file size): cap
     // rows per output file at target / avgRowBytes, with the average
     // row size from the current SNAPSHOT's totalSizeBytes/totalRecords
@@ -219,20 +220,15 @@ final class LakeTable private[lake] (
       if snap.totalRecords > 0
       avgRow = math.max(1L, snap.totalSizeBytes / snap.totalRecords)
     } yield "maxRecordsPerFile" -> math.max(1L, target / avgRow).toString).toMap
-    val trc = sys.env.contains("GRAFT_COMMIT_TRACE")
-    val tw0 = System.nanoTime()
     org.apache.spark.sql.graftbridge.SessionBridge
       .withConfs(withIds, Map(
         "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
         "spark.sql.parquet.fieldId.write.enabled" -> "true"))
       .write.options(bloomFilterOptions ++ rollOpt).parquet(dir)
-    val tw1 = System.nanoTime()
     // stamp which spec derived these partitionValues: after a spec
     // evolution, pruning resolves each file's values under ITS spec
     val entries = StatsHarvester.harvest(spark, dir, schema, spec, meta.fieldIds)
       .map(_.copy(specId = meta.currentSpecId))
-    val tw2 = System.nanoTime()
-    if (trc) System.err.println(f"TRACE writeDataFiles n=${entries.size} write=${(tw1-tw0)/1e3}%.0fus harvest=${(tw2-tw1)/1e3}%.0fus")
     withBucketValues(spark, entries, dir, spec)
   }
 
@@ -796,9 +792,8 @@ final class LakeTable private[lake] (
     val mappingDelta = present.flatMap { case (f, rn) =>
       m.fieldIds.get(f.name).filterNot(idToImported.contains).map(id => rn -> id) }
     val ourPaths = entries.map(_.path).toSet
-    commitSnapshot("append", entries, Nil,
-      extraSummary = Map("added-files-source" -> srcDir),
-      transformMeta = { latest =>
+    commitSnapshot(Append(entries, extraSummary = Map("added-files-source" -> srcDir),
+      transform = { latest =>
         mappingDelta.foreach { case (n, id) =>
           if (latest.nameMapping.get(n).exists(_ != id))
             throw new CommitConflictException(
@@ -816,7 +811,7 @@ final class LakeTable private[lake] (
             s"addFiles on $name raced a concurrent import of the same " +
               s"file(s), e.g. ${doubled.head}")
         latest.copy(nameMapping = latest.nameMapping ++ mappingDelta)
-      })
+      }))
   }
 
   /** Exactly-once append for streaming micro-batches: `sinkId` scopes
@@ -827,7 +822,7 @@ final class LakeTable private[lake] (
   def appendDataExactlyOnce(df: DataFrame, sinkId: String,
       batchId: Long): Option[CommitReport] =
     exactlyOnceCommit(sinkId, batchId)(once =>
-      commitSnapshot("append", writeDataFiles(df), Nil, exactlyOnce = once))
+      commitSnapshot(Append(writeDataFiles(df), exactlyOnce = once)))
 
   /** Exactly-once append of PRE-WRITTEN data files — the DSv2 streaming
     * sink path: executor tasks streamed the parquet, the driver commits
@@ -838,7 +833,7 @@ final class LakeTable private[lake] (
       sinkId: String, batchId: Long,
       toBranch: Option[String] = None): Option[CommitReport] =
     exactlyOnceCommit(sinkId, batchId)(once =>
-      commitSnapshot("append", files, Nil, exactlyOnce = once, toBranch = toBranch))
+      commitSnapshot(Append(files, toBranch.fold[Target](Main)(Branch), once)))
 
   /** Exactly-once MERGE for streaming micro-batches: the (sinkId,
     * batchId) ledger of [[appendDataExactlyOnce]] on top of mergeInto's
@@ -860,7 +855,7 @@ final class LakeTable private[lake] (
   /** The exactly-once step every streaming sink shares: None when the
     * ledger already holds `batchId`, else `commit` with the ledger
     * entry to record. The decisive check runs inside the commit CAS
-    * (see commitSnapshot), whose [[BatchAlreadyCommitted]] turns into
+    * (see [[SnapshotProducer.produce]]), whose [[BatchAlreadyCommitted]] turns into
     * None too; the pre-check here just avoids staging data files for
     * the common replay. A lost race orphans the staged files;
     * removeOrphanFiles reclaims them. */
@@ -1323,26 +1318,8 @@ final class LakeTable private[lake] (
     * under the new schema's ids. Old manifests, stats docs and refs
     * become orphans the sweep reclaims. */
   def replaceContentsWith(template: TableMetadata,
-      entries: Seq[DataFileEntry]): CommitReport = {
-    val fresh = template.withFieldIdDefaults
-    commitSnapshot("replace", entries, Nil, replaceAll = true,
-      keyTypesOverride = Some(fresh.statKeyTypes),
-      transformMeta = m => {
-        val snap = m.snapshots.lastOption.getOrElse(throw new IllegalStateException(
-          s"replace commit on $name lost its snapshot"))
-        m.copy(schema = fresh.schema,
-          spec = fresh.spec, specLog = Seq(fresh.spec),
-          fieldIds = fresh.fieldIds,
-          lastAssignedFieldId = fresh.lastAssignedFieldId,
-          snapshots = Seq(snap), currentSnapshotId = snap.id,
-          nameMapping = Map.empty, initialDefaults = Map.empty,
-          // the REPLACEMENT definition's properties/sort order — the
-          // old table's config is dropped with its schema
-          properties = fresh.properties, refs = Map.empty,
-          sortOrder = fresh.sortOrder, sortOrderKind = fresh.sortOrderKind,
-          statsFiles = Nil, partitionStats = Nil)
-      })
-  }
+      entries: Seq[DataFileEntry]): CommitReport =
+    commitSnapshot(Replace(entries, Some(template)))
 
   /** PARTITION STATISTICS (Iceberg's partition-statistics files):
     * roll the current snapshot's per-partition-tuple file/record/byte
@@ -1437,8 +1414,7 @@ final class LakeTable private[lake] (
       conflictRetries: Int = 3): CommitReport = withConflictRetry(conflictRetries) {
     val live = meta.currentFiles
     val baseId = meta.currentSnapshotId
-    if (live.isEmpty) commitSnapshot("replace", Nil, Nil, dropDeletes = true,
-      validateNoNewDeletesSince = Some(baseId))
+    if (live.isEmpty) commitSnapshot(Rewrite(Nil, Nil, Some(baseId), dropDeletes = true))
     else {
       // MoR deletes MATERIALIZE here: the rewrite reads tombstone-
       // filtered rows and the delete manifests retire with the files
@@ -1452,8 +1428,8 @@ final class LakeTable private[lake] (
       // would be re-shuffled to the default partition count by the spec
       // clustering and the target would be ignored
       val added = writeDataFiles(df, numFiles = targetFiles, carryRowIds = carry)
-      commitSnapshot("replace", added, live, dropDeletes = true,
-        validateNoNewDeletesSince = Some(baseId), lineageCarried = carry)
+      commitSnapshot(Rewrite(added, live, Some(baseId), dropDeletes = true,
+        lineageCarried = carry))
     }
   }
 
@@ -1474,10 +1450,9 @@ final class LakeTable private[lake] (
     if (matching.isEmpty) None
     else {
       val (df, carry) = readTarget(spark, matching, snap)
-      Some(commitSnapshot("replace",
+      Some(commitSnapshot(Rewrite(
         writeDataFiles(df, numFiles = targetFiles, carryRowIds = carry),
-        matching, validateNoNewDeletesSince = Some(meta.currentSnapshotId),
-        lineageCarried = carry))
+        matching, Some(meta.currentSnapshotId), lineageCarried = carry)))
     }
   }
 
@@ -1500,9 +1475,8 @@ final class LakeTable private[lake] (
       // survive (they may still reference files this pass keeps)
       val (df, carry) = readTarget(spark, small, meta.currentSnapshot)
       val added = writeDataFiles(df, numFiles = target, carryRowIds = carry)
-      Some(commitSnapshot("replace", added, small,
-        validateNoNewDeletesSince = Some(meta.currentSnapshotId),
-        lineageCarried = carry))
+      Some(commitSnapshot(Rewrite(added, small, Some(meta.currentSnapshotId),
+        lineageCarried = carry)))
     }
   }
 
@@ -1556,14 +1530,13 @@ final class LakeTable private[lake] (
       if (affected.isEmpty)
         // only DANGLING tombstones remain (their data files were already
         // rewritten away): retire the delete manifests metadata-only
-        Some(commitSnapshot("replace", Nil, Nil, dropDeletes = true,
-          validateNoNewDeletesSince = Some(meta.currentSnapshotId)))
+        Some(commitSnapshot(Rewrite(Nil, Nil, Some(meta.currentSnapshotId),
+          dropDeletes = true)))
       else {
         val (df, carry) = readTarget(spark, affected, snap)
         val added = writeDataFiles(df, carryRowIds = carry)
-        Some(commitSnapshot("replace", added, affected, dropDeletes = true,
-          validateNoNewDeletesSince = Some(meta.currentSnapshotId),
-          lineageCarried = carry))
+        Some(commitSnapshot(Rewrite(added, affected, Some(meta.currentSnapshotId),
+          dropDeletes = true, lineageCarried = carry)))
       }
     }
   }
@@ -1587,71 +1560,8 @@ final class LakeTable private[lake] (
       minManifests: Int = 8): Option[CommitReport] = {
     require(targetEntries > 0, "targetEntries must be positive")
     require(minManifests >= 2, "minManifests must be at least 2")
-    val t0 = System.nanoTime()
-    var landed: Option[Long] = None
-    val md = catalog.metadataDir(namespace, shortName)
-    val io = catalog.manifestIO(md)
-    val (next, v, attempts) = catalog.commit(namespace, shortName) { latest =>
-      landed = None
-      latest.currentSnapshot match {
-        case None => latest
-        case Some(cur) =>
-          val dataMfs = cur.manifests.filter(_.content == ManifestRef.Data)
-          if (dataMfs.size < minManifests) latest
-          else {
-            // cluster by (spec, partition values) before grouping so
-            // each consolidated manifest covers few partitions — the
-            // rollup summaries stay tight and a partition predicate
-            // skips whole documents (Iceberg's rewrite_manifests sorts
-            // by partition for exactly this)
-            val entries = dataMfs.flatMap(m => io.readManifest(m.name))
-              .sortBy(e => (e.specId,
-                e.partitionValues.toSeq.sorted.mkString("\u0000"), e.path))
-            val keyTypes = latest.withFieldIdDefaults.statKeyTypes
-            val newRefs = entries.grouped(targetEntries).toSeq
-              .map(g => catalog.writeManifest(md, g, keyTypes = keyTypes))
-            val manifests = newRefs ++
-              cur.manifests.filterNot(_.content == ManifestRef.Data)
-            val listName = catalog.writeManifestList(md, manifests)
-            val newId = math.max(
-              latest.snapshots.map(_.id).maxOption.getOrElse(0L),
-              latest.lastSnapshotId) + 1L
-            val snap = Snapshot(newId, Some(cur.id), System.currentTimeMillis(),
-              "replace", listName,
-              fileCount = newRefs.map(_.fileCount).sum,
-              totalRecords = newRefs.map(_.recordCount).sum,
-              totalSizeBytes = newRefs.map(_.sizeBytes).sum,
-              summary = Map(
-                "manifests-replaced" -> dataMfs.size.toString,
-                "manifests-added" -> newRefs.size.toString,
-                "added-data-files" -> "0", "removed-data-files" -> "0",
-                "added-records" -> "0"))(io)
-            landed = Some(newId)
-            latest.copy(snapshots = latest.snapshots :+ snap,
-              currentSnapshotId = newId, lastSnapshotId = newId)
-          }
-      }
-    }
-    meta = next
-    version = v
-    landed.map { id =>
-      val snap = next.snapshot(id).get
-      val deleteRefs = snap.manifests.filter(_.content != ManifestRef.Data)
-      val report = CommitReport(
-        tableName = name, snapshotId = id, attempts = attempts,
-        addedDataFiles = 0L, addedRecords = 0L, addedFilesSizeInBytes = 0L,
-        totalDataFiles = snap.fileCount,
-        totalDeleteFiles = deleteRefs.map(_.fileCount).sum,
-        totalRecords = snap.totalRecords,
-        totalFilesSizeInBytes = snap.totalSizeBytes,
-        totalPositionalDeletes = deleteRefs
-          .filter(_.content == ManifestRef.Deletes).map(_.recordCount).sum,
-        totalEqualityDeletes = deleteRefs
-          .filter(_.content == ManifestRef.EqDeletes).map(_.recordCount).sum,
-        totalDurationMs = (System.nanoTime() - t0) / 1000000L)
-      catalog.reporter.report(report)
-      report
-    }
+    produceCommit(latest => Option.when(latest.currentSnapshot
+      .exists(_.dataManifests.size >= minManifests))(ManifestRewrite(targetEntries)))
   }
 
   /** Copy-on-write ops re-run against FRESH metadata when they lose a
@@ -1675,7 +1585,7 @@ final class LakeTable private[lake] (
 
   /** (base id, live files, snapshot) of an op's lineage: main, or — for
     * a branch-scoped row-level op — the branch head. The commit then
-    * targets the same lineage (toBranch), whose head the CAS transform
+    * targets the same lineage (the request's branch), whose head the CAS transform
     * re-resolves, so racing branch commits revalidate exactly like
     * racing main commits. */
   private def lineageBase(branch: Option[String])
@@ -1997,11 +1907,7 @@ final class LakeTable private[lake] (
             if (touched.isEmpty && sourceRows == 0L) RowLevelWrite()
             else conditionalMerge(spark, source.get, keys, clauses, touched, snap, mor)
         }
-        commitSnapshot(op.verb, out.added, out.removed,
-          validateAddedSince = prune.map(base -> _),
-          exactlyOnce = exactlyOnce, addedDeletes = out.posDeletes,
-          addedEqDeletes = out.eqDeletes, addedDvs = out.dvs, toBranch = branch,
-          lineageCarried = out.carried)
+        commitSnapshot(RowDelta(op.verb, out, prune.map(base -> _), branch, exactlyOnce))
       }
     } finally source.foreach(_.unpersist(blocking = false))
   }
@@ -2405,13 +2311,11 @@ final class LakeTable private[lake] (
 
   /** Full-table replace: write df as the new table contents in ONE
     * atomic commit (the SQL INSERT OVERWRITE path). The removed set is
-    * whatever is live AT COMMIT TIME (replaceAll), not a pre-read
+    * whatever is live AT COMMIT TIME (a Replace request), not a pre-read
     * snapshot — otherwise a concurrent append racing the CAS would
     * survive inside a snapshot claiming to be a full replace. */
-  def overwriteAll(df: DataFrame): CommitReport = {
-    val added = writeDataFiles(df)
-    commitSnapshot("overwrite", added, Nil, replaceAll = true)
-  }
+  def overwriteAll(df: DataFrame): CommitReport =
+    commitSnapshot(Replace(writeDataFiles(df)))
 
   /** Incremental scan: rows in files added AFTER `fromSnapshotId`, up
     * to the current snapshot — the Iceberg incremental-append-scan
@@ -2658,7 +2562,7 @@ final class LakeTable private[lake] (
     require(ref.kind == TableRef.Branch,
       s"ref '$branch' of $name is a ${ref.kind}; only branches accept commits")
     val added = writeDataFiles(df, numFiles)
-    commitSnapshot("append", added, Nil, toBranch = Some(branch))
+    commitSnapshot(Append(added, Branch(branch)))
   }
 
   /** Stage an append WITHOUT moving any pointer (Iceberg's `wap.id`
@@ -2674,8 +2578,7 @@ final class LakeTable private[lake] (
   def stageAppend(df: DataFrame, wapId: String, numFiles: Int = 0): CommitReport = {
     require(wapId.trim.nonEmpty, "wap.id must be non-empty")
     val added = writeDataFiles(df, numFiles)
-    commitSnapshot("append", added, Nil,
-      extraSummary = Map("wap.id" -> wapId.trim), stageOnly = true)
+    commitSnapshot(Append(added, Staged(wapId.trim)))
   }
 
   /** Publish a staged snapshot: make it current — fast-forward-only
@@ -2907,390 +2810,34 @@ final class LakeTable private[lake] (
     removed.toSeq
   }
 
-  /** Commit a snapshot under the LAYERED metadata protocol: the added
-    * files are written as ONE immutable manifest document per attempt
-    * (inside the transform, so entries carry the winning snapshot id as
-    * their data sequence number; a rare lost race orphans a document
-    * that removeOrphanFiles reclaims), untouched manifests are
-    * carried by reference, and only manifests that lose files to this
-    * op are rewritten. The metadata document therefore grows with the
-    * SNAPSHOT LOG, never with the file count — a pure append writes
-    * O(new files) manifest bytes + O(log) metadata bytes regardless of
-    * how many files or commits the table has (asserted by
-    * ManifestLayoutSpec).
-    *
-    * `validateAddedSince` upgrades the op from snapshot isolation to
-    * serializable (Iceberg's validateNoConflictingData): `(baseId,
-    * pred)` fails the commit if any file ADDED after the op's base
-    * snapshot might contain rows matching `pred` — a racing append can
-    * otherwise slip rows past a delete's predicate or duplicate a
-    * merge's keys. The manifest layering makes the check cheap: files
-    * added since base = entries of manifests not referenced by base. */
-  /** Thrown inside the commit transform when an exactly-once commit
-    * discovers its batch already landed; callers translate it to a
-    * no-op. Never escapes [[commitSnapshot]]'s public callers. */
-  private[lake] final class BatchAlreadyCommitted extends RuntimeException
+  /** Lands `req` through the [[SnapshotProducer]] and reports it. */
+  private[lake] def commitSnapshot(req: CommitRequest): CommitReport =
+    produceCommit(_ => Some(req)).get
 
-  private[lake] def commitSnapshot(op: String, added: Seq[DataFileEntry],
-      removed: Seq[DataFileEntry], replaceAll: Boolean = false,
-      validateAddedSince: Option[(Long, LakePredicate)] = None,
-      // COMPACTION-family validation: the op rewrote files from this
-      // base's MoR-filtered state, so any delete file committed since
-      // is fatal — the rewrite would either drop it (dropDeletes) or
-      // carry it pointing at removed paths while re-appending rows it
-      // tombstoned: deleted rows RESURRECT. Conflict → retry re-reads.
-      validateNoNewDeletesSince: Option[Long] = None,
-      extraSummary: Map[String, String] = Map.empty,
-      exactlyOnce: Option[(String, Long)] = None,
-      addedDeletes: Seq[DataFileEntry] = Nil,
-      addedEqDeletes: Seq[DataFileEntry] = Nil,
-      // deletion-vector entries (one per touched data file, all sharing
-      // the commit's blob path) — REPLACE any live DV for the same data
-      // files (the writer already merged them in)
-      addedDvs: Seq[DataFileEntry] = Nil,
-      dropDeletes: Boolean = false,
-      toBranch: Option[String] = None,
-      stageOnly: Boolean = false,
-      // the rewrite MATERIALIZED _row_id into its added files (Iceberg
-      // v3 carry-through): a rewrite-shaped commit with this set keeps
-      // lineage readable instead of setting the sticky broken flag
-      lineageCarried: Boolean = false,
-      // staged-replace (RTAS): the added entries' stats are keyed by
-      // the REPLACEMENT schema's field ids, not the current metadata's
-      keyTypesOverride: Option[Map[String, org.apache.spark.sql.types.DataType]] = None,
-      // extra metadata transform applied to the committed result INSIDE
-      // the CAS (addFiles rides its name-mapping freeze on this) — runs
-      // against the winner's metadata on every retry, so it must be
-      // pure and may throw CommitConflictException
-      transformMeta: TableMetadata => TableMetadata = identity): CommitReport = {
+  /** The commit step every snapshot shares: `request` picks what to
+    * land from the latest metadata (None: commit nothing), the producer
+    * lands it inside the CAS — re-run against the winner's metadata on
+    * a lost race — and the landed commit is reported. */
+  private def produceCommit(
+      request: TableMetadata => Option[CommitRequest]): Option[CommitReport] = {
     val t0 = System.nanoTime()
-    // branch commits: appends AND row-level ops (CoW rewrites, MoR
-    // tombstones) land on the branch head — the full WAP story for
-    // pipelines that stage mutations, not just inserts. Everything
-    // below resolves against baseSnapshot (the branch head inside the
-    // CAS transform), so liveness and serializable validation reason
-    // about the BRANCH lineage. Replace/compaction stay main-only.
-    require(toBranch.isEmpty || (!replaceAll && !dropDeletes),
-      s"replace/compaction commits may not target a branch")
-    // stageOnly (the wap.id flow): the snapshot lands in the log with
-    // the current head as parent but NO pointer moves — invisible to
-    // every reader until [[cherrypick]] publishes it. Append-shaped
-    // commits only.
-    require(!stageOnly || (toBranch.isEmpty && !replaceAll && !dropDeletes
-      && removed.isEmpty),
-      "staged (wap.id) commits must be pure appends to main")
-    val removedPaths = removed.map(_.path).toSet
-    var removedCount = removed.size.toLong // replaceAll: resolved in the transform
-    val md = catalog.metadataDir(namespace, shortName)
-    val io = catalog.manifestIO(md)
+    val producer = new SnapshotProducer(catalog, catalog.metadataDir(namespace, shortName))
+    var landed: Option[(CommitRequest, Snapshot)] = None
     val (next, v, attempts) = catalog.commit(namespace, shortName) { latest =>
-      // The new snapshot's id doubles as the DATA SEQUENCE NUMBER
-      // stamped on every entry this commit adds — which is why the
-      // added manifests are written inside the transform (a lost CAS
-      // race re-stamps under the retry's id; the loser's documents are
-      // orphans removeOrphanFiles reclaims, same as rewritten data
-      // files). Equality deletes apply to seq strictly below their own,
-      // so a MoR upsert's own data files escape its own tombstones.
-      val newId = math.max(
-        latest.snapshots.map(_.id).maxOption.getOrElse(0L),
-        latest.lastSnapshotId) + 1L
-      // data manifests carry rollup skip stats typed under the schema
-      // the commit lands on (stat strings are canonical, so a later
-      // widen still compares correctly at scan time)
-      val keyTypes =
-        keyTypesOverride.getOrElse(latest.withFieldIdDefaults.statKeyTypes)
-      // Row lineage (Iceberg v3): every data file this commit adds gets
-      // firstRowId from the table's next-row-id mark — assigned INSIDE
-      // the CAS transform, so a lost race re-assigns from the winner's
-      // mark and ids stay table-unique and monotone. A row's stable id
-      // is firstRowId + parquet row_index (LakeScan.rowLineage).
-      val rid0 = latest.nextRowId
-      val addedWithIds = {
-        var rid = rid0
-        added.map { f =>
-          val e = f.copy(seq = newId, firstRowId = Some(rid))
-          rid += f.recordCount
-          e
-        }
+      landed = None
+      request(latest).fold(latest) { r =>
+        val (m, snap) = producer.produce(latest, r)
+        landed = Some(r -> snap)
+        m
       }
-      val nextRid = rid0 + added.map(_.recordCount).sum
-      val addedRef = if (added.nonEmpty)
-        Some(catalog.writeManifest(md, addedWithIds,
-          keyTypes = keyTypes)) else None
-      val addedDeleteRef = if (addedDeletes.nonEmpty)
-        Some(catalog.writeManifest(md, addedDeletes.map(_.copy(seq = newId)),
-          ManifestRef.Deletes)) else None
-      val addedEqDeleteRef = if (addedEqDeletes.nonEmpty)
-        Some(catalog.writeManifest(md, addedEqDeletes.map(_.copy(seq = newId)),
-          ManifestRef.EqDeletes)) else None
-      val addedDvRef = if (addedDvs.nonEmpty)
-        Some(catalog.writeManifest(md, addedDvs.map(_.copy(seq = newId)),
-          ManifestRef.Dv)) else None
-      // Exactly-once ledger check INSIDE the CAS transform: a zombie
-      // driver racing a replacement both pass any pre-check, but the
-      // loser's CAS retry re-runs this transform against the winner's
-      // metadata and aborts here. The ledger lives in table PROPERTIES,
-      // not snapshot summaries, so snapshot expiry cannot erase it.
-      exactlyOnce.foreach { case (sinkId, batchId) =>
-        val k = s"streaming.last-batch-id.$sinkId"
-        if (latest.properties.get(k).exists(_.toLong >= batchId))
-          throw new BatchAlreadyCommitted
-      }
-      // base lineage: main's current snapshot, or — for a branch
-      // commit — the branch head (resolved INSIDE the CAS transform, so
-      // a racing branch commit re-resolves the winner's head on retry)
-      val baseSnapshot = toBranch match {
-        case None => latest.currentSnapshot
-        case Some(b) =>
-          val ref = latest.refs.getOrElse(b, throw new NoSuchElementException(
-            s"no branch '$b' on $name"))
-          require(ref.kind == TableRef.Branch, s"ref '$b' of $name is a " +
-            s"${ref.kind}; only branches accept commits")
-          Some(latest.snapshot(ref.snapshotId).getOrElse(throw new IllegalStateException(
-            s"branch '$b' of $name points at expired snapshot ${ref.snapshotId}")))
-      }
-      val prevAll = baseSnapshot.map(_.manifests).getOrElse(Nil)
-      // DATA manifests flow through the assembly/validation below;
-      // positional-delete manifests ride alongside: carried unless this
-      // op materialized them (compact) or replaced the table
-      val prev = prevAll.filter(_.content == ManifestRef.Data)
-      val prevDeletes0 =
-        if (dropDeletes || replaceAll) Nil
-        else prevAll.filter(_.content != ManifestRef.Data)
-      // at most ONE live DV per data file: this commit's DVs (already
-      // merged with the old ones by the writer) retire the stale
-      // entries — manifests that lose entries are rewritten, the rest
-      // carry over by reference
-      val prevDeletes =
-        if (addedDvs.isEmpty) prevDeletes0
-        else {
-          val replaced = addedDvs.map(LakeTable.dvRef).toSet
-          prevDeletes0.flatMap { m =>
-            if (m.content != ManifestRef.Dv) Some(m)
-            else {
-              val entries = io.readManifest(m.name)
-              val kept = entries.filterNot(e => replaced(LakeTable.dvRef(e)))
-              if (kept.size == entries.size) Some(m)
-              else if (kept.isEmpty) None
-              else Some(catalog.writeManifest(md, kept, ManifestRef.Dv))
-            }
-          }
-        }
-      // Serializable validation: any file added since the base snapshot
-      // whose stats overlap the op's predicate conflicts (conservative —
-      // mayMatch can only over-approximate, so no conflict is missed).
-      // The unit of comparison is the file PATH, not the manifest name:
-      // a concurrent CoW rewrite carries untouched base files into a
-      // NEW survivor manifest, and a name-level diff would misread
-      // those unchanged files as added-since-base — a spurious conflict
-      // for any two disjoint CoW ops sharing a manifest. Manifests
-      // fully contained in the base snapshot are skipped wholesale
-      // (they can only hold base files). A base snapshot already
-      // expired from the log validates against EVERYTHING live —
-      // conservative again.
-      validateAddedSince.foreach { case (baseId, pred) =>
-        // the effective current is the op's LINEAGE head: main's
-        // current snapshot, or the branch head for a branch op
-        if (baseSnapshot.map(_.id).getOrElse(-1L) != baseId) {
-          val base = latest.snapshot(baseId)
-          val baseNames = base.map(_.manifests.map(_.name).toSet).getOrElse(Set.empty[String])
-          val basePaths = base.map(_.files.map(_.path).toSet).getOrElse(Set.empty[String])
-          val overlap = prev.iterator.filterNot(m => baseNames(m.name))
-            .flatMap(m => io.readManifest(m.name))
-            .filter(f => !basePaths(f.path) && pred.mayMatch(f, latest))
-          if (overlap.nonEmpty)
-            throw new CommitConflictException(
-              s"$op on $name conflicts with a concurrent commit: files added " +
-                s"after base snapshot $baseId may match ${pred.render}; " +
-                "re-read the table and retry the operation")
-          // A concurrent MoR commit adds only DELETE manifests and
-          // removes nothing — invisible to both the added-data check
-          // above and the removed-file liveness check below, yet its
-          // tombstones retroactively delete rows this op read at base
-          // and is about to re-append: committing would RESURRECT them,
-          // a non-serializable outcome (Iceberg's serializable mode
-          // validates no new delete files apply to the overwritten data
-          // for exactly this reason). Equality tombstones narrow by
-          // their key-column stats (harvested under table field IDs, so
-          // mayMatch applies); positional tombstones carry no
-          // data-column stats and always conflict — conservative, never
-          // misses a resurrection.
-          val baseDeletePaths = base.map(s =>
-            (s.deleteFiles ++ s.eqDeleteFiles ++ s.dvFiles).map(_.path).toSet)
-            .getOrElse(Set.empty[String])
-          val deleteOverlap = prevAll.iterator
-            .filter(m => m.content != ManifestRef.Data && !baseNames(m.name))
-            .flatMap(m => io.readManifest(m.name).map(f => (m.content, f)))
-            .filter { case (content, f) => !baseDeletePaths(f.path) &&
-              (content == ManifestRef.Deletes || content == ManifestRef.Dv ||
-                pred.mayMatch(f, latest)) }
-          if (deleteOverlap.nonEmpty)
-            throw new CommitConflictException(
-              s"$op on $name conflicts with a concurrent commit: delete files " +
-                s"added after base snapshot $baseId may tombstone rows matching " +
-                s"${pred.render}; re-read the table and retry the operation")
-        }
-      }
-      validateNoNewDeletesSince.foreach { baseId =>
-        if (baseSnapshot.map(_.id).getOrElse(-1L) != baseId) {
-          val base = latest.snapshot(baseId)
-          val baseNames = base.map(_.manifests.map(_.name).toSet)
-            .getOrElse(Set.empty[String])
-          val baseDel = base.map(s =>
-            (s.deleteFiles ++ s.eqDeleteFiles ++ s.dvFiles).map(_.path).toSet)
-            .getOrElse(Set.empty[String])
-          val newDeletes = prevAll.iterator
-            .filter(m => m.content != ManifestRef.Data && !baseNames(m.name))
-            .flatMap(m => io.readManifest(m.name))
-            .exists(f => !baseDel(f.path))
-          if (newDeletes)
-            throw new CommitConflictException(
-              s"$op on $name conflicts with a concurrent commit: delete files " +
-                s"were added after base snapshot $baseId and this rewrite read " +
-                "the pre-delete state; re-read the table and retry")
-        }
-      }
-      val dataManifests: Seq[ManifestRef] =
-        if (replaceAll) {
-          removedCount = latest.currentSnapshot.map(_.fileCount).getOrElse(0L)
-          addedRef.toSeq
-        } else if (removedPaths.isEmpty) prev ++ addedRef
-        else {
-          // Conflict validation (snapshot isolation floor): every file
-          // this op rewrites must still be live in the metadata the
-          // commit lands on. Without it, two concurrent copy-on-write
-          // ops that rewrote the same file would BOTH succeed — the
-          // loser's filterNot is a no-op on files the winner already
-          // removed, so its rewritten copies append anyway, duplicating
-          // rows or resurrecting deleted ones.
-          val livePaths = prev.iterator.flatMap(m => io.readManifest(m.name)).map(_.path).toSet
-          val conflicting = removedPaths.filterNot(livePaths)
-          if (conflicting.nonEmpty)
-            throw new CommitConflictException(
-              s"$op on $name conflicts with a concurrent commit: " +
-                s"${conflicting.size} file(s) this op rewrites are no longer live " +
-                s"(e.g. ${conflicting.head}); re-read the table and retry the operation")
-          // rewrite ONLY manifests that lose files; the rest carry over
-          val (touched, untouched) = prev.partition(m =>
-            io.readManifest(m.name).exists(f => removedPaths(f.path)))
-          val survivors = touched.flatMap(m => io.readManifest(m.name))
-            .filterNot(f => removedPaths(f.path))
-          val survivorRef =
-            if (survivors.nonEmpty)
-              Some(catalog.writeManifest(md, survivors, keyTypes = keyTypes))
-            else None
-          untouched ++ survivorRef ++ addedRef
-        }
-      val manifests: Seq[ManifestRef] =
-        dataManifests ++ prevDeletes ++ addedDeleteRef ++ addedEqDeleteRef ++ addedDvRef
-      // ONE pointer per snapshot in the metadata document: the manifest
-      // list (Iceberg's manifest-list layer). Without it each snapshot
-      // entry would embed refs to every live manifest, and the log would
-      // grow O(commits x manifests) — quadratic over history.
-      val listName = catalog.writeManifestList(md, manifests)
-      val snap = Snapshot(newId, baseSnapshot.map(_.id),
-        System.currentTimeMillis(), op, listName,
-        // rollups count DATA only — delete manifests report through the
-        // delete meters (totalDeleteFiles/totalPositionalDeletes)
-        fileCount = dataManifests.map(_.fileCount).sum,
-        totalRecords = dataManifests.map(_.recordCount).sum,
-        totalSizeBytes = dataManifests.map(_.sizeBytes).sum,
-        // extraSummary first: the computed builtins (and the ledger
-        // stamps, auto-derived from exactlyOnce so EVERY exactly-once
-        // commit — append or merge — is attributable to its stream and
-        // batch) are reserved and win over caller-supplied keys
-        summary = extraSummary
-          ++ exactlyOnce.map { case (sinkId, batchId) => Map(
-            "streaming-sink-id" -> sinkId,
-            "streaming-batch-id" -> batchId.toString) }.getOrElse(Map.empty)
-          ++ Map("added-data-files" -> added.size.toString,
-            "removed-data-files" -> removedCount.toString,
-            "added-records" -> added.map(_.recordCount).sum.toString,
-            "added-delete-files" ->
-              (addedDeletes.size + addedEqDeletes.size + addedDvs.size).toString,
-            // DV cardinalities are positional deletes in v3 clothing
-            "added-position-deletes" ->
-              (addedDeletes.map(_.recordCount).sum +
-                addedDvs.map(_.recordCount).sum).toString,
-            "added-equality-deletes" ->
-              addedEqDeletes.map(_.recordCount).sum.toString))(io)
-      val withProps0 = exactlyOnce.fold(latest.properties) { case (sinkId, batchId) =>
-        latest.properties + (s"streaming.last-batch-id.$sinkId" -> batchId.toString)
-      }
-      // Row-lineage honesty flag: a rewrite-shaped commit (files
-      // removed AND re-added — compaction, CoW update/delete/merge)
-      // that did NOT materialize _row_id into its new files re-ids
-      // every surviving row it carried, so stable-id reads must refuse
-      // from here on. Rewrites that carried (lineageCarried — the
-      // default path since round 14) keep lineage readable. Pure
-      // appends, MoR tombstones, DV deletes, and whole-file CoW
-      // deletes (rows GONE, none re-idd) keep lineage. A table REPLACE
-      // starts a fresh incarnation: flag cleared.
-      val withProps =
-        if (replaceAll) withProps0 - LakeTable.RowLineageBrokenProp
-        else if (removedPaths.nonEmpty && added.nonEmpty && !lineageCarried)
-          withProps0 + (LakeTable.RowLineageBrokenProp -> "true")
-        else withProps0
-      // a staged wap.id must be unique across the log: double-submitting
-      // an orchestrator retry would stage the same data twice
-      extraSummary.get("wap.id").foreach { id =>
-        if (latest.snapshots.exists(_.summary.get("wap.id").contains(id)))
-          throw new IllegalArgumentException(
-            s"wap.id '$id' was already staged or published on $name")
-      }
-      // every commit advances the id high-water mark (rollback + expiry
-      // must never let a later commit REUSE an id — see
-      // TableMetadata.lastSnapshotId); transformMeta runs after, its
-      // copies preserve the stamp
-      transformMeta((toBranch match {
-        // a branch commit advances the BRANCH head; main is untouched
-        case Some(b) => latest.copy(snapshots = latest.snapshots :+ snap,
-          // advance the head IN PLACE: retention fields survive commits
-          refs = latest.refs + (b -> latest.refs.get(b)
-            .map(_.copy(snapshotId = newId))
-            .getOrElse(TableRef(TableRef.Branch, newId,
-              createdAtMs = System.currentTimeMillis()))),
-          properties = withProps)
-        case None if stageOnly =>
-          // log only: every pointer (main + refs) stays put
-          latest.copy(snapshots = latest.snapshots :+ snap,
-            properties = withProps)
-        case None => latest.copy(snapshots = latest.snapshots :+ snap,
-          currentSnapshotId = newId, properties = withProps)
-      }).copy(lastSnapshotId = newId, nextRowId = nextRid))
     }
     meta = next
     version = v
-    val snap =
-      if (stageOnly) next.snapshots.maxBy(_.id) // our CAS result's last
-      else toBranch.fold(next.currentSnapshot.get)(b =>
-        next.snapshot(next.refs(b).snapshotId).get)
-    // delete meters from the landed snapshot's delete manifests — real
-    // numbers once deleteWhereMoR has committed tombstones (the
-    // reference surfaces the same meters; its tables keep them at 0)
-    val deleteRefs = snap.manifests.filter(_.content != ManifestRef.Data)
-    val eqRefs = snap.manifests.filter(_.content == ManifestRef.EqDeletes)
-    val report = CommitReport(
-      tableName = name,
-      snapshotId = snap.id,
-      attempts = attempts,
-      addedDataFiles = added.size,
-      addedRecords = added.map(_.recordCount).sum,
-      addedFilesSizeInBytes = added.map(_.sizeBytes).sum,
-      totalDataFiles = snap.fileCount,
-      totalDeleteFiles = deleteRefs.map(_.fileCount).sum,
-      totalRecords = snap.totalRecords,
-      totalFilesSizeInBytes = snap.totalSizeBytes,
-      totalPositionalDeletes = deleteRefs.filter(r =>
-        r.content == ManifestRef.Deletes || r.content == ManifestRef.Dv)
-        .map(_.recordCount).sum,
-      totalEqualityDeletes = eqRefs.map(_.recordCount).sum,
-      totalDurationMs = (System.nanoTime() - t0) / 1000000L)
-    if (sys.env.contains("GRAFT_COMMIT_TRACE"))
-      System.err.println(s"TRACE commitSnapshot op=$op added=${added.size} " +
-        s"removed=${removed.size} ms=${report.totalDurationMs}")
-    catalog.reporter.report(report)
-    report
+    landed.map { case (req, snap) =>
+      val report = producer.report(name, req, snap, attempts, t0)
+      catalog.reporter.report(report)
+      report
+    }
   }
 }
 
@@ -3303,6 +2850,99 @@ object LakeTable {
       eqDeletes: Seq[DataFileEntry] = Nil,
       dvs: Seq[DataFileEntry] = Nil,
       carried: Boolean = false)
+
+  /** One snapshot-producing commit, as [[SnapshotProducer.produce]]
+    * lands it (Iceberg's AppendFiles / RowDelta / RewriteFiles /
+    * OverwriteFiles family). Each kind carries only the inputs its
+    * commits set, so an illegal combination — a branch replace, a
+    * staged row delta, a compaction that adds tombstones — cannot be
+    * written. */
+  private[lake] sealed trait CommitRequest {
+    /** The snapshot operation recorded. */
+    def op: String
+    /** The data files added and retired, and the tombstones added. */
+    def write: RowLevelWrite
+    /** The branch whose head the commit parents from and advances. */
+    def branch: Option[String] = None
+    /** The (sinkId, batchId) ledger entry to check and record. */
+    def exactlyOnce: Option[(String, Long)] = None
+    /** Keys stamped into the summary; the computed counts win. */
+    def summary: Map[String, String] = Map.empty
+    /** Runs on the committed result INSIDE the CAS — against the
+      * winner's metadata on every retry, so it must be pure and may
+      * throw [[CommitConflictException]]. */
+    def transform: TableMetadata => TableMetadata = identity
+  }
+
+  private[lake] object CommitRequest {
+    /** Where an append lands. `Staged` (the wap.id flow) puts the
+      * snapshot in the log with the current head as parent but moves
+      * NO pointer — invisible to every reader until
+      * [[LakeTable.cherrypick]] publishes it. */
+    sealed trait Target
+    case object Main extends Target
+    final case class Branch(name: String) extends Target
+    final case class Staged(wapId: String) extends Target
+
+    /** New data files. `extraSummary` keys ride into the summary. */
+    final case class Append(added: Seq[DataFileEntry], target: Target = Main,
+        override val exactlyOnce: Option[(String, Long)] = None,
+        extraSummary: Map[String, String] = Map.empty,
+        override val transform: TableMetadata => TableMetadata = identity)
+        extends CommitRequest {
+      def op: String = "append"
+      def write: RowLevelWrite = RowLevelWrite(added = added)
+      override def branch: Option[String] =
+        target match { case Branch(b) => Some(b); case _ => None }
+      override def summary: Map[String, String] =
+        target match { case Staged(id) => extraSummary + ("wap.id" -> id); case _ => extraSummary }
+    }
+
+    /** A row-level statement's output. `validateAddedSince` = (base,
+      * pred) upgrades it from snapshot isolation to serializable: files
+      * added, or tombstones committed, since `base` that may match
+      * `pred` fail the commit. */
+    final case class RowDelta(op: String, write: RowLevelWrite,
+        validateAddedSince: Option[(Long, LakePredicate)] = None,
+        override val branch: Option[String] = None,
+        override val exactlyOnce: Option[(String, Long)] = None) extends CommitRequest
+
+    /** The compaction family and the view refresh: `removed` rewritten
+      * as `added` on main. `noNewDeletesSince` fails the commit when a
+      * delete file landed after that base; `dropDeletes` retires every
+      * delete manifest (the rewrite materialized them);
+      * `lineageCarried` says the rewrite materialized _row_id. */
+    final case class Rewrite(added: Seq[DataFileEntry], removed: Seq[DataFileEntry],
+        noNewDeletesSince: Option[Long], dropDeletes: Boolean = false,
+        lineageCarried: Boolean = false,
+        override val transform: TableMetadata => TableMetadata = identity)
+        extends CommitRequest {
+      def op: String = "replace"
+      def write: RowLevelWrite = RowLevelWrite(added, removed, carried = lineageCarried)
+    }
+
+    /** `added` becomes the whole of main: whatever is live AT COMMIT
+      * TIME is removed. An RTAS passes the replacement definition as
+      * `template` (its field ids key the entries' stats) and records
+      * `replace`; INSERT OVERWRITE records `overwrite`. */
+    final case class Replace(added: Seq[DataFileEntry],
+        template: Option[TableMetadata] = None) extends CommitRequest {
+      def op: String = if (template.isEmpty) "overwrite" else "replace"
+      def write: RowLevelWrite = RowLevelWrite(added = added)
+    }
+
+    /** Metadata-only: main's data manifests regroup into documents of
+      * at most `targetEntries` entries; no data file changes. */
+    final case class ManifestRewrite(targetEntries: Int) extends CommitRequest {
+      def op: String = "replace"
+      def write: RowLevelWrite = RowLevelWrite()
+    }
+  }
+
+  /** Thrown inside the commit transform when an exactly-once commit
+    * discovers its batch already landed; callers translate it to a
+    * no-op. */
+  private[lake] final class BatchAlreadyCommitted extends RuntimeException
 
   /** The lossless type promotions (Iceberg's schema-evolution set,
     * restricted to what Spark's parquet reader widens natively):
@@ -3641,7 +3281,7 @@ final class AppendOp private[lake] (table: LakeTable) {
     props += key -> value; this
   }
   def commit(): CommitReport =
-    table.commitSnapshot("append", buf.toSeq, Nil, extraSummary = props.toMap)
+    table.commitSnapshot(Append(buf.toSeq, extraSummary = props.toMap))
 }
 
 /** Scan: manifest-level file pruning (above Catalyst, SURVEY.md §4) then

@@ -264,8 +264,8 @@ class BranchTagSpec extends LakeSuite {
     t.refresh().appendDataToBranch("stage",
       ordersDF.limit(9).withColumn("o_orderkey", col("o_orderkey") + 700000000L))
     intercept[CommitConflictException] {
-      t.refresh().commitSnapshot("delete", Nil, Nil,
-        validateAddedSince = Some((staleBase, pred)), toBranch = Some("stage"))
+      t.refresh().commitSnapshot(LakeTable.CommitRequest.RowDelta("delete",
+        LakeTable.RowLevelWrite(), Some((staleBase, pred)), branch = Some("stage")))
     }
     // the public op (with retries) converges on the post-append head
     t.refresh().deleteWhere(spark, pred, branch = Some("stage"))

@@ -82,9 +82,9 @@ class ConcurrencySpec extends LakeSuite {
     val reports = Await.result(Future.sequence(staged.zipWithIndex.map {
       case (files, i) => Future {
         val handle = cat.loadTable("ns", "brace")
-        if (i % 2 == 0) handle.commitSnapshot("append", files, Nil,
-          toBranch = Some("b"))
-        else handle.commitSnapshot("append", files, Nil)
+        if (i % 2 == 0) handle.commitSnapshot(LakeTable.CommitRequest.Append(files,
+          LakeTable.CommitRequest.Branch("b")))
+        else handle.commitSnapshot(LakeTable.CommitRequest.Append(files))
       }
     }), 120.seconds)
 

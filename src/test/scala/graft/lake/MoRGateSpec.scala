@@ -201,8 +201,8 @@ class MoRGateSpec extends LakeSuite {
     // against `base` sailed through and re-appended the tombstoned rows
     t.refresh().deleteWhereMoR(spark, pred)
     val e = intercept[CommitConflictException] {
-      t.refresh().commitSnapshot("overwrite", Nil, Nil,
-        validateAddedSince = Some((base, pred)))
+      t.refresh().commitSnapshot(LakeTable.CommitRequest.RowDelta("overwrite",
+        LakeTable.RowLevelWrite(), Some((base, pred))))
     }
     assert(e.getMessage.contains("delete files"))
 
@@ -212,8 +212,8 @@ class MoRGateSpec extends LakeSuite {
     val upd = ordersDF.filter(col("o_orderkey") % 10 === 0 && col("o_orderstatus") =!= "F")
       .withColumn("o_totalprice", col("o_totalprice") * 2)
     t.refresh().mergeIntoMoR(spark, upd, Seq("o_orderkey"))
-    t.refresh().commitSnapshot("overwrite", Nil, Nil,
-      validateAddedSince = Some((base2, LakePredicate.Eq("o_orderkey", Long.box(-5L)))))
+    t.refresh().commitSnapshot(LakeTable.CommitRequest.RowDelta("overwrite",
+      LakeTable.RowLevelWrite(), Some((base2, LakePredicate.Eq("o_orderkey", Long.box(-5L))))))
     // ...while one inside the range does
     val base3 = t.refresh().currentSnapshotId
     val hitKey = upd.select("o_orderkey").head.getLong(0)
@@ -221,8 +221,8 @@ class MoRGateSpec extends LakeSuite {
       upd.limit(50).withColumn("o_totalprice", col("o_totalprice") + 1.0),
       Seq("o_orderkey"))
     intercept[CommitConflictException] {
-      t.refresh().commitSnapshot("overwrite", Nil, Nil,
-        validateAddedSince = Some((base3, LakePredicate.Eq("o_orderkey", Long.box(hitKey)))))
+      t.refresh().commitSnapshot(LakeTable.CommitRequest.RowDelta("overwrite",
+        LakeTable.RowLevelWrite(), Some((base3, LakePredicate.Eq("o_orderkey", Long.box(hitKey))))))
     }
   }
 }
