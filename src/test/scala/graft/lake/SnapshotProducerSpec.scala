@@ -2,10 +2,10 @@ package graft.lake
 
 import org.apache.spark.sql.functions._
 
-/** Commits that once built their own snapshots, now landed through
-  * [[SnapshotProducer]]: a CTAS table gets row lineage like any append,
-  * and `rewriteManifests` meters deletion vectors like every other
-  * commit report. */
+/** The snapshots made outside `commitSnapshot` come from
+  * [[SnapshotProducer]] too: a CTAS table gets row lineage like any
+  * append, and `rewriteManifests` meters deletion vectors like every
+  * other commit report. */
 class SnapshotProducerSpec extends LakeSuite {
 
   test("CTAS stamps row lineage: dense ids that a CoW UPDATE keeps") {
