@@ -35,16 +35,18 @@ object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       sys.env.getOrElse("SPARK_GRAFT_CONF_AQE_CACHED", "true"))
-      // FileOutputCommitter v2 (round-19, guide §6): v1's job commit
-      // renames every task's output SEQUENTIALLY on the driver —
-      // O(files) round trips per write, the classic object-store commit
-      // bottleneck. v2 moves each file at task commit (parallel, in the
-      // task); same committed layout, same part-file names. The failure
-      // mode v1 guards against (partial output visible after a mid-job
-      // crash) is already covered by the lake write protocol: every
-      // write lands in a fresh UUID directory and only footer-harvested
-      // files from a SUCCESSFUL write enter the manifest — an aborted
-      // job's files are unreferenced orphans removeOrphanFiles reclaims.
+      // FileOutputCommitter v2 (round-19, guide §6) for the NON-lake
+      // file writes — corpus data generation, Verify's dumps, bench
+      // scratch copies. Lake writes use no output committer at all
+      // (graft.lake.LakeWriter: tasks write final files and return their
+      // manifest entries). v1's job commit renames every task's output
+      // SEQUENTIALLY on the driver — O(files) round trips per write, the
+      // classic object-store commit bottleneck; v2 moves each file at
+      // task commit (parallel, in the task), same layout and names. v2's
+      // task commit is not atomic (MAPREDUCE-7282): a task that dies
+      // mid-commit can leave part of its output, so these writes must
+      // not be read as all-or-nothing. Kept because switching the corpus
+      // set-up back to v1 puts its set-up time at risk unmeasured.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
         sys.env.getOrElse("SPARK_GRAFT_CONF_FOC_ALGO", "2"))
       // Spark's generated-class cache (static conf, default 100),

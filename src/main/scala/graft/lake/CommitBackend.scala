@@ -60,6 +60,16 @@ private[lake] object DataFs {
     buf.toSeq
   }
 
+  /** The `.parquet` files directly under `dir`, by name — the import
+    * set of `addFiles`, listed with the caller's Hadoop conf. */
+  def parquetFiles(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val h = new HPath(dir)
+    h.getFileSystem(conf).listStatus(h).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+  }
+
   /** Best-effort depth-first removal of EMPTY directories under `root`
     * (root itself survives): the per-write UUID dirs the orphan sweep
     * empties are FS-only debris — object stores have no directories, so

@@ -112,8 +112,9 @@ final class LakeTable private[lake] (
   }
   private[lake] def version0: Int = version
 
-  /** Write df as parquet data files under this table, harvesting footer
-    * stats into manifest entries (A7: the MetricsConfig analog). When a
+  /** Write df as parquet data files under this table through
+    * [[LakeWriter]], whose tasks turn each file's footer stats into its
+    * manifest entry (A7: the MetricsConfig analog). When a
     * partition spec exists the data is range-clustered on the transform
     * values (then raw sources), so files align with partition boundaries
     * and min/max pruning does the work of partition pruning at scale.
@@ -171,63 +172,26 @@ final class LakeTable private[lake] (
       else clusteredRaw
     // Every physical column gets its stable parquet field ID (the table
     // schema stays ID-free for API identity; IDs live in the manifest),
-    // so later renames resolve old files by ID, not name. Tables with
-    // struct columns carry NESTED field IDs too — those live in nested
-    // StructField metadata, which no select alias can set, so the ID
-    // schema attaches verbatim over the same rows (nullability comes
-    // from the data: the attach must not claim non-null for a source
-    // that is merely compatible).
+    // so later renames resolve old files by ID, not name. The writer
+    // takes the ID schema for the same rows: types and nullability from
+    // the data, the IDs from the table. Tables with struct columns carry
+    // NESTED field IDs too, attached recursively (nullability from the
+    // data: the schema must not claim non-null for a source that is
+    // merely compatible).
     val idSchema =
       if (!carryRowIds) meta.schemaWithFieldIds
       else org.apache.spark.sql.types.StructType(
         meta.schemaWithFieldIds.fields :+ LakeTable.rowIdField)
-    // variant-bearing tables take the pinned-schema path too (round-17):
-    // a select-alias field id does NOT survive optimization — Spark
-    // 4.1.2's PushVariantIntoScan rebuilds the project list over the
-    // shredded scan and drops alias metadata — but a schema pinned over
-    // the executed child rows sits ABOVE the optimizer's reach, so the
-    // rule can stay enabled on the reads that feed rewrites
-    val withIds =
-      if (meta.fieldIds.keysIterator.exists(_.contains('.')) || hasVariantColumn)
-        org.apache.spark.sql.graftbridge.SessionBridge.withSchema(
-          clustered, LakeTable.writeSchema(clustered.schema, idSchema))
-      else clustered.select(idSchema.fields.map(f =>
-        clustered.col(f.name).as(f.name, f.metadata)): _*)
-    // micros timestamps: INT96 would write no footer stats to prune on.
-    // The confs are pinned on SessionBridge's derived session for this
-    // caller and overlay (shared context, its own SQLConf), never on the
-    // caller's: a save/restore on the shared session could interleave
-    // across concurrent writers and leak TIMESTAMP_MICROS session-wide,
-    // changing how other writes annotate computed timestamp columns
-    // (isAdjustedToUTC) and breaking oracle schema parity.
-    // write.target-file-size-bytes (Iceberg's target file size): cap
-    // rows per output file at target / avgRowBytes, with the average
-    // row size from the current SNAPSHOT's totalSizeBytes/totalRecords
-    // rollups — O(1) driver work and zero IO (round-11; summing
-    // DataFileEntry rows parsed every live manifest document on each
-    // append, exactly the O(#files) parse width distributed planning
-    // exists to bound). First write (no snapshot history) has no size
-    // basis and writes unrolled; opt-in property, so pinned-numFiles
-    // tests and default tables are untouched.
-    val rollOpt = (for {
-      raw <- meta.properties.get("write.target-file-size-bytes")
-      target = try raw.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"write.target-file-size-bytes must be a plain byte count, got '$raw'")
-      }
-      if target > 0
-      snap <- meta.currentSnapshot
-      if snap.totalRecords > 0
-      avgRow = math.max(1L, snap.totalSizeBytes / snap.totalRecords)
-    } yield "maxRecordsPerFile" -> math.max(1L, target / avgRow).toString).toMap
-    org.apache.spark.sql.graftbridge.SessionBridge
-      .withConfs(withIds, Map(
-        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-        "spark.sql.parquet.fieldId.write.enabled" -> "true"))
-      .write.options(bloomFilterOptions ++ rollOpt).parquet(dir)
+    val writeSchema =
+      if (meta.fieldIds.keysIterator.exists(_.contains('.')))
+        LakeTable.writeSchema(clustered.schema, idSchema)
+      else org.apache.spark.sql.types.StructType(
+        clustered.schema.fields.zip(idSchema.fields).map { case (d, i) =>
+          d.copy(metadata = i.metadata) })
     // stamp which spec derived these partitionValues: after a spec
     // evolution, pruning resolves each file's values under ITS spec
-    val entries = StatsHarvester.harvest(spark, dir, schema, spec, meta.fieldIds)
+    val entries = LakeWriter.write(clustered, dir, writeSchema, writeOptions,
+      EntryStats(schema, spec, meta.fieldIds))
       .map(_.copy(specId = meta.currentSpecId))
     withBucketValues(spark, entries, dir, spec)
   }
@@ -268,7 +232,10 @@ final class LakeTable private[lake] (
     } catch { case scala.util.control.NonFatal(_) => entries }
   }
 
-  /** Parquet BLOOM FILTERS on write (Iceberg's property names:
+  /** The table's parquet write options, shared by every data-file
+    * write (batch and streaming).
+    *
+    * Parquet BLOOM FILTERS on write (Iceberg's property names:
     * `write.parquet.bloom-filter-enabled.column.<col>` = true, plus
     * optional `write.parquet.bloom-filter-max-bytes` and per-column
     * `...bloom-filter-fpp.column.<col>`): point lookups on
@@ -280,10 +247,10 @@ final class LakeTable private[lake] (
     * zero read-path code. Per-file min/max pruning and clustering
     * still do the macro work; blooms cover the needle-in-row-group
     * case at ~10 bits/row. */
-  private def bloomFilterOptions: Map[String, String] = {
+  private[lake] def writeOptions: Map[String, String] = {
     val enabled = "write.parquet.bloom-filter-enabled.column."
     val fpp = "write.parquet.bloom-filter-fpp.column."
-    meta.properties.collect {
+    val blooms = meta.properties.collect {
       case (k, v) if k.startsWith(enabled) =>
         s"parquet.bloom.filter.enabled#${k.stripPrefix(enabled)}" -> v
       case (k, v) if k.startsWith(fpp) =>
@@ -291,6 +258,27 @@ final class LakeTable private[lake] (
       case (k, v) if k == "write.parquet.bloom-filter-max-bytes" =>
         "parquet.bloom.filter.max.bytes" -> v
     }
+    // write.target-file-size-bytes (Iceberg's target file size): cap
+    // rows per output file at target / avgRowBytes, with the average
+    // row size from the current SNAPSHOT's totalSizeBytes/totalRecords
+    // rollups — O(1) driver work and zero IO (round-11; summing
+    // DataFileEntry rows parsed every live manifest document on each
+    // append, exactly the O(#files) parse width distributed planning
+    // exists to bound). First write (no snapshot history) has no size
+    // basis and writes unrolled; opt-in property, so pinned-numFiles
+    // tests and default tables are untouched.
+    val rollOpt = for {
+      raw <- meta.properties.get("write.target-file-size-bytes")
+      target = try raw.toLong catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"write.target-file-size-bytes must be a plain byte count, got '$raw'")
+      }
+      if target > 0
+      snap <- meta.currentSnapshot
+      if snap.totalRecords > 0
+      avgRow = math.max(1L, snap.totalSizeBytes / snap.totalRecords)
+    } yield "maxRecordsPerFile" -> math.max(1L, target / avgRow).toString
+    blooms ++ rollOpt
   }
 
   /** The write batch's z-order cluster key: each dimension is
@@ -368,20 +356,6 @@ final class LakeTable private[lake] (
           nullable = true)) else Nil))
       spark.createDataFrame(new java.util.ArrayList[Row](), s)
     } else parts.reduce(_.unionByName(_))
-  }
-
-  /** Does this table's schema carry a VARIANT column anywhere? Gates
-    * the schema-pinned write path below. */
-  private lazy val hasVariantColumn: Boolean = {
-    def rec(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-      case org.apache.spark.sql.types.VariantType => true
-      case s: StructType => s.fields.exists(f => rec(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => rec(a.elementType)
-      case m: org.apache.spark.sql.types.MapType =>
-        rec(m.keyType) || rec(m.valueType)
-      case _ => false
-    }
-    schema.fields.exists(f => rec(f.dataType))
   }
 
   /** Engine-side read confs. Spark's PushVariantIntoScan rewrite stays
@@ -779,7 +753,9 @@ final class LakeTable private[lake] (
       org.apache.spark.sql.types.StructField(rn, f.dataType, nullable = true) })
     val importIds = present.flatMap { case (f, rn) =>
       m.fieldIds.get(f.name).map(rn -> _) }.toMap
-    val entries = StatsHarvester.harvest(spark, srcDir, importSchema, Nil, importIds)
+    val entries = StatsHarvester.harvestFiles(spark,
+      DataFs.parquetFiles(srcDir, spark.sessionState.newHadoopConf()),
+      importSchema, Nil, importIds)
       .map(_.copy(specId = m.currentSpecId, nameMapped = true))
     require(entries.nonEmpty,
       s"addFiles($srcDir) on $name: no non-empty parquet files in the directory")
@@ -2044,19 +2020,13 @@ final class LakeTable private[lake] (
       // through the same ID-matching path as data — renames never
       // detach live tombstones
       val idSchema = meta.schemaWithFieldIds
-      val dir = s"$location/data/${UUID.randomUUID}"
-      org.apache.spark.sql.graftbridge.SessionBridge
-        .withConfs(
-          src.select(keys.map(k =>
-            src.col(k).as(k, idSchema(idSchema.fieldIndex(k)).metadata)): _*),
-          Map(
-            "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-            "spark.sql.parquet.fieldId.write.enabled" -> "true"))
-        .write.parquet(dir)
-      val keySchema = StructType(keys.map(k => schema(schema.fieldIndex(k))).toArray)
-      val eqEntries = StatsHarvester
-        .harvest(spark, dir, keySchema, Nil, meta.fieldIds.view.filterKeys(keys.contains).toMap)
-        .filter(_.recordCount > 0L)
+      val keyRows = src.select(keys.map(src.col): _*)
+      val keySchema = StructType(keyRows.schema.fields.map(f =>
+        f.copy(metadata = idSchema(idSchema.fieldIndex(f.name)).metadata)))
+      val eqEntries = LakeWriter.write(keyRows, s"$location/data/${UUID.randomUUID}",
+        keySchema, Map.empty,
+        EntryStats(StructType(keys.map(k => schema(schema.fieldIndex(k))).toArray), Nil,
+          meta.fieldIds.view.filterKeys(keys.contains).toMap))
         .map(_.copy(eqFieldIds = keys.map(meta.fieldIds)))
       RowLevelWrite(added = added, eqDeletes = eqEntries)
     } else {
@@ -2213,12 +2183,11 @@ final class LakeTable private[lake] (
     if (meta.properties.get("write.delete.vector.enabled").contains("true"))
       RowLevelWrite(dvs = writeDeleteVectors(spark, coords, snap.toSeq.flatMap(_.dvFiles)))
     else {
-      val dir = s"$location/data/${UUID.randomUUID}"
-      coords.repartitionByRange(math.max(1, touchedFiles / 16), col("file_path"))
-        .write.parquet(dir)
-      RowLevelWrite(posDeletes = StatsHarvester.harvest(spark, dir,
-        LakeTable.DeleteFileSchema, Nil, LakeTable.DeleteFieldIds)
-        .filter(_.recordCount > 0L))
+      val clustered =
+        coords.repartitionByRange(math.max(1, touchedFiles / 16), col("file_path"))
+      RowLevelWrite(posDeletes = LakeWriter.write(clustered,
+        s"$location/data/${UUID.randomUUID}", clustered.schema, Map.empty,
+        EntryStats(LakeTable.DeleteFileSchema, Nil, LakeTable.DeleteFieldIds)))
     }
   }
 
@@ -2753,7 +2722,8 @@ final class LakeTable private[lake] (
           removed += p
         }
     }
-    // Spark write markers (_SUCCESS) and their per-write UUID dirs:
+    // Spark write markers (_SUCCESS, left by writes made through Spark's
+    // file committer before the lake writer) and their per-write UUID dirs:
     // once a dir's last parquet is swept (or the write never committed)
     // the marker and the empty dir are unbounded small-object debris on
     // a heavy-churn table. A marker goes when NO live file shares its
@@ -2966,7 +2936,7 @@ object LakeTable {
 
   /** The write-time schema for a struct-carrying table: field-ID
     * metadata from `ids` (recursively), nullability from the actual
-    * `data` — attached verbatim by SessionBridge.withSchema, so the
+    * `data` — the lake writer encodes the rows under it, so the
     * claimed schema must not be stricter than the rows it describes. */
   private[lake] def writeSchema(data: StructType, ids: StructType): StructType =
     StructType(ids.fields.zip(data.fields).map { case (idF, dF) =>

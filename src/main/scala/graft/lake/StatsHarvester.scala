@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -8,96 +7,76 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
-/** Reads back the parquet footers of freshly written data files and
-  * turns them into manifest entries with per-column min/max/nullCount —
+/** Parquet footer → manifest entry with per-column min/max/nullCount:
   * the analog of the reference's write-side stats collection
   * (reference: MetricsConfig.forTable on the writer,
-  * IntegrationTest.java:84). Spark's parquet writer already computed the
-  * stats; we only harvest, never rescan data.
+  * IntegrationTest.java:84). Every lake write builds its entries in
+  * the write task, from the footer its writer just produced
+  * ([[LakeWriter]]); `addFiles` reads the footers of the foreign files
+  * it imports. Parquet already computed the stats — nothing rescans
+  * data.
   */
 object StatsHarvester {
 
-  /** All data files under dir → manifest entries. Stat maps come back
-    * keyed by FIELD ID (`fieldIds(name).toString`) and partition values
-    * by spec position — the rename-proof manifest encoding. */
-  def harvest(spark: SparkSession, dir: String, schema: StructType,
-      spec: Seq[PartitionField], fieldIds: Map[String, Int]): Seq[DataFileEntry] = {
+  /** Entries for EXACTLY these files, in the given order, opening each
+    * footer once. Empty files yield no entry. */
+  def harvestFiles(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
+      schema: StructType, spec: Seq[PartitionField],
+      fieldIds: Map[String, Int]): Seq[DataFileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    harvestStatuses(conf,
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")),
-      schema, spec, fieldIds)
-  }
-
-  /** Harvest EXACTLY these files — the streaming sink's epoch commit
-    * shape: opening only task-committed footers keeps a crashed
-    * attempt's truncated partial file from poisoning every later
-    * commit, and the cost O(epoch files) instead of O(all files ever
-    * written under the query directory). */
-  def harvestPaths(spark: SparkSession, paths: Seq[String], schema: StructType,
-      spec: Seq[PartitionField], fieldIds: Map[String, Int]): Seq[DataFileEntry] = {
-    val conf = spark.sessionState.newHadoopConf()
-    harvestStatuses(conf, paths.map { p =>
-      val h = new Path(p)
-      h.getFileSystem(conf).getFileStatus(h)
-    }, schema, spec, fieldIds)
-  }
-
-  private def harvestStatuses(conf: org.apache.hadoop.conf.Configuration,
-      statuses: Seq[org.apache.hadoop.fs.FileStatus], schema: StructType,
-      spec: Seq[PartitionField], fieldIds: Map[String, Int]): Seq[DataFileEntry] = {
     // Footer opens are independent per-file IO (~10-15 ms each on local
-    // disk, more on object stores) and this runs on the DRIVER between
-    // jobs — read them concurrently. Parallel collections preserve
-    // element order, so the manifest entry order (sorted by file name)
-    // stays deterministic.
-    val sorted = statuses.sortBy(_.getPath.getName)
+    // disk, more on object stores) and this runs on the DRIVER — read
+    // them concurrently. Parallel collections preserve element order.
+    def one(st: org.apache.hadoop.fs.FileStatus): DataFileEntry = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try entry(st.getPath.toString, st.getLen, reader.getFooter, schema, spec, fieldIds)
+      finally reader.close()
+    }
     val mapped =
-      if (sorted.size <= 1) sorted.map(harvestOne(conf, schema, spec, fieldIds, _))
+      if (files.size <= 1) files.map(one)
       else {
         import scala.collection.parallel.CollectionConverters._
-        sorted.par.map(harvestOne(conf, schema, spec, fieldIds, _)).seq
+        files.par.map(one).seq
       }
     mapped.filter(_.recordCount > 0)
   }
 
-  private def harvestOne(conf: org.apache.hadoop.conf.Configuration,
-      schema: StructType, spec: Seq[PartitionField], fieldIds: Map[String, Int],
-      st: org.apache.hadoop.fs.FileStatus): DataFileEntry = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      var mins = Map.empty[String, String]
-      var maxs = Map.empty[String, String]
-      var nulls = Map.empty[String, Long]
-      schema.fields.foreach { field =>
-        val key = fieldIds.get(field.name).map(_.toString).getOrElse(field.name)
-        val chunks = blocks.flatMap(_.getColumns.asScala
-          .find(_.getPath.toDotString == field.name))
-        val unitScale = chunks.headOption.map(tsNanosPerUnit).getOrElse(1L)
-        val stats = chunks.map(_.getStatistics).filter(s =>
-          s != null && !s.isEmpty && s.hasNonNullValue)
-        if (stats.nonEmpty && stats.size == chunks.size) {
-          val ms = stats.flatMap(s => statString(field.dataType, s.genericGetMin(), unitScale))
-          val xs = stats.flatMap(s => statString(field.dataType, s.genericGetMax(), unitScale))
-          if (ms.size == stats.size && xs.size == stats.size) {
-            mins += key -> ms.reduce((a, b) =>
-              if (Stats.cmp(field.dataType, a, b) <= 0) a else b)
-            maxs += key -> xs.reduce((a, b) =>
-              if (Stats.cmp(field.dataType, a, b) >= 0) a else b)
-          }
+  /** One file's manifest entry from its footer. Stat maps come back
+    * keyed by FIELD ID (`fieldIds(name).toString`) and partition values
+    * by spec position — the rename-proof manifest encoding. Only
+    * top-level primitive columns of `schema` get stats. */
+  def entry(path: String, sizeBytes: Long,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata, schema: StructType,
+      spec: Seq[PartitionField], fieldIds: Map[String, Int]): DataFileEntry = {
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    var mins = Map.empty[String, String]
+    var maxs = Map.empty[String, String]
+    var nulls = Map.empty[String, Long]
+    schema.fields.foreach { field =>
+      val key = fieldIds.get(field.name).map(_.toString).getOrElse(field.name)
+      val chunks = blocks.flatMap(_.getColumns.asScala
+        .find(_.getPath.toDotString == field.name))
+      val unitScale = chunks.headOption.map(tsNanosPerUnit).getOrElse(1L)
+      val stats = chunks.map(_.getStatistics).filter(s =>
+        s != null && !s.isEmpty && s.hasNonNullValue)
+      if (stats.nonEmpty && stats.size == chunks.size) {
+        val ms = stats.flatMap(s => statString(field.dataType, s.genericGetMin(), unitScale))
+        val xs = stats.flatMap(s => statString(field.dataType, s.genericGetMax(), unitScale))
+        if (ms.size == stats.size && xs.size == stats.size) {
+          mins += key -> ms.reduce((a, b) =>
+            if (Stats.cmp(field.dataType, a, b) <= 0) a else b)
+          maxs += key -> xs.reduce((a, b) =>
+            if (Stats.cmp(field.dataType, a, b) >= 0) a else b)
         }
-        val nullCounts = chunks.map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty)
-        if (nullCounts.nonEmpty && nullCounts.size == chunks.size)
-          nulls += key -> nullCounts.map(_.getNumNulls).sum
       }
-      DataFileEntry(st.getPath.toString, rows, st.getLen, mins, maxs, nulls,
-        partitionValues(spec, schema, fieldIds, mins, maxs))
-    } finally reader.close()
+      val nullCounts = chunks.map(_.getStatistics)
+        .filter(s => s != null && !s.isEmpty)
+      if (nullCounts.nonEmpty && nullCounts.size == chunks.size)
+        nulls += key -> nullCounts.map(_.getNumNulls).sum
+    }
+    DataFileEntry(path, rows, sizeBytes, mins, maxs, nulls,
+      partitionValues(spec, schema, fieldIds, mins, maxs))
   }
 
   /** Nanos per stored unit for timestamp columns (canonical stat form is

@@ -2,37 +2,26 @@ package graft.lake.sql
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.types.StructType
 
-import graft.lake.{LakeTable, StatsHarvester}
-
-/** One data file written and task-committed by an executor. */
-private[sql] final case class LakeFileCommitted(fileName: String, rows: Long)
-    extends WriterCommitMessage
+import graft.lake.{EntryStats, LakeTable, LakeWriter}
 
 /** Native DSv2 STREAMING SINK for lake tables —
   * `df.writeStream.toTable("cat.ns.t")` without foreachBatch:
   *
   *  - executors stream rows straight into parquet files under a
-  *    per-query data directory (Spark's own `ParquetWriteSupport`, the
-  *    exact encoding the batch writer produces: micros timestamps,
-  *    parquet field IDs for rename-proof reads);
-  *  - the driver's epoch commit harvests footer stats for EXACTLY the
-  *    task-committed files (a crashed task's partial file is invisible
-  *    — never referenced, reclaimed by removeOrphanFiles) and lands ONE
-  *    exactly-once append commit per epoch: the (queryId, epochId)
-  *    ledger is checked inside the commit CAS, so a restarted or
-  *    zombie driver replaying an epoch is a durable no-op.
+  *    per-query data directory through the lake writer
+  *    ([[graft.lake.LakeWriter]]: the batch write's encoding, codec,
+  *    bloom filters and file row cap), each task returning its files'
+  *    manifest entries;
+  *  - the driver's epoch commit lands EXACTLY the task-committed
+  *    entries (a crashed task's partial file is never referenced and
+  *    never opened; removeOrphanFiles reclaims it) as ONE exactly-once
+  *    append commit per epoch: the (queryId, epochId) ledger is checked
+  *    inside the commit CAS, so a restarted or zombie driver replaying
+  *    an epoch is a durable no-op.
   *
   * Append output mode only: a lake table is an append-only log of
   * snapshots; complete-mode truncation per epoch is refused at
@@ -45,117 +34,32 @@ private[sql] final class LakeStreamingWrite(lt: LakeTable, queryId: String,
   // replays write fresh files and the ledger no-ops the commit — the
   // losers are orphans removeOrphanFiles reclaims
   private val dir = s"${lt.location}/data/stream-${UUID.randomUUID}"
+  // the spec this epoch's tasks derive partition values under
+  @volatile private var specId = lt.metadata.currentSpecId
 
+  // per epoch, from the table's current metadata (its write properties)
+  // and the active stream session: its SQLConf picks the codec and its
+  // Hadoop conf — spark.hadoop.* settings, object-store credentials,
+  // custom fs registrations — rides to the executors, so streaming
+  // writes reach exactly the warehouses batch writes reach
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LakeStreamingWriterFactory(lt.metadata.schemaWithFieldIds, dir,
-      // the CALLER's hadoop conf rides to the executors: a bare
-      // new Configuration() there would drop spark.hadoop.* settings —
-      // object-store credentials, custom fs registrations — so
-      // streaming writes would fail on exactly the warehouses batch
-      // writes reach
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val t = lt.refresh()
+    specId = t.metadata.currentSpecId
+    LakeWriter.factory(SparkSession.active, dir, t.metadata.schemaWithFieldIds,
+      t.writeOptions, EntryStats(t.schema, t.spec, t.metadata.fieldIds))
+  }
 
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.collect {
-      case m: LakeFileCommitted if m.rows > 0L => m.fileName
-    }.toSet
-    if (committed.nonEmpty) {
-      val t = lt.refresh()
-      // harvest EXACTLY the task-committed files: a speculative or
-      // crashed attempt's partial file is never opened (a truncated
-      // footer would throw and poison every later epoch), and the
-      // commit pays O(epoch files), not O(files ever written)
-      val entries = StatsHarvester
-        .harvestPaths(SparkSession.active, committed.toSeq.map(n => s"$dir/$n"),
-          t.schema, t.spec, t.metadata.fieldIds)
-        .map(_.copy(specId = t.metadata.currentSpecId))
-      t.appendFilesExactlyOnce(entries, s"dsv2-$queryId", epochId, branch)
-    } else {
-      // empty epoch: still advance the ledger so a replay cannot
-      // reorder against later epochs
-      lt.refresh().appendFilesExactlyOnce(Nil, s"dsv2-$queryId", epochId, branch)
-    }
+    // an empty epoch still advances the ledger, so a replay cannot
+    // reorder against later epochs
+    lt.refresh().appendFilesExactlyOnce(
+      LakeWriter.entriesOf(messages).map(_.copy(specId = specId)),
+      s"dsv2-$queryId", epochId, branch)
     ()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Serializable executor-side factory: schema (with parquet field IDs)
-  * plus the target directory; each task writes one uniquely-named file. */
-private[sql] final class LakeStreamingWriterFactory(
-    schema: StructType, dir: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new LakeParquetDataWriter(schema,
-      s"$dir/part-$epochId-$partitionId-${UUID.randomUUID}.parquet", conf)
-}
-
-/** Streams InternalRows into one parquet file through Spark's own
-  * ParquetWriteSupport — identical encoding to the batch write path
-  * (TIMESTAMP_MICROS so footer stats prune, field IDs so renames keep
-  * resolving, CORRECTED rebase, modern layout). */
-private[sql] final class LakeParquetDataWriter(schema: StructType, path: String,
-    sconf: org.apache.spark.util.SerializableConfiguration)
-    extends DataWriter[InternalRow] {
-
-  private val hPath = new HPath(path)
-
-  private val writer: ParquetWriter[InternalRow] = {
-    val conf = new Configuration(sconf.value)
-    // ParquetWriteSupport.init reads these SQLConf keys from the
-    // Configuration (the batch path copies them from the session; an
-    // executor task has no session, so pin them explicitly)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    ParquetWriteSupport.setSchema(schema, conf)
-    new LakeParquetDataWriter.RowWriterBuilder(hPath)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-  }
-
-  private var rows = 0L
-
-  override def write(record: InternalRow): Unit = {
-    writer.write(record)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    if (rows == 0L) { // empty partition: no file in the directory at all
-      hPath.getFileSystem(sconf.value).delete(hPath, false)
-    }
-    LakeFileCommitted(hPath.getName, rows)
-  }
-
-  override def abort(): Unit = {
-    try writer.close() catch { case _: Throwable => () }
-    try hPath.getFileSystem(sconf.value).delete(hPath, false)
-    catch { case _: Throwable => () }
-  }
-
-  override def close(): Unit = ()
-}
-
-private[sql] object LakeParquetDataWriter {
-  /** ParquetWriter builder wired to Spark's WriteSupport. */
-  final class RowWriterBuilder(p: HPath)
-      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](p) {
-    override def self(): RowWriterBuilder = this
-    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-      new ParquetWriteSupport
-  }
 }

@@ -13,8 +13,8 @@ import scala.collection.mutable
 /** Spark's file index over a manifest-listed file set: the manifest
   * is the table's file list (Iceberg's planFiles contract), so every
   * entry serves as a [[FileStatus]] built from what the manifest already
-  * recorded — the qualified path and the exact length the footer
-  * harvest took from `FileStatus.getLen`. No existence check, no glob
+  * recorded — the qualified path and the exact length the writer
+  * recorded (`FileStatus.getLen` for imported files). No existence check, no glob
   * expansion, no listing: Spark's own index would re-check every path
   * on the driver and, above its 32-path threshold, list them all again
   * in a parallel job just to learn sizes the entries carry. The parquet

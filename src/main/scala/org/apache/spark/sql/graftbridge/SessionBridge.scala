@@ -94,6 +94,20 @@ object SessionBridge {
     }
   }
 
+  /** Run `write` over `df`'s rows as ONE SQL execution on the derived
+    * session carrying `confs`, through Spark's DSv2 batch-write node
+    * (`WriteToDataSourceV2`: commit coordinator, task commit messages,
+    * `BatchWrite.commit` on success and `abort` on failure). The
+    * caller's `QueryExecutionListener`s see it, as they see any write
+    * on the derived session. */
+  def writeBatch(df: DataFrame, confs: Map[String, String],
+      write: org.apache.spark.sql.connector.write.BatchWrite): Unit = {
+    CDataset.ofRows(sessionWithConfs(df.sparkSession, confs).asInstanceOf[CSparkSession],
+      org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2(
+        None, write, df.queryExecution.analyzed, Nil)).collect()
+    ()
+  }
+
   /** Attach `schema` to `df` VERBATIM over the same physical rows
     * (caller guarantees identical layout — names/types/order equal,
     * only metadata/nullability may differ). This is the only way to

@@ -81,7 +81,7 @@ class SessionBridgeSpec extends LakeSuite {
     try {
       t.appendData(rows(caller, 21L to 40L), numFiles = 1)
       def sawWrite = plans.asScala.exists(p =>
-        p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(t.location))
+        p.contains("WriteToDataSourceV2") && p.contains(t.location))
       // QueryExecutionListener delivery is async — poll briefly
       val deadline = System.currentTimeMillis() + 15000
       while (System.currentTimeMillis() < deadline && !sawWrite) Thread.sleep(50)
