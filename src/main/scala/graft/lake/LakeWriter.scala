@@ -85,13 +85,13 @@ private[lake] object LakeWriter {
     val session = SessionBridge.sessionWithConfs(spark, Overlay)
     val sqlConf = session.sessionState.conf
     val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
-    ParquetUtils.prepareWrite(sqlConf, job, schema, new ParquetOptions(options, sqlConf))
+    val parquetOptions = new ParquetOptions(options, sqlConf)
+    ParquetUtils.prepareWrite(sqlConf, job, schema, parquetOptions)
     val conf = job.getConfiguration
     val out = new HPath(dir)
     val maxRecords = options.get("maxRecordsPerFile").map(_.toLong)
       .getOrElse(sqlConf.maxRecordsPerFile)
-    val shred = new ParquetOptions(options, sqlConf).inferShreddingForVariant &&
-      hasVariant(schema)
+    val shred = parquetOptions.inferShreddingForVariant && hasVariant(schema)
     new LakeWriterFactory(out.getFileSystem(conf).makeQualified(out).toString,
       new SerializableConfiguration(conf), columnOptions(conf), maxRecords,
       Option.when(shred)(schema), stats)
@@ -222,7 +222,7 @@ private[lake] final class LakeBatchWrite(factory: LakeWriterFactory) extends Bat
   * build each file's entry. */
 private[lake] final class LakeWriterFactory(val dir: String,
     conf: SerializableConfiguration, perColumn: Seq[(String, String, String)],
-    maxRecordsPerFile: Long, shred: Option[StructType], stats: EntryStats)
+    val rowCap: Long, shred: Option[StructType], stats: EntryStats)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -258,8 +258,6 @@ private[lake] final class LakeWriterFactory(val dir: String,
     case u: UnsafeRow => u
     case other => toUnsafe(other)
   }).copy()
-
-  private[lake] def rowCap: Long = maxRecordsPerFile
 
   private[lake] def entry(path: HPath, length: Long,
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): DataFileEntry =

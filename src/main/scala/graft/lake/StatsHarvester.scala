@@ -20,7 +20,7 @@ object StatsHarvester {
 
   /** Entries for EXACTLY these files, in the given order, opening each
     * footer once. Empty files yield no entry. */
-  def harvestFiles(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
+  private[lake] def harvestFiles(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
       schema: StructType, spec: Seq[PartitionField],
       fieldIds: Map[String, Int]): Seq[DataFileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -45,7 +45,7 @@ object StatsHarvester {
     * keyed by FIELD ID (`fieldIds(name).toString`) and partition values
     * by spec position — the rename-proof manifest encoding. Only
     * top-level primitive columns of `schema` get stats. */
-  def entry(path: String, sizeBytes: Long,
+  private[lake] def entry(path: String, sizeBytes: Long,
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata, schema: StructType,
       spec: Seq[PartitionField], fieldIds: Map[String, Int]): DataFileEntry = {
     val blocks = footer.getBlocks.asScala.toSeq
