@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: print the formatted physical plan (and optionally time) of
-  * one or more corpus queries. Usage:
+/** Dev tool: print the formatted physical plan of one or more corpus
+  * queries. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [queryName...]
-  * With SPARK_GRAFT_TIME=1 also executes each query and prints wall time.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -26,11 +25,6 @@ object Explain {
         val df = SparkEntry.queries(name)(spark, sfDir)
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        if (sys.env.contains("SPARK_GRAFT_TIME")) {
-          val t0 = System.nanoTime()
-          val n = df.count()
-          println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
       } finally graft.queries.QueryCaches.clear() // query-builder persists
     }
     spark.stop()

@@ -64,13 +64,16 @@ private[graft] object RowLevelOp {
       notMatched: Seq[MergeClauseSpec], notMatchedBySource: Seq[MergeClauseSpec],
       nmbsPrune: LakePredicate)
 
-  /** The row mark of a predicate: exactly the rows it holds TRUE for.
-    * A table column named `__match` (in any case, as Spark resolves)
-    * refuses: the mark would silently replace it, and a rewrite would
-    * store the flag in it. */
-  def where(pred: LakePredicate): DataFrame => DataFrame = { df =>
+  /** A table column named `__match` (in any case, as Spark resolves)
+    * refuses: the row mark would silently replace it, and a rewrite
+    * would store the flag in it. */
+  def requireNoMarkColumn(df: DataFrame): Unit =
     require(!df.columns.exists(_.equalsIgnoreCase("__match")),
       "a column named __match collides with the row mark of DELETE / UPDATE")
+
+  /** The row mark of a predicate: exactly the rows it holds TRUE for. */
+  def where(pred: LakePredicate): DataFrame => DataFrame = { df =>
+    requireNoMarkColumn(df)
     df.withColumn("__match", pred.toColumn)
   }
   def delete(pred: LakePredicate): Delete = Delete(pred, where(pred))
@@ -1613,8 +1616,8 @@ final class LakeTable private[lake] (
       branch: Option[String] = None): CommitReport =
     planRowLevel(spark, RowLevelOp.delete(pred), mor = true, conflictRetries, branch)
 
-  /** DELETE whose row MATCHING requires joins — the decorrelated-
-    * subquery path (`WHERE k IN (SELECT …)`, correlated EXISTS): `flag`
+  /** DELETE whose row MATCHING requires joins — the SQL subquery path
+    * (`WHERE k IN (SELECT …)`, correlated EXISTS): `flag`
     * receives the touched-files read and must return the SAME rows
     * (multiplicity preserved — join only against DISTINCT keys; input
     * columns preserved — the hidden id and position columns ride
@@ -1969,8 +1972,9 @@ final class LakeTable private[lake] (
         wantIds = !mor || set.isDefined)
       val flagged = flag(read)
       // lineage carries iff the flag kept the trailing _row_id column
-      // (the SQL layer's flag only JOINS columns on, so it always does;
-      // a projecting flag falls back to the honest broken flag)
+      // (the SQL layer's mark passes every read column through, so it
+      // always does; a flag that drops it falls back to the honest
+      // broken flag)
       val carry = canCarry && flagged.columns.contains(LakeTable.RowIdCol)
       val isMatch = coalesce(col("__match"), lit(false))
       // ONE select evaluates every assignment against the OLD row (a

@@ -2,7 +2,7 @@ package graft.lake.sql
 
 import org.apache.spark.sql.{Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, EqualTo, Exists, Expression, InSubquery, Not, OuterReference, PredicateHelper, ScalarSubquery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualTo, Expression, Literal, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -31,8 +31,9 @@ import graft.lake.{LakePredicate, LakeTable, RowLevelOp}
   * full DSv2 `BatchWrite` parquet writer — machinery this engine's
   * commit protocol does not otherwise need. The semantics a user
   * observes (atomic snapshot, pruned rewrite, conflict behavior) are
-  * identical; inexpressible predicates are REFUSED, exactly like the
-  * `SupportsDelete` path.
+  * identical. A DELETE / UPDATE condition with no strict manifest form
+  * (subqueries, function calls) is not refused: it runs on the flagged
+  * row mark, which Catalyst plans ([[LakeFlaggedRowLevelCommand]]).
   */
 class LakeSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -76,13 +77,12 @@ class LakeSqlExtensions extends (SparkSessionExtensions => Unit) {
   * between a MoR mutation and the next compact(), exactly Iceberg's
   * trade.
   *
-  * Row-level command targets are deliberately left alone: UPDATE/MERGE
-  * are re-planned onto the transactional API by [[LakeRowLevelCommands]],
-  * DELETE runs through SupportsDelete, INSERT through the V1 write
-  * bridge — all of which read committed data via the MoR-aware Scala
-  * path already. (A MERGE source is re-analyzed inside
-  * [[LakeMergeCommand.run]], so a tombstoned lake table used as a
-  * SOURCE still substitutes there.)
+  * Row-level command targets are deliberately left alone: DELETE /
+  * UPDATE / MERGE are re-planned onto the transactional API by
+  * [[LakeRowLevelCommands]], INSERT through the V1 write bridge — all of
+  * which read committed data via the MoR-aware Scala path already. (A
+  * MERGE source is re-analyzed inside [[LakeMergeCommand.run]], so a
+  * tombstoned lake table used as a SOURCE still substitutes there.)
   */
 object LakeMoRScanSubstitution extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -169,12 +169,12 @@ object LakeMoRScanSubstitution extends Rule[LogicalPlan] with PredicateHelper {
       }
       relationUnder(child) match {
         case Some((r, t)) if f.resolved && hasMetaCols(r) =>
-          Filter(cond2, metaPlan(r, t,
-            pruningPredOf(splitConjunctivePredicates(cond2) ++ ctxFor(ctx, r))))
+          Filter(cond2, underAliases(child, metaPlan(r, t,
+            pruningPredOf(splitConjunctivePredicates(cond2) ++ ctxFor(ctx, r)))))
         case Some((r, t)) if f.resolved =>
           morPlan(r, t,
             pruningPredOf(splitConjunctivePredicates(cond2) ++ ctxFor(ctx, r))) match {
-            case Some(sub) => Filter(cond2, sub)
+            case Some(sub) => Filter(cond2, underAliases(child, sub))
             case None => // no live tombstones: direct scan + pushdown
               if (cond2 eq cond) f else Filter(cond2, child)
           }
@@ -237,6 +237,14 @@ object LakeMoRScanSubstitution extends Rule[LogicalPlan] with PredicateHelper {
       }
   }
 
+  /** `sub` in place of the relation under `p`'s SubqueryAliases: a
+    * parent still unresolved when the Filter was (an aliased subquery's
+    * `SELECT s.id … WHERE s.v > 15`) resolves `s.id` through them. */
+  private def underAliases(p: LogicalPlan, sub: LogicalPlan): LogicalPlan = p match {
+    case sa: SubqueryAlias => sa.copy(child = underAliases(sa.child, sub))
+    case _ => sub
+  }
+
   private def relationUnder(p: LogicalPlan)
       : Option[(DataSourceV2Relation, LakeSqlTable)] = p match {
     case SubqueryAlias(_, child) => relationUnder(child)
@@ -252,7 +260,7 @@ object LakeMoRScanSubstitution extends Rule[LogicalPlan] with PredicateHelper {
     * re-applies everything). Constants fold first — this runs at
     * analysis, before the optimizer, so literals sit under
     * type-widening casts the filter translator refuses. */
-  private def pruningPredOf(conjuncts: Seq[Expression]): LakePredicate =
+  private[sql] def pruningPredOf(conjuncts: Seq[Expression]): LakePredicate =
     conjuncts
       .flatMap(e => splitConjunctivePredicates(
         LakeRowLevelCommands.foldConstants(e)))
@@ -326,8 +334,8 @@ object LakeMoRScanSubstitution extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** Analyzer rule: resolved UPDATE/MERGE over a lake table → runnable
-  * command on the transactional API. Non-lake tables pass through
+/** Analyzer rule: resolved DELETE / UPDATE / MERGE over a lake table →
+  * runnable command on the transactional API. Non-lake tables pass through
   * untouched (Spark then raises its usual unsupported-operation error). */
 object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -345,54 +353,21 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
       lakeTableOf(rel) match {
         case Some(t) =>
           require(!t.isHistorical, s"cannot UPDATE a historical snapshot of ${t.name()}")
-          val entries = canonicalAssignments(assignments, checkUpdateValue)
-          if (condition.exists(hasSubquery)) {
-            val m = planSubqueryMatch(condition.get)
-            LakeRowLevelSubqueryCommand(t.lakeTable, "UPDATE",
-              entries, m.residual, m.flags, m.prune)
-          } else tryPredicate(condition) match {
-            case Some(pred) =>
-              // exact manifest form: prune and row-match from ONE
-              // predicate (metadata-only no-op when nothing overlaps)
-              LakeUpdateCommand(t.lakeTable, pred, entries)
-            case None =>
-              // inexpressible but join-free (round 12 — e.g. `key % 2 =
-              // 0`, function calls): the flagged rewrite evaluates the
-              // WHOLE condition per row exactly; expressible conjuncts
-              // still prune files leniently
-              val m = planSubqueryMatch(condition.get)
-              LakeRowLevelSubqueryCommand(t.lakeTable, "UPDATE",
-                entries, m.residual, Nil, m.prune)
-          }
+          rowLevel(t, rel, "UPDATE", condition, assignments)
         case None => u
       }
 
-    // DELETE: subquery conditions decorrelate onto the flagged
-    // copy-on-write rewrite; join-free inexpressible conditions
-    // (round 12) evaluate exactly per row on the same rewrite; and
-    // strictly-expressible conditions plan onto [[LakeDeleteCommand]]
-    // DIRECTLY (round 16) — leaving them to Spark's SupportsDelete path
-    // let the optimizer's inferred constraints (e.g. an IS NOT NULL
-    // over a whole conjunct, found by the write fuzz) join the
-    // condition, fail the V1 filter translation, and refuse a DELETE
-    // the engine expresses exactly.
+    // DELETE plans onto [[LakeDeleteCommand]] DIRECTLY (round 16), not
+    // onto Spark's SupportsDelete path: there the optimizer's inferred
+    // constraints (e.g. an IS NOT NULL over a whole conjunct, found by
+    // the write fuzz) join the condition, fail the V1 filter
+    // translation, and refuse a DELETE the engine expresses exactly.
     case dl @ DeleteFromTable(rel, cond) if dl.resolved =>
       lakeTableOf(rel) match {
-        case Some(t) if hasSubquery(cond) =>
-          require(!t.isHistorical, s"cannot DELETE from a historical snapshot of ${t.name()}")
-          val m = planSubqueryMatch(cond)
-          LakeRowLevelSubqueryCommand(t.lakeTable, "DELETE", Nil,
-            m.residual, m.flags, m.prune)
         case Some(t) =>
           require(!t.isHistorical, s"cannot DELETE from a historical snapshot of ${t.name()}")
-          tryPredicate(Some(cond)) match {
-            case Some(pred) => LakeDeleteCommand(t.lakeTable, pred)
-            case None =>
-              val m = planSubqueryMatch(cond)
-              LakeRowLevelSubqueryCommand(t.lakeTable, "DELETE", Nil,
-                m.residual, Nil, m.prune)
-          }
-        case _ => dl
+          rowLevel(t, rel, "DELETE", Some(cond), Nil)
+        case None => dl
       }
 
     case m @ MergeIntoTable(target, source, cond, matched, notMatched,
@@ -514,12 +489,36 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
   private def unsupported(msg: String): Nothing =
     throw new UnsupportedOperationException(msg)
 
-  /** Catalyst condition → exact manifest predicate, or None. When every
-    * conjunct has a strict manifest form, ONE predicate both prunes the
-    * copy-on-write rewrite and matches rows (and proves no-op commits
-    * metadata-only); otherwise the caller falls back to the flagged
-    * rewrite, where the condition evaluates per row exactly and only
-    * the expressible conjuncts prune (leniently). */
+  /** DELETE / UPDATE → command. A condition whose every conjunct has a
+    * strict manifest form, with no subquery in a SET value, runs on that
+    * ONE predicate: it prunes the copy-on-write rewrite, matches rows and
+    * proves no-op commits metadata-only. Anything else — subqueries,
+    * correlated or not, and join-free inexpressible conditions such as
+    * `id % 2 = 0` — runs on the flagged row mark, which Catalyst plans
+    * (see [[LakeFlaggedRowLevelCommand]]); its subquery-free conjuncts
+    * still prune files leniently. The mark is checked here as Spark
+    * checks any projection, so a condition Spark cannot plan refuses at
+    * analysis, before a file is read. */
+  private def rowLevel(t: LakeSqlTable, target: LogicalPlan, verb: String,
+      condition: Option[Expression], assignments: Seq[Assignment]): LeafRunnableCommand = {
+    val entries = canonicalAssignments(assignments, identity)
+    val strict =
+      if ((condition.toSeq ++ assignments.map(_.value)).exists(hasSubquery)) None
+      else tryPredicate(condition)
+    strict match {
+      case Some(pred) if verb == "DELETE" => LakeDeleteCommand(t.lakeTable, pred)
+      case Some(pred) => LakeUpdateCommand(t.lakeTable, pred, entries)
+      case None =>
+        val cond = condition.getOrElse(Literal.TrueLiteral)
+        PlanBridge.checkRowMark(target.output, cond, assignments.map(_.value))
+        LakeFlaggedRowLevelCommand(t.lakeTable, verb, LakeRowMark(target.output, cond),
+          entries, LakeMoRScanSubstitution.pruningPredOf(
+            splitConjunctivePredicates(cond).filterNot(hasSubquery)))
+    }
+  }
+
+  /** Catalyst condition → exact manifest predicate, or None unless every
+    * conjunct has a strict manifest form. */
   private def tryPredicate(condition: Option[Expression]): Option[LakePredicate] =
     condition match {
       case None => Some(LakePredicate.AlwaysTrue)
@@ -540,26 +539,6 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
     case f if f.foldable && !f.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal] =>
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         f.eval(org.apache.spark.sql.catalyst.expressions.EmptyRow), f.dataType)
-  }
-
-  /** SET clause value validation for UPDATE: the value is kept as a
-    * Catalyst expression; the command un-resolves attribute references
-    * by name at run time because the rewrite re-reads the files under
-    * fresh attribute ids. An UNCORRELATED scalar subquery value is
-    * allowed since round 12 — the command evaluates it once (it is a
-    * constant for the whole statement) and splices the literal; a
-    * CORRELATED one captures outer references whose exprIds can never
-    * rebind against the fresh re-read — refused CLEANLY at analysis
-    * instead of dying unresolved at run(). */
-  private def checkUpdateValue(e: Expression): Expression = {
-    e.foreach {
-      case sq: ScalarSubquery if sq.outerAttrs.isEmpty => ()
-      case _: SubqueryExpression => unsupported(
-        "UPDATE SET <col> = (subquery) is only supported for an " +
-          "uncorrelated scalar subquery")
-      case _ => ()
-    }
-    e
   }
 
   /** One step of a SET key path below its root column. */
@@ -673,8 +652,8 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
     * path PREFIXES the other (including a whole-column + nested pair)
     * are ambiguous-by-order and refuse, exactly like SQL's duplicate-
     * assignment rule. `mapValue` is the per-caller value transform
-    * (subquery validation for UPDATE, namespace rebinding for MERGE)
-    * and is also applied to the synthesized root reference. */
+    * (namespace rebinding for MERGE) and is also applied to the
+    * synthesized root reference. */
   private[sql] def canonicalAssignments(assigns: Seq[Assignment],
       mapValue: Expression => Expression): Seq[(String, Expression)] = {
     def render(r: String, p: List[PathStep]): String = r + p.map {
@@ -703,186 +682,6 @@ object LakeRowLevelCommands extends Rule[LogicalPlan] with PredicateHelper {
 
   private def hasSubquery(e: Expression): Boolean =
     e.exists(_.isInstanceOf[SubqueryExpression])
-
-  /** The analyzed pieces of a subquery-bearing row-level condition:
-    * join-free conjuncts stay an exact row filter (`residual`) and
-    * contribute the LENIENT file-prune predicate; each subquery
-    * conjunct becomes a [[LakeSubqueryFlag]] the command turns into a
-    * distinct-key join at run time. */
-  private[sql] final case class SubqueryMatch(residual: Option[Expression],
-      flags: Seq[LakeSubqueryFlag], prune: LakePredicate)
-
-  private def planSubqueryMatch(cond0: Expression): SubqueryMatch = {
-    val conjs = splitConjunctivePredicates(foldConstants(cond0))
-    val (subs, plain) = conjs.partition(hasSubquery)
-    val flags = subs.map(toFlag)
-    val prune = plain
-      .flatMap(PlanBridge.translateFilter)
-      .map(LakeSqlTable.toLakePredicateLenient)
-      .reduceOption[LakePredicate](LakePredicate.And(_, _))
-      .getOrElse(LakePredicate.AlwaysTrue)
-    SubqueryMatch(plain.reduceOption(And), flags, prune)
-  }
-
-  /** One subquery conjunct → a flag spec. Supported shapes (anything
-    * else refuses loudly at analysis — never a partial apply):
-    *  - `x [NOT] IN (uncorrelated subquery)` — single- or multi-value;
-    *    NOT IN keeps its three-valued semantics via run-time stats of
-    *    the subquery result (any NULL key → never TRUE)
-    *  - `[NOT] EXISTS (subquery)` — uncorrelated, or correlated by a
-    *    conjunction of simple equalities `outer = innerExpr` sitting in
-    *    Filters reachable through the subquery's output-shaping
-    *    projections (the CDC `EXISTS (SELECT 1 FROM s WHERE s.k = t.k
-    *    AND …)` shape); deeper correlation refuses. */
-  private def toFlag(e: Expression): LakeSubqueryFlag = e match {
-    case InSubquery(values, lq) =>
-      if (lq.outerAttrs.nonEmpty) unsupported(
-        "correlated IN subquery conditions are not supported (use EXISTS)")
-      LakeSubqueryFlag("in", lq.plan, values)
-    case Not(InSubquery(values, lq)) =>
-      if (lq.outerAttrs.nonEmpty) unsupported(
-        "correlated NOT IN subquery conditions are not supported")
-      // single-column only: tuple NOT IN three-valued logic lets a
-      // PARTIALLY-null subquery row still exclude tuples whose non-null
-      // components differ — the run-time any-null stat that makes
-      // single-column NOT IN exact would silently KEEP rows SQL
-      // matches. Refuse rather than approximate.
-      if (values.size != 1) unsupported(
-        "multi-column NOT IN subquery conditions are not supported " +
-          "(three-valued tuple semantics); use NOT EXISTS")
-      LakeSubqueryFlag("notin", lq.plan, values)
-    case ex: Exists =>
-      val (pairs, plan) = decorrelateExists(ex.plan)
-      LakeSubqueryFlag("exists", plan, pairs.map(_._1),
-        innerKeys = pairs.map(_._2))
-    case Not(ex: Exists) =>
-      val (pairs, plan) = decorrelateExists(ex.plan)
-      LakeSubqueryFlag("notexists", plan, pairs.map(_._1),
-        innerKeys = pairs.map(_._2))
-    case e if e.exists(_.isInstanceOf[SubqueryExpression]) &&
-        e.collect { case s: SubqueryExpression => s }
-          .forall(_.isInstanceOf[ScalarSubquery]) =>
-      // scalar-subquery conjunct (round 13): `x > (SELECT agg FROM t2
-      // WHERE t2.k = t.k)` and friends. Each scalar becomes a
-      // placeholder attribute the command binds at run time — a
-      // statement-constant literal when uncorrelated, a per-key
-      // left-joined aggregate when correlated (see
-      // [[decorrelateScalarAgg]] for the empty-group treatment).
-      val subs = scala.collection.mutable.Buffer.empty[LakeScalarSub]
-      val cond = e.transform {
-        case sq: ScalarSubquery =>
-          val j = subs.length
-          if (sq.outerAttrs.isEmpty) subs += LakeScalarSub(sq.plan, Nil, None)
-          else subs += decorrelateScalarAgg(sq.plan)
-          UnresolvedAttribute(Seq(s"__lake_sq_val_$j"))
-      }
-      LakeSubqueryFlag("scalar", subs.head.plan, Nil,
-        scalarCond = Some(cond), scalars = subs.toSeq)
-    case other => unsupported(
-      s"subquery condition ${other.sql} is not a supported [NOT] IN / " +
-        "[NOT] EXISTS / scalar-comparison shape")
-  }
-
-  /** Decorrelate one correlated scalar-aggregate subquery: the inner
-    * plan must be a GLOBAL aggregate whose filters correlate through
-    * simple `outer = inner` equalities (the `WHERE price > (SELECT
-    * avg(price) FROM t2 WHERE t2.k = t.k)` CDC/repair shape —
-    * correlation under joins/limits/generators still refuses loudly).
-    * Returns the per-key twin — `Aggregate(keys, keys :+ value,
-    * strippedChild)`, output = key columns then the value column — plus
-    * the ON-EMPTY plan: the ORIGINAL global aggregate over an empty
-    * relation, whose single row is exactly what SQL's scalar subquery
-    * yields for a key with no inner matches (NULL for avg/sum/min/max,
-    * 0 for count — the classic decorrelation count-bug, fixed by
-    * construction rather than by special-casing Count). */
-  private def decorrelateScalarAgg(root: LogicalPlan): LakeScalarSub = {
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, c) => strip(c)
-      case other => other
-    }
-    strip(root) match {
-      case Aggregate(Seq(), aggExprs, child, _) if aggExprs.size == 1 =>
-        val (pairs, stripped) = pullCorrelatedEqualities(child,
-          stripProjects = false)
-        if (pairs.isEmpty) unsupported(
-          "correlated scalar subquery carries no outer = inner equality " +
-            "to decorrelate on")
-        val keyAliases = pairs.map(_._2).zipWithIndex.map { case (ik, j) =>
-          Alias(ik, s"__lake_sq_key_$j")()
-        }
-        val perKey = Aggregate(pairs.map(_._2), keyAliases :+ aggExprs.head,
-          stripped)
-        val onEmpty = Aggregate(Seq(), aggExprs,
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-            stripped.output))
-        LakeScalarSub(perKey, pairs.map(_._1), Some(onEmpty))
-      case other => unsupported(
-        s"correlated scalar subquery over a ${other.nodeName} is not a " +
-          "global aggregate (only `SELECT agg(...) FROM t WHERE " +
-          "t.k = outer.k [AND ...]` decorrelates)")
-    }
-  }
-
-  /** Pull the correlated equalities out of an EXISTS subquery plan:
-    * returns (outerExpr, innerExpr) pairs plus the plan with those
-    * conjuncts removed. Output-shaping Projects above the filters are
-    * discarded (EXISTS cares only about emptiness), so the command can
-    * project the inner key expressions at the peeled plan's top, where
-    * the filter scope's attributes are still visible. Correlation
-    * anywhere deeper (under aggregates, joins, limits, generators)
-    * refuses loudly. */
-  private def decorrelateExists(root: LogicalPlan)
-      : (Seq[(Expression, Expression)], LogicalPlan) =
-    pullCorrelatedEqualities(root, stripProjects = true)
-
-  /** Shared correlation walker for EXISTS (strips output-shaping
-    * Projects — emptiness is all that matters) and scalar aggregates
-    * (keeps them — the value matters). */
-  private def pullCorrelatedEqualities(root: LogicalPlan,
-      stripProjects: Boolean)
-      : (Seq[(Expression, Expression)], LogicalPlan) = {
-    def hasOuterDeep(p: LogicalPlan): Boolean =
-      p.exists(_.expressions.exists(_.exists(_.isInstanceOf[OuterReference])))
-    def go(p: LogicalPlan, topProjects: Boolean)
-        : (Seq[(Expression, Expression)], LogicalPlan) = p match {
-      case SubqueryAlias(id, c) =>
-        val (pairs, c2) = go(c, topProjects)
-        (pairs, SubqueryAlias(id, c2))
-      case Project(list, c) if topProjects &&
-          !list.exists(_.exists(_.isInstanceOf[OuterReference])) =>
-        go(c, topProjects = true)
-      case Filter(cond, c) =>
-        val (corr, rest) = splitConjunctivePredicates(cond)
-          .partition(_.exists(_.isInstanceOf[OuterReference]))
-        // one side must be PURELY outer (every attribute under an
-        // OuterReference — `t.id + 1` qualifies, `t.id + s.k` does
-        // not), the other purely inner; the outer side unwraps into a
-        // target-row expression for the semi-join key
-        def hasOuter(e: Expression) = e.exists(_.isInstanceOf[OuterReference])
-        def innerFree(e: Expression) = !e.transform {
-          case _: OuterReference =>
-            org.apache.spark.sql.catalyst.expressions.Literal(null)
-        }.exists(_.isInstanceOf[AttributeReference])
-        def unwrap(e: Expression) = e.transform { case OuterReference(a) => a }
-        val pairs = corr.map {
-          case EqualTo(l, r) if hasOuter(l) && !hasOuter(r) && innerFree(l) =>
-            (unwrap(l), r)
-          case EqualTo(l, r) if hasOuter(r) && !hasOuter(l) && innerFree(r) =>
-            (unwrap(r), l)
-          case other => unsupported(
-            s"subquery correlation ${other.sql} is not a simple " +
-              "outer = inner equality")
-        }
-        val (below, c2) = go(c, topProjects = false)
-        (pairs ++ below,
-          rest.reduceOption(And).map(Filter(_, c2)).getOrElse(c2))
-      case other =>
-        if (hasOuterDeep(other)) unsupported(
-          s"subquery correlation below a ${other.nodeName} operator is not supported")
-        (Nil, other)
-    }
-    go(root, topProjects = stripProjects)
-  }
 
   /** The canonical upsert: WHEN MATCHED THEN UPDATE SET * / WHEN NOT
     * MATCHED THEN INSERT * (raw or analyzer-expanded into full
@@ -984,14 +783,11 @@ final case class LakeUpdateCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     // re-resolve attribute references by NAME: the rewrite re-reads the
     // touched files as a fresh DataFrame whose attribute ids differ from
-    // the analyzed UPDATE plan's. Uncorrelated scalar subquery values
-    // evaluate ONCE here (they are statement constants) and splice in
-    // as literals.
+    // the analyzed UPDATE plan's
     val cols = assignments.map { case (name, value) =>
-      name -> ColumnBridge.column(
-        LakeSubqueryEval.resolveScalars(spark, value).transform {
-          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-        })
+      name -> ColumnBridge.column(value.transform {
+        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+      })
     }.toMap
     val t = table.refresh()
     Wap.refuseRowLevelStaging(spark, "UPDATE", t.name)
@@ -1043,199 +839,44 @@ final case class LakeMergeCommand(
   }
 }
 
-/** One subquery conjunct of a row-level condition, command-serializable.
-  * `kind` ∈ in / notin / exists / notexists. For IN flavors the
-  * subquery plan's output columns pair positionally with `outerKeys`
-  * (the IN value expressions over the target row); for EXISTS flavors
-  * `outerKeys`/`innerKeys` are the decorrelated equality sides (empty =
-  * uncorrelated, a statement-constant emptiness test). */
-final case class LakeSubqueryFlag(
-    kind: String,
-    plan: LogicalPlan,
-    outerKeys: Seq[Expression],
-    innerKeys: Seq[Expression] = Nil,
-    /** kind="scalar": the conjunct with each ScalarSubquery replaced by
-      * an `__lake_sq_val_<j>` placeholder attribute. */
-    scalarCond: Option[Expression] = None,
-    /** kind="scalar": one entry per placeholder, in index order. */
-    scalars: Seq[LakeScalarSub] = Nil)
+/** The analyzed row mark of a flagged DELETE / UPDATE: `condition` over
+  * the target relation's `output`. A command field rather than a plan
+  * expression, so the command's own analysis and optimization leave it
+  * as analyzed; it is planned once, over the touched files' read. */
+final case class LakeRowMark(output: Seq[Attribute], condition: Expression)
 
-/** One scalar subquery inside a "scalar" flag conjunct. Uncorrelated:
-  * `plan` is the original subquery, `outerKeys` empty, evaluated once
-  * to a statement-constant literal. Correlated: `plan` is the per-key
-  * aggregate twin (keys projected first, value last), `outerKeys` the
-  * target-row join expressions, `onEmpty` the original global
-  * aggregate over an empty relation — its single row is the value SQL
-  * gives a key with no inner matches (count → 0, avg/sum → NULL). */
-final case class LakeScalarSub(
-    plan: LogicalPlan,
-    outerKeys: Seq[Expression],
-    onEmpty: Option[LogicalPlan])
-
-/** Evaluates uncorrelated scalar subqueries in assignment values to
-  * literals — once per statement, exactly the SQL semantics of a
-  * statement-constant subexpression. */
-private[sql] object LakeSubqueryEval {
-  def resolveScalars(spark: SparkSession, e: Expression): Expression = e.transform {
-    case sq: ScalarSubquery =>
-      val rows = PlanBridge.ofRows(spark, sq.plan).limit(2).collect()
-      if (rows.length > 1) throw new IllegalStateException(
-        "scalar subquery in UPDATE SET returned more than one row")
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        if (rows.isEmpty) null else rows(0).get(0), sq.dataType)
-  }
-}
-
-/** `UPDATE … WHERE <subquery condition>` / `DELETE … WHERE <subquery
-  * condition>` as a driver command on the planner's FLAGGED row mark
-  * ([[LakeTable.updateWhereFlagged]]/[[LakeTable.deleteWhereFlagged]]):
-  * each subquery conjunct joins the touched-files read against the
-  * subquery's DISTINCT keys (left-outer + presence marker, so row
-  * multiplicity is preserved and NULL keys never match — exactly SQL's
-  * WHERE-context IN/EXISTS semantics), join-free conjuncts evaluate
-  * directly, and the whole condition lands as one boolean `__match`
-  * column. File pruning and serializable validation use the LENIENT
-  * predicate over the join-free conjuncts (superset of true matches —
-  * conservative in both roles). */
-final case class LakeRowLevelSubqueryCommand(
+/** `DELETE` / `UPDATE` whose condition is not a strict manifest
+  * predicate, or whose SET values hold a subquery, as a driver command
+  * on the row-level planner's FLAGGED row mark
+  * ([[LakeTable.deleteWhereFlagged]] / [[LakeTable.updateWhereFlagged]]).
+  * The mark is Catalyst's: [[PlanBridge.markRows]] binds the touched
+  * files' read to the target's attribute ids and adds `__match =
+  * coalesce(condition, false)`, so Spark's own subquery rewrites plan
+  * every IN / EXISTS / scalar subquery, correlated or not, with SQL's
+  * three-valued semantics. The SET values bind to the same ids. File
+  * pruning and serializable validation use `prune`, the lenient form of
+  * the subquery-free conjuncts (a superset of the true matches). */
+final case class LakeFlaggedRowLevelCommand(
     table: LakeTable,
     verb: String,
+    mark: LakeRowMark,
     assignments: Seq[(String, Expression)],
-    residual: Option[Expression],
-    flags: Seq[LakeSubqueryFlag],
     prune: LakePredicate) extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = flags.map(_.plan)
-
-  private def unresolve(e: Expression): Expression = e.transform {
-    case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-  }
-
-  private def flagFn(spark: SparkSession)(
-      df0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-    import org.apache.spark.sql.Column
-    // same rule as the conditional merge: the flag joins `__sqN_*` key
-    // and marker columns onto the read — a table column in that
-    // namespace would be silently shadowed by the join instead of
-    // matched (`__match` is the flag output itself). The MoR read's own
-    // `__graft_*` coordinates pass — they are engine-internal, not
-    // joinable names.
-    // case-INSENSITIVE: Spark resolution is, so `__Match` would be
-    // silently replaced by withColumn just like the exact name
-    require(!df0.columns.exists(c => c.toLowerCase.startsWith("__sq") ||
-        c.equalsIgnoreCase("__match")),
-      "column names in the __sq*/__match namespace collide with the " +
-        "subquery-flag join")
-    var df = df0
-    val conds = scala.collection.mutable.Buffer.empty[Column]
-    residual.foreach(e => conds += ColumnBridge.column(unresolve(e)))
-    flags.zipWithIndex.foreach { case (f, i) =>
-      val subRaw = PlanBridge.ofRows(spark, f.plan)
-      val keyNames = f.outerKeys.indices.map(j => s"__sq${i}_k$j")
-      val marker = s"__sq${i}_m"
-      def outerCols = f.outerKeys.map(ok => ColumnBridge.column(unresolve(ok)))
-      def joinMarked(keyed: org.apache.spark.sql.DataFrame): Column = {
-        val marked = keyed.distinct().withColumn(marker, lit(true))
-        val joinCond = outerCols.zip(keyNames.map(col))
-          .map { case (ok, kn) => ok === kn }.reduce(_ && _)
-        df = df.join(marked, joinCond, "left_outer").drop(keyNames: _*)
-        col(marker).isNotNull
-      }
-      f.kind match {
-        case "in" =>
-          require(f.outerKeys.size == subRaw.columns.length,
-            s"IN subquery arity mismatch: ${f.outerKeys.size} values vs " +
-              s"${subRaw.columns.length} output columns")
-          conds += joinMarked(subRaw.toDF(keyNames: _*))
-        case "notin" =>
-          require(f.outerKeys.size == subRaw.columns.length,
-            "NOT IN subquery arity mismatch")
-          val keyed = subRaw.toDF(keyNames: _*)
-          // three-valued NOT IN: any NULL in the subquery result means
-          // the predicate is never TRUE; a NULL outer value likewise
-          val statsRow = keyed.agg(count(lit(1)),
-            sum(when(keyNames.map(col(_).isNull).reduce(_ || _), 1L)
-              .otherwise(0L))).head()
-          val total = statsRow.getLong(0)
-          val nulls = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-          if (total == 0L) conds += lit(true)
-          else if (nulls > 0L) conds += lit(false)
-          else {
-            val hit = joinMarked(keyed)
-            conds += (outerCols.map(_.isNotNull).reduce(_ && _) && !hit)
-          }
-        case "exists" | "notexists" =>
-          if (f.outerKeys.isEmpty) {
-            // uncorrelated: a statement-constant emptiness test
-            val nonEmpty = !subRaw.isEmpty
-            conds += lit(if (f.kind == "exists") nonEmpty else !nonEmpty)
-          } else {
-            val projected = subRaw.select(f.innerKeys.zip(keyNames).map {
-              case (ik, kn) => ColumnBridge.column(ik).as(kn) }: _*)
-            val hit = joinMarked(projected)
-            conds += (if (f.kind == "exists") hit else !hit)
-          }
-        case "scalar" =>
-          // bind each placeholder: uncorrelated → one literal;
-          // correlated → left-join the per-key aggregate, then
-          // coalesce with the aggregate's on-empty value so a key
-          // with no inner matches reads what SQL's scalar subquery
-          // yields (count → 0, avg/sum → NULL — the count-bug fix)
-          var bound = unresolve(f.scalarCond.get)
-          f.scalars.zipWithIndex.foreach { case (sc, j) =>
-            val phName = s"__lake_sq_val_$j"
-            val valueExpr: Expression = if (sc.outerKeys.isEmpty) {
-              val rows = PlanBridge.ofRows(spark, sc.plan).limit(2).collect()
-              if (rows.length > 1) throw new IllegalStateException(
-                s"scalar subquery in $verb WHERE returned more than one row")
-              org.apache.spark.sql.catalyst.expressions.Literal.create(
-                if (rows.isEmpty) null else rows(0).get(0),
-                sc.plan.output.head.dataType)
-            } else {
-              val vCol = s"__sq${i}_v$j"
-              val kNames = sc.outerKeys.indices.map(q => s"__sq${i}_s${j}_k$q")
-              val perKey = PlanBridge.ofRows(spark, sc.plan)
-                .toDF(kNames :+ vCol: _*)
-              val joinCond = sc.outerKeys
-                .map(ok => ColumnBridge.column(unresolve(ok)))
-                .zip(kNames.map(col)).map { case (ok, kn) => ok === kn }
-                .reduce(_ && _)
-              // grouped-by-key ⇒ at most one row per key: multiplicity 1
-              df = df.join(perKey, joinCond, "left_outer").drop(kNames: _*)
-              val onEmptyVal = sc.onEmpty.map { oe =>
-                PlanBridge.ofRows(spark, oe).head().get(0)
-              }.orNull
-              org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
-                UnresolvedAttribute.quoted(vCol),
-                org.apache.spark.sql.catalyst.expressions.Literal.create(
-                  onEmptyVal, sc.plan.output.last.dataType)))
-            }
-            bound = bound.transform {
-              case u: UnresolvedAttribute if u.nameParts == Seq(phName) =>
-                valueExpr
-            }
-          }
-          conds += ColumnBridge.column(bound)
-      }
-    }
-    df.withColumn("__match", conds.reduceOption(_ && _).getOrElse(lit(true)))
-  }
 
   override def run(spark: SparkSession): Seq[Row] = {
     val t = table.refresh()
     Wap.refuseRowLevelStaging(spark, verb, t.name)
     val wap = Wap.writeBranch(spark, t)
+    val flag = { (read: org.apache.spark.sql.DataFrame) =>
+      RowLevelOp.requireNoMarkColumn(read)
+      PlanBridge.markRows(read, mark.output, mark.condition)
+    }
     // the table's write.delete/update.mode picks the strategy exactly
     // as for the predicate paths
     val op =
-      if (verb == "DELETE") RowLevelOp.Delete(prune, flagFn(spark))
-      else RowLevelOp.Update(prune, flagFn(spark), assignments.map { case (name, value) =>
-        name -> ColumnBridge.column(
-          LakeSubqueryEval.resolveScalars(spark, value).transform {
-            case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-          })
-      }.toMap)
+      if (verb == "DELETE") RowLevelOp.Delete(prune, flag)
+      else RowLevelOp.Update(prune, flag,
+        assignments.map { case (name, value) => name -> ColumnBridge.column(value) }.toMap)
     t.runRowLevel(spark, op, wap)
     Nil
   }

@@ -104,7 +104,6 @@ object ConnectedComponents {
       val nbrMin = edges
         .join(labels.select(col("node").as("b"), col("label").as("nl")), Seq("b"))
         .groupBy(col("a").as("node")).agg(min(col("nl")).as("nbr"))
-      val rt0 = System.nanoTime()
       val next = labels
         .join(nbrMin, Seq("node"), "left")
         .join(labels.select(col("node").as("label"), col("label").as("ll")),
@@ -115,8 +114,6 @@ object ConnectedComponents {
             coalesce(col("ll"), col("label"))).as("label"))
         .localCheckpoint()
       moved = next.filter(col("label") < col("old")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CCROUND $rounds%d moved=$moved%d sec=${(System.nanoTime() - rt0) / 1e9}%.2f")
       labels = next
       rounds += 1
     }

@@ -21,7 +21,9 @@ object ColumnBridge {
   * converter understands. */
 object PlanBridge {
   import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Coalesce, Literal,
+    NamedExpression}
+  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
   import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
   import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 
@@ -35,6 +37,35 @@ object PlanBridge {
 
   def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
+
+  /** The row mark of a flagged DELETE / UPDATE, planned by Catalyst:
+    * `read`'s columns re-aliased BY NAME to `target`, the analyzed target
+    * relation's attributes (columns the target lacks, such as the
+    * engine's `__graft_*` coordinates and `_row_id`, pass through), plus
+    * `__match = coalesce(condition, false)`. `condition`, and any value
+    * analyzed over `target`, so binds by attribute id as analyzed —
+    * correlated subqueries included — and Spark's own subquery rewrites
+    * plan the joins. */
+  def markRows(read: DataFrame, target: Seq[Attribute], condition: Expression): DataFrame = {
+    val child = analyzedPlan(read)
+    val byName = target.map(a => a.name -> a).toMap
+    val bound = Project(child.output.map { a =>
+      byName.get(a.name).fold[NamedExpression](a)(t =>
+        Alias(a, t.name)(exprId = t.exprId, qualifier = t.qualifier))
+    }, child)
+    ofRows(read.sparkSession, Project(bound.output :+ markOf(condition), bound))
+  }
+
+  /** Spark's analysis checks of the row mark and of `values`, over
+    * `target`'s attributes alone: a condition Spark cannot plan in a
+    * projection fails here, before any file is read. */
+  def checkRowMark(target: Seq[Attribute], condition: Expression,
+      values: Seq[Expression]): Unit =
+    SparkSession.active.asInstanceOf[CSparkSession].sessionState.analyzer.checkAnalysis(
+      Project(markOf(condition) +: values.map(Alias(_, "value")()), LocalRelation(target)))
+
+  private def markOf(condition: Expression): NamedExpression =
+    Alias(Coalesce(Seq(condition, Literal.FalseLiteral)), "__match")()
 }
 
 /** Filter-pushdown glue for V2 tables that pick their FILE LIST from

@@ -443,12 +443,18 @@ class LakeSqlCatalogSpec extends LakeSuite {
     spark.sql(
       "UPDATE sqlmw.ns.t SET v = (SELECT max(v) FROM sqlmw.ns.t) WHERE id = 1")
     assert(spark.sql("SELECT v FROM sqlmw.ns.t WHERE id = 1").head.getLong(0) === 99L)
-    // a CORRELATED subquery value still refuses at ANALYSIS with a
-    // clear message (previously died unresolved inside the rewrite)
-    val e = intercept[Exception](spark.sql(
+    // a CORRELATED subquery value runs on Catalyst's subquery rewrite:
+    // the table matches plain Spark over a copy of the pre-statement rows
+    val pre = spark.sql("SELECT * FROM sqlmw.ns.t")
+    spark.createDataFrame(pre.collect().toSeq.asJava0, pre.schema)
+      .createOrReplaceTempView("sqlmw_pre")
+    val expected = spark.sql("SELECT id, CASE WHEN id = 1 THEN (SELECT max(s.v) " +
+      "FROM sqlmw_pre AS s WHERE s.id = t.id) ELSE v END AS v " +
+      "FROM sqlmw_pre AS t ORDER BY id").collect().toSeq
+    spark.sql(
       "UPDATE sqlmw.ns.t AS t SET v = (SELECT max(s.v) FROM sqlmw.ns.t AS s " +
-        "WHERE s.id = t.id) WHERE id = 1"))
-    assert(e.getMessage.contains("uncorrelated scalar"), e.getMessage)
+        "WHERE s.id = t.id) WHERE id = 1")
+    assert(spark.sql("SELECT id, v FROM sqlmw.ns.t ORDER BY id").collect().toSeq === expected)
   }
 
   test("DELETE WHERE false never rewrites a data file") {

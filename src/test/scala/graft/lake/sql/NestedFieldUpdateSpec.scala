@@ -56,7 +56,7 @@ class NestedFieldUpdateSpec extends LakeSuite {
   test("flagged paths: nested SET under a subquery and an inexpressible condition") {
     val c = freshCat("u2")
     mkTable(c)
-    // subquery condition → LakeRowLevelSubqueryCommand
+    // subquery condition → LakeFlaggedRowLevelCommand
     spark.sql(s"UPDATE $c.ns.t SET s.d.u = 99 WHERE id IN " +
       s"(SELECT id FROM $c.ns.t WHERE s.y = 'a')")
     assert(fetch(c)(1L).getStruct(2).getInt(0) == 99)

@@ -1,6 +1,8 @@
 package graft.lake.sql
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import graft.lake.{LakeCatalog, LakeSuite}
 
 /** Subquery DELETE / UPDATE conditions checked against plain Spark. Each
@@ -13,7 +15,9 @@ import graft.lake.{LakeCatalog, LakeSuite}
   * rewrite for UPDATE. The fixture holds NULL ids, keys and values, so
   * three-valued logic is on every path. `{t}` in a condition names the
   * target table itself (the pre-statement copy in the oracle), `{dead}`
-  * a second lake table. */
+  * a second lake table. Spark plans every shape, so the lake does too:
+  * non-equality EXISTS, correlated IN, correlation under GROUP BY or in
+  * a join condition, and correlated aggregate SET values included. */
 class SubqueryDmlOracleSpec extends LakeSuite {
 
   private val C = "sqdo"
@@ -40,7 +44,16 @@ class SubqueryDmlOracleSpec extends LakeSuite {
     "uncorrelated scalar" -> "t.v < (SELECT avg(w) FROM sqdo_src)",
     "IN over another lake table" -> "t.id IN (SELECT id FROM {dead})",
     "self-referencing IN" -> "t.id IN (SELECT id FROM {t} WHERE v > 15)",
-    "id % 2 = 0" -> "t.id % 2 = 0")
+    "aliased self-referencing IN" -> "t.id IN (SELECT s2.id FROM {t} s2 WHERE s2.v > 15)",
+    "id % 2 = 0" -> "t.id % 2 = 0",
+    "non-equality EXISTS" ->
+      "EXISTS (SELECT 1 FROM sqdo_src s WHERE s.k2 > t.k AND s.w > 10)",
+    "correlated IN" -> "t.v IN (SELECT s.w FROM sqdo_src s WHERE s.k2 = t.k)",
+    "correlation under GROUP BY" ->
+      "EXISTS (SELECT s.k2 FROM sqdo_src s WHERE s.w = t.v GROUP BY s.k2)",
+    "correlation in a join condition" ->
+      "t.v > (SELECT avg(a.w) FROM sqdo_src a JOIN sqdo_src b ON a.k2 = t.k)",
+    "NOT (IN OR …)" -> "NOT (t.id IN (SELECT x FROM sqdo_keys) OR t.v > 15)")
 
   private lazy val warehouse: String = {
     val wh = freshWarehouse()
@@ -118,6 +131,63 @@ class SubqueryDmlOracleSpec extends LakeSuite {
         s"SELECT id, k, CASE WHEN coalesce(${bind(cond, "sqdo_pre")}, false) " +
           "THEN -1 ELSE v END AS v FROM sqdo_pre AS t",
         keepsLineage = true)
+    }
+  }
+
+  for ((mode, _) <- modes) test(s"$mode UPDATE: a correlated aggregate SET value") {
+    val value = "(SELECT sum(w) FROM sqdo_src s WHERE s.k2 = t.k)"
+    check(mode, ref => s"UPDATE $ref AS t SET v = $value WHERE t.id > 2",
+      s"SELECT id, k, CASE WHEN coalesce(t.id > 2, false) THEN $value " +
+        "ELSE v END AS v FROM sqdo_pre AS t",
+      keepsLineage = true)
+  }
+
+  /** Spark jobs started while `body` runs; a fence job after it proves
+    * the listener has seen every earlier job start. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(tag), s"fence job $tag never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("fence-before")
+      seen.clear()
+      body
+      fence("fence-after")
+      seen.asScala.count(_ != "fence-after")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a condition Spark's analysis rejects refuses before any read, with or without rows") {
+    val wh = warehouse
+    spark.sql(s"CREATE TABLE $C.ns.refused (id BIGINT, k BIGINT, v BIGINT)")
+    for (rowsIn <- Seq(false, true)) {
+      if (rowsIn) spark.sql(s"INSERT INTO $C.ns.refused VALUES (1, 1, 10), (2, 2, 20)")
+      val before = LakeCatalog.open(wh).loadTable("ns", "refused").currentSnapshotId
+      for (dml <- Seq(s"DELETE FROM $C.ns.refused AS t",
+          s"UPDATE $C.ns.refused AS t SET v = -1")) {
+        var e: Throwable = null
+        val jobs = jobsStartedBy {
+          e = intercept[AnalysisException](spark.sql(
+            s"$dml WHERE t.v > (SELECT sum(w + t.v) FROM sqdo_src)"))
+        }
+        assert(e.getMessage.contains("AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES"),
+          e.getMessage)
+        assert(jobs == 0, s"$dml ran $jobs job(s) before refusing")
+        assert(LakeCatalog.open(wh).loadTable("ns", "refused").currentSnapshotId == before)
+      }
     }
   }
 

@@ -109,16 +109,30 @@ class SubqueryRowLevelSpec extends LakeSuite {
       Seq(Row(1L, -1), Row(3L, -1), Row(5L, 5)))
   }
 
-  test("genuinely uncorrelatable shapes refuse loudly") {
+  /** Runs `dml` on `ref` and asserts the table then holds `oracle`:
+    * plain Spark's answer over `sqrl_pre`, a temp-view copy of the
+    * pre-statement rows. */
+  private def matchesSpark(ref: String, dml: String, oracle: String): Unit = {
+    val pre = spark.sql(s"SELECT * FROM $ref")
+    spark.createDataFrame(pre.collect().toSeq.asJava0, pre.schema)
+      .createOrReplaceTempView("sqrl_pre")
+    val expected = spark.sql(oracle).collect().map(_.toString).sorted.toSeq
+    spark.sql(dml)
+    assert(spark.sql(s"SELECT * FROM $ref").collect().map(_.toString).sorted.toSeq ==
+      expected, dml)
+  }
+
+  test("once-refused correlation shapes match plain Spark") {
     val (c, _) = freshCat("ref")
     spark.sql(s"CREATE TABLE $c.ns.t (id BIGINT, v INT)")
     spark.sql(s"INSERT INTO $c.ns.t VALUES (1,1)")
     spark.sql("SELECT * FROM VALUES (1L, 5) AS s(k, w)")
       .createOrReplaceTempView("ref_src")
     // non-equality correlation
-    val e1 = intercept[Exception](spark.sql(
-      s"DELETE FROM $c.ns.t WHERE EXISTS (SELECT 1 FROM ref_src s WHERE s.k < id)"))
-    assert(e1.getMessage.contains("not a simple"))
+    matchesSpark(s"$c.ns.t",
+      s"DELETE FROM $c.ns.t WHERE EXISTS (SELECT 1 FROM ref_src s WHERE s.k < id)",
+      "SELECT * FROM sqrl_pre WHERE NOT coalesce(" +
+        "EXISTS (SELECT 1 FROM ref_src s WHERE s.k < id), false)")
     // HAVING-level correlation sits ABOVE the aggregate — removing the
     // equality and semi-joining on the projected aggregate attribute is
     // sound, so this decorrelates (t row (1,1): max(w)=5 ≠ 1 → no match)
@@ -126,16 +140,16 @@ class SubqueryRowLevelSpec extends LakeSuite {
       s"""DELETE FROM $c.ns.t WHERE EXISTS (
          |  SELECT max(w) FROM ref_src s GROUP BY s.k HAVING max(w) = id)""".stripMargin)
     assert(rows(s"SELECT count(*) FROM $c.ns.t") === Seq(Row(1L)))
-    // correlation UNDER the aggregate genuinely cannot pull up — refuses
-    val e2 = intercept[Exception](spark.sql(
+    // correlation UNDER the aggregate
+    matchesSpark(s"$c.ns.t",
       s"""DELETE FROM $c.ns.t WHERE EXISTS (
-         |  SELECT s.k FROM ref_src s WHERE s.w = id GROUP BY s.k)""".stripMargin))
-    assert(e2.getMessage.toLowerCase.contains("not supported") ||
-      e2.getMessage.contains("correlation"))
-    // correlated SET value still refuses
-    val e3 = intercept[Exception](spark.sql(
-      s"UPDATE $c.ns.t SET v = (SELECT w FROM ref_src s WHERE s.k = id)"))
-    assert(e3.getMessage.contains("uncorrelated scalar"))
+         |  SELECT s.k FROM ref_src s WHERE s.w = id GROUP BY s.k)""".stripMargin,
+      "SELECT * FROM sqrl_pre WHERE NOT coalesce(EXISTS (" +
+        "SELECT s.k FROM ref_src s WHERE s.w = id GROUP BY s.k), false)")
+    // a correlated SET value
+    matchesSpark(s"$c.ns.t",
+      s"UPDATE $c.ns.t SET v = (SELECT w FROM ref_src s WHERE s.k = id)",
+      "SELECT id, (SELECT w FROM ref_src s WHERE s.k = id) AS v FROM sqrl_pre")
   }
 
   // ---- correlated scalar aggregates in WHERE (round 13) ----
@@ -191,14 +205,16 @@ class SubqueryRowLevelSpec extends LakeSuite {
       Seq(Row(1L, 10L), Row(2L, 99L), Row(3L, 5L), Row(4L, 5L), Row(5L, 7L)))
   }
 
-  test("correlation in a JOIN condition refuses; above the join it decorrelates") {
+  test("correlation in or above a JOIN condition matches Spark") {
     val c = scalarFixture("ref2")
-    // outer reference INSIDE the join condition — genuinely unpullable
-    val e = intercept[Exception](spark.sql(
+    // outer reference INSIDE the join condition
+    matchesSpark(s"$c.ns.t",
       s"""DELETE FROM $c.ns.t WHERE v > (
-         |  SELECT avg(a.w) FROM sc_src_ref2 a JOIN sc_src_ref2 b ON a.k2 = k)""".stripMargin))
-    assert(e.getMessage.contains("not supported") ||
-      e.getMessage.contains("correlation"), e.getMessage)
+         |  SELECT avg(a.w) FROM sc_src_ref2 a JOIN sc_src_ref2 b ON a.k2 = k)""".stripMargin,
+      "SELECT * FROM sqrl_pre WHERE NOT coalesce(v > (" +
+        "SELECT avg(a.w) FROM sc_src_ref2 a JOIN sc_src_ref2 b ON a.k2 = k), false)")
+    spark.sql(s"DELETE FROM $c.ns.t")
+    spark.sql(s"INSERT INTO $c.ns.t VALUES (1,1,10),(2,1,20),(3,2,5),(4,2,5),(5,3,7)")
     // the same equality in a FILTER above the join pulls up soundly:
     // per k=1, the self-join doubles each side (2×2 rows, avg 15) —
     // deletes v>15 ⇒ only id=2
@@ -210,20 +226,23 @@ class SubqueryRowLevelSpec extends LakeSuite {
       Seq(Row(1L), Row(3L), Row(4L), Row(5L)))
   }
 
-  test("columns in the synthetic __sq*/__match join namespace refuse") {
+  test("a __match column refuses; a __sq-named column is data") {
     val (c, _) = freshCat("clash")
     // case-VARIANT names: Spark resolution is case-insensitive, so
     // `__Match` would be silently replaced by the flag column if the
     // guard compared exactly
-    for ((col, tag) <- Seq("`__Match` INT" -> "m", "`__SQ0_k` INT" -> "s")) {
-      spark.sql(s"CREATE TABLE $c.ns.t$tag (id BIGINT, $col)")
-      spark.sql(s"INSERT INTO $c.ns.t$tag VALUES (1, 1)")
-      spark.sql("SELECT * FROM VALUES (1L) AS s(k)")
-        .createOrReplaceTempView(s"clash_keys_$tag")
-      val e = intercept[Exception](spark.sql(
-        s"DELETE FROM $c.ns.t$tag WHERE id IN (SELECT k FROM clash_keys_$tag)"))
-      assert(e.getMessage.contains("__sq*/__match namespace"),
-        s"$col must refuse, got: ${e.getMessage}")
-    }
+    spark.sql(s"CREATE TABLE $c.ns.tm (id BIGINT, `__Match` INT)")
+    spark.sql(s"INSERT INTO $c.ns.tm VALUES (1, 1)")
+    spark.sql("SELECT * FROM VALUES (1L) AS s(k)").createOrReplaceTempView("clash_keys")
+    val e = intercept[Exception](spark.sql(
+      s"DELETE FROM $c.ns.tm WHERE id IN (SELECT k FROM clash_keys)"))
+    assert(e.getMessage.contains("__match collides with the row mark"),
+      s"__Match must refuse, got: ${e.getMessage}")
+    // the mark joins no columns on, so no other name is reserved
+    spark.sql(s"CREATE TABLE $c.ns.ts (id BIGINT, `__SQ0_k` INT)")
+    spark.sql(s"INSERT INTO $c.ns.ts VALUES (1, 1), (2, 2)")
+    matchesSpark(s"$c.ns.ts",
+      s"DELETE FROM $c.ns.ts WHERE id IN (SELECT k FROM clash_keys)",
+      "SELECT * FROM sqrl_pre WHERE NOT coalesce(id IN (SELECT k FROM clash_keys), false)")
   }
 }
