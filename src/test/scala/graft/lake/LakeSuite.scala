@@ -1,6 +1,8 @@
 package graft.lake
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,6 +37,35 @@ trait LakeSuite extends AnyFunSuite {
       s.foreach(l.add)
       l
     }
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * posting order, so once a fence job's start has been seen, every
+    * job started before it has been seen too. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(tag), s"fence job $tag never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("fence-before")
+      seen.clear()
+      body
+      fence("fence-after")
+      seen.asScala.count(_ != "fence-after")
+    } finally sc.removeSparkListener(listener)
   }
 
   def freshWarehouse(): String =
