@@ -24,17 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.parquet is TIMESTAMP(NANOS); declared at session build so
-      // the toggle is harness-visible, not a hidden per-read mutation
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The three allowlisted bounded unpartitioned windows (each over a
     // provably tiny frame — see WindowGuardSpec) each emit a WindowExec
@@ -72,15 +63,9 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted // stable pass order
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    def runOnce(name: String): Unit = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-        finally graft.queries.QueryCaches.clear()
-      // failures report -1s instead of masquerading as a fast query
-      times(name) = times(name) :+ (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
+    // failures report -1s instead of masquerading as a fast query
+    def runOnce(name: String): Unit =
+      times(name) = times(name) :+ timed(spark, sfDir, name).getOrElse(-1.0)
     for (_ <- 0 until reps; name <- names) runOnce(name)
     // sub-200 ms queries sit at the scheduler/JIT noise floor where 3
     // samples give useless error bars — top them up to 5 interleaved
@@ -152,14 +137,7 @@ object Bench {
     // past 1.5x flags the whole block invalid.
     val calibFloor = graft.tools.BenchScaled.calibrate(spark)
     val floors = floorNames.map { name =>
-      val fn = SparkEntry.queries(name)
-      val ts = (0 until 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-          finally graft.queries.QueryCaches.clear()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
+      val ts = (0 until 2).map(_ => timed(spark, sfDir, name).getOrElse(-1.0))
       name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }.toMap
     val calibAfter = graft.tools.BenchScaled.calibrate(spark)
@@ -232,6 +210,19 @@ object Bench {
     java.nio.file.Files.write(out,
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+  }
+
+  /** The action Bench times: build corpus query `name` over `sfDir`,
+    * count its rows and drop the query caches. Right: the seconds that
+    * took; Left: what the query threw. */
+  private[graft] def timed(spark: SparkSession, sfDir: String, name: String)
+      : Either[Throwable, Double] = {
+    val fn = SparkEntry.queries(name)
+    val t0 = System.nanoTime()
+    val failure = try { fn(spark, sfDir).count(); None }
+      catch { case e: Throwable => Some(e) }
+      finally graft.queries.QueryCaches.clear()
+    failure.toLeft((System.nanoTime() - t0) / 1e9)
   }
 
   /** The sum of the per-query figures (medians or minimums) of the

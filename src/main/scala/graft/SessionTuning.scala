@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive session defaults shared by every harness entry point
-  * (Bench/Verify/Explain and the dev tools), applied in ONE place so the
-  * bench, the correctness gate and the dev loop measure the same engine.
+  * (Bench, Verify, the dev tools under `graft.tools` and the test
+  * suites), applied in ONE place so the bench, the correctness gate, the
+  * dev loop and the tests measure the same engine. [[local]] is the one
+  * local harness session built on them.
   *
   * Every setting here must hold at any scale — a value that only makes
-  * sense on local[32] does not belong. Each is overridable through the
-  * environment (`SPARK_GRAFT_CONF_<suffix>`), keeping the driver's bench
-  * comparable while a cluster deployment can re-tune without a rebuild
-  * — all but the codegen cache size, which follows from the engine's
-  * own session reuse (see its comment).
+  * sense on local[32] does not belong. None reads the environment: a
+  * cluster deployment re-tunes through its own session confs.
   *
   * `canChangeCachedPlanOutputPartitioning=true` (round-18, guide §2.4):
   * Spark disables AQE re-planning inside `persist()` materialization by
@@ -21,20 +20,19 @@ import org.apache.spark.sql.SparkSession
   * or explicitly re-clustered after caching, so partitioning stability
   * buys nothing — while the default forces every cached-plan shuffle to
   * the static `spark.sql.shuffle.partitions` width. On group-sized
-  * frames that is dozens of empty tasks per action (ProfileTarget on
-  * lake_incr_mv: 37 stages, 51 core-s of stage run vs 19.5 core-s of
-  * CPU, several 32-task stages moving zero bytes). With AQE allowed in,
-  * those shuffles coalesce to the data's real width at ANY scale — a
-  * 100 TB delta keeps its thousands of partitions; a 6-group view stops
-  * paying for 32. Hash partitioning semantics survive coalescing
+  * frames that is dozens of empty tasks per action (the per-stage
+  * probe on lake_incr_mv: 37 stages, 51 core-s of stage run vs 19.5
+  * core-s of CPU, several 32-task stages moving zero bytes). With AQE
+  * allowed in, those shuffles coalesce to the data's real width at ANY
+  * scale — a 100 TB delta keeps its thousands of partitions; a 6-group
+  * view stops paying for 32. Hash partitioning semantics survive coalescing
   * (`CoalescedHashPartitioning` still satisfies the downstream
   * ClusteredDistribution), so exchange-reuse patterns like the pagerank
   * dst-clustered edge cache keep their zero-exchange iterations.
   */
 object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CONF_AQE_CACHED", "true"))
+    b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // FileOutputCommitter v2 (round-19, guide §6) for the NON-lake
       // file writes — corpus data generation, Verify's dumps, bench
       // scratch copies. Lake writes use no output committer at all
@@ -47,8 +45,7 @@ object SessionTuning {
       // mid-commit can leave part of its output, so these writes must
       // not be read as all-or-nothing. Kept because switching the corpus
       // set-up back to v1 puts its set-up time at risk unmeasured.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_CONF_FOC_ALGO", "2"))
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       // Spark's generated-class cache (static conf, default 100),
       // keyed by (class loader, source). The lake's derived sessions
       // (SessionBridge) keep their class loaders, so a repeated lake
@@ -67,7 +64,24 @@ object SessionTuning {
       // derived sessions on a 4-vCPU host, metaspace stayed level (173
       // vs 170 MB at the end of a lake run) and the heap peak fell
       // (1,462 vs 858 MB, traced run), since far fewer classes are
-      // generated. No env override: the value follows from how the
-      // engine reuses sessions.
+      // generated. The value follows from how the engine reuses
+      // sessions.
       .config("spark.sql.codegen.cache.maxEntries", "192")
+
+  /** Cores of a harness session: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** The local harness session: [[apply]]'s confs on `local[cpus]` with
+    * one shuffle partition per core, UTC, the lake SQL extensions and no
+    * UI. Callers add only their own settings before `getOrCreate()`. */
+  def local(cpus: Int = SessionTuning.cpus): SparkSession.Builder =
+    apply(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet is TIMESTAMP(NANOS); declared at session build so
+      // the toggle is harness-visible, not a hidden per-read mutation
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
+      .config("spark.ui.enabled", "false")
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); declared at session build so
-      // the toggle is harness-visible, not a hidden per-read mutation
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Scale-cliff probe (round-11 stretch): run the scale-sensitive
-  * corpus queries against a [[MakeScaledData]] dir (≈ sf1) at the
-  * bench's local[32] shape and print one BENCH-style JSON line with
-  * per-query minimums — the artifact that shows whether any operator's
-  * cost curve bends worse than the ~10× the data grew (shuffle spill,
-  * broadcast-threshold flips, quadratic candidate growth).
+  * corpus queries against a [[MakeScaledData]] dir (≈ sf1) on the
+  * harness session (`SessionTuning.local`, `SPARK_GRAFT_CPUS` cores)
+  * and print one BENCH-style JSON line with per-query minimums — the
+  * artifact that shows whether any operator's cost curve bends worse
+  * than the ~10× the data grew (shuffle spill, broadcast-threshold
+  * flips, quadratic candidate growth).
   *
   * Round 12 adds the most expensive `lake_*` SCENARIO queries: their
   * builders read the probe dir's (10×) orders table, so the whole
@@ -204,15 +205,7 @@ object BenchScaled {
     val targets =
       if (args.length > 2) { val w = args(2).split(',').map(_.trim).toSet
         Targets.filter(w) } else Targets
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the dedup_simhash pair-budget gate FIRES at this replica's dup
     // rate × 10 (the protective refusal working as designed — the

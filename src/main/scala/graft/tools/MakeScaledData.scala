@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress data builder (round-11 stretch): replicate the
@@ -29,14 +29,7 @@ object MakeScaledData {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

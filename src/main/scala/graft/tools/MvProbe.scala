@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Phase-level timing probe for the incremental-MV scenario — finds
@@ -8,14 +7,7 @@ import org.apache.spark.sql.functions._
 object MvProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.length > 0) args(0) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -13,6 +13,14 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
+/** Listener-bus drain for the dev probes: `SparkContext.listenerBus` is
+  * private[spark]. [[drain]] returns once every event posted so far has
+  * reached every listener, so a probe reads complete job and stage
+  * records without polling. */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
+
 /** Logical-plan glue for the row-level SQL command rule: Dataset.ofRows
   * and DataSourceStrategy.translateFilter are private[sql], and the
   * UPDATE/MERGE analyzer rule needs both — a resolved source subplan

@@ -211,13 +211,13 @@ class CommitFamiliesSpec extends LakeSuite {
     base.appendData(ordersDF.limit(600), numFiles = 2)
     val first = land(view, reports)(refresh())
     pin(first, "replace", None, Set("main"),
-      Seq(3L, 0L, 5L, 0L, 0L, 0L),
-      nextRowId = 5L, broken = false, totals = (3L, 0L, 5L, 0L, 0L))
+      Seq(1L, 0L, 5L, 0L, 0L, 0L),
+      nextRowId = 5L, broken = false, totals = (1L, 0L, 5L, 0L, 0L))
     base.refresh().appendData(ordersDF.limit(300), numFiles = 1)
     val second = land(view, reports)(refresh())
     pin(second, "replace", Some(1L), Set("main"),
-      Seq(3L, 3L, 5L, 0L, 0L, 0L),
-      nextRowId = 10L, broken = true, totals = (3L, 0L, 5L, 0L, 0L))
+      Seq(1L, 1L, 5L, 0L, 0L, 0L),
+      nextRowId = 10L, broken = true, totals = (1L, 0L, 5L, 0L, 0L))
   }
 }
 

@@ -76,11 +76,6 @@ trait LakeSuite extends AnyFunSuite {
 }
 
 object LakeSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The harness session every lake suite shares, on four cores. */
+  lazy val spark: SparkSession = graft.SessionTuning.local(4).getOrCreate()
 }

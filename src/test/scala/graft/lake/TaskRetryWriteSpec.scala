@@ -135,14 +135,10 @@ object TaskRetryWriteMain {
 
   def main(args: Array[String]): Unit = {
     val wh = Files.createTempDirectory("graft_retry_wh_").toString
-    val spark = graft.SessionTuning(SparkSession.builder())
+    val spark = graft.SessionTuning.local(2)
       .master("local[2,2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.lake.sql.LakeSqlExtensions")
       .config("spark.sql.catalog.retry", classOf[sql.LakeSqlCatalog].getName)
       .config("spark.sql.catalog.retry.warehouse", wh)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.experimental.extraOptimizations = Seq(InjectAtWrite)
     spark.sparkContext.setLogLevel("ERROR")
